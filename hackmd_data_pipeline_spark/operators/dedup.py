@@ -62,20 +62,6 @@ def shingles(text_col, n: int = 3):
     return _shingles_from(_tokens(text_col), n)
 
 
-def hashed_shingles(text_col, n: int = 3):
-    """Distinct shingles hashed to 64-bit once (array<long>).
-
-    Hashing the variable-length strings to fixed 8-byte values up
-    front makes both the k derived minhashes and the exact-Jaccard
-    verify (array_intersect on longs) cheap; 64-bit collisions are
-    negligible at corpus scale.
-    """
-    return F.transform(
-        F.filter(shingles(text_col, n), lambda s: F.length(s) > 0),
-        lambda s: F.xxhash64(s),
-    )
-
-
 def hashed_shingle_table(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text",
                          shingle_n: int = 3) -> DataFrame:

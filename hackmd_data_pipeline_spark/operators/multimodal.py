@@ -145,20 +145,3 @@ def media_phash_pairs(df: DataFrame, id_col: str = "media_id",
 
     sigs = media_phash_signatures(df, id_col, payload_col)
     return hamming_block_pairs(sigs, id_col, max_hamming=max_hamming)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  ts_col: str = "duration_ms") -> DataFrame:
-    """Frame-sampling plan for video rows: one output row per sampled
-    timestamp (metadata only — the per-frame decode is the stubbed
-    step). Demonstrates the explode-on-sequence pattern that keeps
-    frame fan-out JVM-side."""
-    dur = F.col("meta")[ts_col]
-    return (
-        df.filter(F.col("modality") == "video")
-        .withColumn(
-            "frame_ts_ms",
-            F.explode(F.sequence(F.lit(0), F.coalesce(dur, F.lit(0)), F.lit(every_ms))),
-        )
-        .select("media_id", "frame_ts_ms")
-    )

@@ -9,6 +9,10 @@
   * ivf_topk — the scale path: KMeans coarse quantizer; probe only
     the nprobe nearest centroids per query, so the scored pair space
     is corpus/nlist * nprobe per query instead of the full corpus.
+    The in-session operators (ivf_topk, ivfpq_topk, semdedup) are
+    compositions of the persisted-index kernels: one cell placement
+    (``_place``), one query probe (``_resolve_probe_from_queries``),
+    one ranking tail per index kind.
 
 At 100 TB the corpus side never shuffles for brute_force_topk (query
 set broadcasts); for IVF the corpus is hash-partitioned by centroid id
@@ -259,7 +263,7 @@ def _train_quantizer(corpus: DataFrame, nlist: int, vec_col: str,
             d2 = np.minimum(d2, 2.0 - 2.0 * (x @ x[nxt]))
         cents = x[chosen].copy()
         for _ in range(iters):
-            assign = (x @ cents.T).argmax(axis=1)
+            assign = _nearest_cell(x, cents)
             for c in range(len(cents)):
                 members = x[assign == c]
                 if len(members):
@@ -273,62 +277,57 @@ def _train_quantizer(corpus: DataFrame, nlist: int, vec_col: str,
     return max(trained, key=lambda t: t[1])[0]
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-             nlist: int = 16, nprobe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id", seed: int = 42,
-             sample_cap: int = 8192) -> DataFrame:
-    """Approximate cosine top-k via IVF (inverted-file) partitioning.
+def _nearest_cell(unit, cents):
+    """THE cell-assignment argmax: each unit-norm row's nearest
+    centroid by inner product. Placement (``_place``) and both
+    quantizer trainers call this one function."""
+    return (unit @ cents.T).argmax(axis=1)
 
-    Quantizer trained on a bounded sample (``_train_quantizer``); cell
-    assignment is ONE vectorized mapInPandas pass (a batch×nlist
-    matmul per Arrow batch — no iterative jobs, no per-row Python);
-    queries score only against their nprobe nearest cells. Recall
-    < 1.0 by construction — rows-only check; recall vs the exact
-    baseline asserted in tests/test_similarity.py. ``sample_cap``
-    scales the training sample with nlist when callers grow cells ∝ N
-    (the SCALE.md cell-size-constant protocol) — still a bounded
-    collect, ~constant rows per cell.
-    """
+
+def _place(m, cents):
+    """Place a raw (n, dim) float64 batch: ``(norms, unit rows, cell)``.
+    The one placement kernel behind ``_cell_assigner`` (IVF build,
+    upsert, ``ivf_topk``, ``semdedup``) and ``_pq_encoded`` (IVF-PQ),
+    so a vector lands in the same cell on every path. Norms clamp at
+    1e-12: a zero vector is placed by an all-zero score row (cell 0)."""
     import numpy as np
 
-    cents = _train_quantizer(corpus, nlist, vec_col, seed=seed,
-                             sample_cap=sample_cap)
+    norms = np.linalg.norm(m, axis=1)
+    unit = m / np.maximum(norms[:, None], 1e-12)
+    return norms, unit, _nearest_cell(unit, cents)
+
+
+def _cell_assigner(df: DataFrame, cents, vec_col: str) -> DataFrame:
+    """``df`` plus each vector's nearest-centroid ``cell`` and its norm
+    ``_cnorm``: ONE vectorized mapInPandas pass (a batch x nlist matmul
+    per Arrow batch, no per-row Python). Shared by the index build, the
+    incremental upsert and the in-session operators."""
+    import numpy as np
 
     def assign_cells(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             m = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(m, axis=1)
-            unit = m / np.maximum(norms[:, None], 1e-12)
-            yield pdf.assign(cell=(unit @ cents.T).argmax(axis=1).astype("int32"),
-                             _cnorm=norms)
+            norms, _, cell = _place(m, cents)
+            yield pdf.assign(cell=cell.astype("int32"), _cnorm=norms)
 
-    in_schema = corpus.select(id_col, vec_col).schema
-    out_schema = (in_schema.add("cell", "integer").add("_cnorm", "double"))
-    corpus_cells = corpus.select(id_col, vec_col).mapInPandas(
-        assign_cells, schema=out_schema)
+    schema = T.StructType([*df.schema.fields,
+                           T.StructField("cell", T.IntegerType()),
+                           T.StructField("_cnorm", T.DoubleType())])
+    return df.mapInPandas(assign_cells, schema=schema)
 
-    spark = corpus.sparkSession
-    cent_df = _centroid_df(spark, cents)
 
-    # nprobe nearest cells per query (query set and centroids are tiny)
-    qc = (
-        queries.crossJoin(F.broadcast(cent_df))
-        .select(query_id_col, F.col(vec_col).alias("_qvec"), "cell",
-                cosine(F.col(vec_col), F.col("centroid")).alias("_ccos"))
-    )
-    wq = W.partitionBy(query_id_col).orderBy(F.col("_ccos").desc(), F.col("cell"))
-    probe = (
-        qc.withColumn("_r", F.row_number().over(wq)).filter(F.col("_r") <= nprobe)
-        .select(query_id_col, _as_double(F.col("_qvec")).alias("_qvec"),
-                l2_norm(F.col("_qvec")).alias("_qnorm"), "cell")
-    )
-
+def _ivf_rank(data: DataFrame, probe: DataFrame, cells: list[int], k: int,
+              id_col: str, vec_col: str, query_id_col: str) -> DataFrame:
+    """The IVF ranking tail over cell-assigned rows (``cell``,
+    ``_cnorm``, the vector): keep the probed cells (partition pruning
+    on a persisted index), join the probe on ``cell``, exact cosine,
+    per-query ``row_number <= k`` (ties -> vec_id)."""
     scored = (
-        corpus_cells.withColumn("_cvec", _as_double(F.col(vec_col)))
-        .join(F.broadcast(probe), "cell")
+        data.filter(F.col("cell").isin(cells))   # -> partition pruning
+        .withColumn("_cvec", _as_double(F.col(vec_col)))
+        .join(probe, "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(query_id_col, id_col,
                 (dot_product_raw(F.col("_cvec"), F.col("_qvec"))
@@ -341,6 +340,33 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         .select(query_id_col, id_col, F.round(F.col("_cos"), 6).alias("cosine"), "rank")
         .orderBy(query_id_col, "rank")
     )
+
+
+def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
+             nlist: int = 16, nprobe: int = 4,
+             id_col: str = "vec_id", vec_col: str = "embedding",
+             query_id_col: str = "query_id", seed: int = 42,
+             sample_cap: int = 8192) -> DataFrame:
+    """Approximate cosine top-k via IVF (inverted-file) partitioning,
+    in session: the ``build_ivf_index`` + ``ivf_search_index`` kernels
+    without the persisted table. The quantizer is trained on a bounded
+    sample (``_train_quantizer``), the corpus is cell-assigned by
+    ``_cell_assigner``, the queries' nprobe nearest cells come from the
+    size-gated ``_resolve_probe_from_queries`` (a numpy matmul, no
+    query x centroid join), and ``_ivf_rank`` scores only the probed
+    cells. Same seed -> same rows as a search over the built index.
+    Recall < 1.0 by construction — rows-only check; recall vs the exact
+    baseline asserted in tests/test_similarity.py. ``sample_cap``
+    scales the training sample with nlist when callers grow cells ∝ N
+    (the SCALE.md cell-size-constant protocol) — still a bounded
+    collect, ~constant rows per cell.
+    """
+    cents = _train_quantizer(corpus, nlist, vec_col, seed=seed,
+                             sample_cap=sample_cap)
+    probe, cells, _ = _resolve_probe_from_queries(
+        queries, cents, nprobe, query_id_col, vec_col)
+    return _ivf_rank(_cell_assigner(corpus.select(id_col, vec_col), cents, vec_col),
+                     probe, cells, k, id_col, vec_col, query_id_col)
 
 
 def normalize_quantize(df: DataFrame, id_col: str = "vec_id",
@@ -448,26 +474,6 @@ def block_cosine_pairs(df: DataFrame, threshold: float = 0.95,
         per_block, schema=f"id_a long, id_b long, cosine double")
 
 
-def _cell_assigner(cents, vec_col: str):
-    """mapInPandas kernel assigning each vector its nearest-centroid
-    cell (one batch x nlist matmul per Arrow batch) and precomputing
-    its norm — shared by the initial index build and the incremental
-    upsert path so a vector lands in the SAME cell either way."""
-    import numpy as np
-
-    def assign_cells(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(m, axis=1)
-            unit = m / np.maximum(norms[:, None], 1e-12)
-            yield pdf.assign(cell=(unit @ cents.T).argmax(axis=1).astype("int32"),
-                             _cnorm=norms)
-
-    return assign_cells
-
-
 def build_ivf_index(corpus: DataFrame, dest: str, nlist: int = 16,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     seed: int = 42, sample_cap: int = 8192,
@@ -489,12 +495,8 @@ def build_ivf_index(corpus: DataFrame, dest: str, nlist: int = 16,
     cents = centroids if centroids is not None else _train_quantizer(
         corpus, nlist, vec_col, seed=seed, sample_cap=sample_cap)
 
-    in_schema = corpus.select(id_col, vec_col).schema
-    out_schema = in_schema.add("cell", "integer").add("_cnorm", "double")
-
     def write_data() -> None:
-        (corpus.select(id_col, vec_col)
-         .mapInPandas(_cell_assigner(cents, vec_col), schema=out_schema)
+        (_cell_assigner(corpus.select(id_col, vec_col), cents, vec_col)
          # one shuffle on cell at build time buys ONE file per cell dir
          # forever after: without it every write task emits a fragment
          # into every cell it touches (~2.5 files/cell measured at the
@@ -678,12 +680,10 @@ def upsert_ivf_index(batch: DataFrame, index_path: str, epoch_id: int,
     spark = batch.sparkSession
     cents = load_ivf_centroids(spark, index_path)
     root = delta_root or index_path
-    assigned = batch.select(id_col, vec_col)
+    src = batch.select(id_col, vec_col)
     if out_partitions is not None:
-        assigned = assigned.coalesce(out_partitions)
-    in_schema = batch.select(id_col, vec_col).schema
-    out_schema = in_schema.add("cell", "integer").add("_cnorm", "double")
-    (assigned.mapInPandas(_cell_assigner(cents, vec_col), schema=out_schema)
+        src = src.coalesce(out_partitions)
+    (_cell_assigner(src, cents, vec_col)
      .write.partitionBy("cell").mode("overwrite")
      .parquet(f"{root}/deltas/epoch={epoch_id}"))
     publish_gen_manifest(spark, root)
@@ -964,7 +964,8 @@ def _materialize_probe(probe: DataFrame, query_id_col: str,
 
 def _resolve_probe_from_queries(queries: DataFrame, cents, nprobe: int,
                                 query_id_col: str, vec_col: str):
-    """Size-gated probe for the persisted-index search paths, resolved
+    """THE query-to-cell probe of every IVF / IVF-PQ search (persisted
+    index and in-session operator alike), size-gated and resolved
     from the QUERY BATCH directly (r11, guide §4.1: the bounded branch
     needs no executor Python stage at all).
 
@@ -1101,24 +1102,9 @@ def ivf_search_index(spark: SparkSession, index_path: str, queries: DataFrame,
     cents = load_ivf_centroids(spark, index_path)
     probe, cells, _ = _resolve_probe_from_queries(
         queries, cents, nprobe, query_id_col, vec_col)
-    data = (ivf_index_data(spark, index_path, delta_root=delta_root,
-                           as_of_epoch=as_of_epoch, as_of_seq=as_of_seq)
-            .filter(F.col("cell").isin(cells)))   # -> partition pruning
-    scored = (
-        data.withColumn("_cvec", _as_double(F.col(vec_col)))
-        .join(probe, "cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col,
-                (dot_product_raw(F.col("_cvec"), F.col("_qvec"))
-                 / (F.col("_cnorm") * F.col("_qnorm"))).alias("_cos"))
-    )
-    w = W.partitionBy(query_id_col).orderBy(F.col("_cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round(F.col("_cos"), 6).alias("cosine"), "rank")
-        .orderBy(query_id_col, "rank")
-    )
+    data = ivf_index_data(spark, index_path, delta_root=delta_root,
+                          as_of_epoch=as_of_epoch, as_of_seq=as_of_seq)
+    return _ivf_rank(data, probe, cells, k, id_col, vec_col, query_id_col)
 
 
 def lsh_hyperplane_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -1234,14 +1220,16 @@ def semdedup(corpus: DataFrame, n_clusters: int = 16,
 
     The paper's recipe, Spark-first: (1) k-means the embeddings — the
     coarse quantizer is reused verbatim from the IVF path (bounded
-    driver-side sample, spherical Lloyd's); (2) within each cluster,
-    find pairs above the cosine threshold as ONE vectorized per-cell
-    kernel (``block_cosine_pairs`` — a numpy matmul per cell, never a
-    cross-join); (3) group semantic duplicates via connected
-    components and keep, per group, the member with the LOWEST cosine
-    to its cluster centroid (the paper's keep-farthest rule: the most
-    atypical exemplar carries the most information), ties broken by
-    min id. Docs in no pair keep is_kept = true.
+    driver-side sample, spherical Lloyd's) and every vector is placed
+    by the IVF ``_cell_assigner`` pass; (2)-(3) the ``_semdedup_rank``
+    tail ``semdedup_from_index`` runs: within each cell, pairs above
+    the cosine threshold as ONE vectorized per-cell kernel
+    (``block_cosine_pairs`` — a numpy matmul per cell, never a
+    cross-join), semantic duplicates grouped by connected components,
+    and per group the member with the LOWEST cosine to its cluster
+    centroid kept (the paper's keep-farthest rule: the most atypical
+    exemplar carries the most information), ties broken by min id.
+    Docs in no pair keep is_kept = true.
 
     Scale: pairwise work is confined to cells (quadratic only within a
     cell, the blocking contract block_cosine_pairs already imposes);
@@ -1256,30 +1244,40 @@ def semdedup(corpus: DataFrame, n_clusters: int = 16,
     """
     import numpy as np
 
-    from .dedup import dedup_clusters
-
     cents = (_train_quantizer(corpus, n_clusters, vec_col, seed=seed)
              if centroids is None else np.asarray(centroids, dtype=np.float64))
+    cells = _cell_assigner(corpus.select(id_col, vec_col), cents, vec_col)
+    return _semdedup_rank(cells, cents, threshold, id_col, vec_col)
 
-    def assign_cells(batches):
+
+def _semdedup_rank(data: DataFrame, cents, threshold: float, id_col: str,
+                   vec_col: str) -> DataFrame:
+    """The SemDeDup tail over cell-assigned rows: each row's cosine to
+    its OWN cell's centroid (one batch x nlist matmul per Arrow batch,
+    no argmax re-derivation), ``block_cosine_pairs`` per cell,
+    min-label CC (``dedup_clusters``), and keep-farthest-from-centroid
+    (ties -> min id)."""
+    import numpy as np
+
+    from .dedup import dedup_clusters
+
+    def cos_to_own_centroid(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            m = np.asarray([np.asarray(v, dtype=np.float64)
+                            for v in pdf[vec_col]])
             norms = np.maximum(np.linalg.norm(m, axis=1), 1e-300)
             unit = m / norms[:, None]
             sims = unit @ cents.T
-            cell = sims.argmax(axis=1)
-            yield pdf.assign(
-                cell=cell.astype("int32"),
-                centroid_cosine=sims[np.arange(len(m)), cell],
-            )
+            cell = pdf["cell"].to_numpy().astype("int64")
+            yield pdf[[id_col, vec_col, "cell"]].assign(
+                centroid_cosine=sims[np.arange(len(m)), cell])
 
-    in_schema = corpus.select(id_col, vec_col).schema
-    out_schema = (in_schema.add("cell", "integer")
-                  .add("centroid_cosine", "double"))
-    cells = (corpus.select(id_col, vec_col)
-             .mapInPandas(assign_cells, schema=out_schema)
+    in_schema = data.select(id_col, vec_col, "cell").schema
+    out_schema = in_schema.add("centroid_cosine", "double")
+    cells = (data.select(id_col, vec_col, "cell")
+             .mapInPandas(cos_to_own_centroid, schema=out_schema)
              .localCheckpoint(eager=False))
 
     pairs = block_cosine_pairs(cells, threshold, block_col="cell",
@@ -1312,59 +1310,16 @@ def semdedup_from_index(spark: SparkSession, index_path: str,
     quantizer training AND the full-corpus cell-assignment pass of
     ``semdedup`` both disappear — the corpus embeddings are read once
     from the index (upsert deltas included, tombstones excluded), and
-    only the within-cell pair kernel + CC + keep-farthest window run.
+    only the ``_semdedup_rank`` tail runs (centroid cosine of the
+    stored cell, within-cell pairs, CC, keep-farthest).
 
     Output schema and semantics are identical to ``semdedup`` given
-    the same quantizer: centroid_cosine is recomputed per row against
-    the index's pinned centroids (the same batch x nlist matmul shape
-    as the cell assigner, taking the INDEX's stored cell — one fused
-    Arrow pass, no argmax re-derivation needed), then
-    ``block_cosine_pairs`` per cell, min-label CC, and the
-    keep-farthest-from-centroid rule (ties -> min id). Equality with
-    the in-session operator under an injected quantizer is pinned in
+    the same quantizer — both call the same tail over rows placed by
+    the same ``_cell_assigner``; equality is pinned in
     tests/test_similarity.py."""
-    import numpy as np
-
-    from .dedup import dedup_clusters
-
     cents = load_ivf_centroids(spark, index_path)
     data = ivf_index_data(spark, index_path, delta_root=delta_root)
-
-    def cos_to_own_centroid(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
-            norms = np.maximum(np.linalg.norm(m, axis=1), 1e-300)
-            unit = m / norms[:, None]
-            sims = unit @ cents.T  # same kernel shape as semdedup's
-            cell = pdf["cell"].to_numpy().astype("int64")
-            yield pdf[[id_col, vec_col, "cell"]].assign(
-                centroid_cosine=sims[np.arange(len(m)), cell])
-
-    in_schema = data.select(id_col, vec_col, "cell").schema
-    out_schema = in_schema.add("centroid_cosine", "double")
-    cells = (data.select(id_col, vec_col, "cell")
-             .mapInPandas(cos_to_own_centroid, schema=out_schema)
-             .localCheckpoint(eager=False))
-
-    pairs = block_cosine_pairs(cells, threshold, block_col="cell",
-                               id_col=id_col, vec_col=vec_col)
-    groups = dedup_clusters(pairs)
-
-    member = (cells.join(groups, cells[id_col] == groups.id, "left")
-              .select(id_col, "cell",
-                      F.round("centroid_cosine", 6).alias("centroid_cosine"),
-                      F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id")))
-    w = W.partitionBy("cluster_id").orderBy(F.col("centroid_cosine").asc(),
-                                            F.col(id_col).asc())
-    return (
-        member.withColumn("_r", F.row_number().over(w))
-        .select(id_col, "cell", "centroid_cosine", "cluster_id",
-                (F.col("_r") == 1).alias("is_kept"))
-        .orderBy(id_col)
-    )
+    return _semdedup_rank(data, cents, threshold, id_col, vec_col)
 
 
 def _kmeans_euclid(x, k: int, rng, iters: int = 10):
@@ -1408,7 +1363,7 @@ def _train_pq_books(sample_unit, cents, m_sub: int, nbits: int,
     if dim % m_sub:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     dsub = dim // m_sub
-    assign = (sample_unit @ cents.T).argmax(axis=1)
+    assign = _nearest_cell(sample_unit, cents)
     resid = sample_unit - cents[assign]
     rng = np.random.default_rng(seed)
     return [
@@ -1429,8 +1384,10 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     plus ``m_sub`` sub-codebook codes (16 bytes vs 256 bytes of
     float32 at dim=64, 16x), and candidate scoring reads ONLY codes.
 
-    Plan shape matches ivf_topk (one encode pass, candidates confined
-    to nprobe cells per query, broadcast probe set); scoring is
+    Composed like ivf_topk from the persisted-index kernels: one
+    ``_pq_encoded`` pass (placed by the same ``_place`` kernel as
+    IVF), the size-gated ``_resolve_probe_from_queries`` probe, and
+    the ``_pq_rank`` tail ``ivfpq_search_index`` runs; scoring is
     asymmetric distance computation (ADC): per query the kernel builds
     an (m_sub x ncode) lookup table of subvector dot products ONCE,
     then every candidate's approximate cosine is
@@ -1439,8 +1396,9 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     embedding column during candidate ranking. With ``refine`` > 0
     the ADC top ``k*refine`` per query are exactly re-ranked against
     their true vectors (the faiss IVFPQ+RefineFlat recipe — the float
-    column is read for only k*refine rows per query, via a broadcast
-    semi-join on id) and the output carries exact ``cosine``; with
+    column is read for only k*refine rows per query, via a semi-join
+    on id, broadcast while the probe gate says the batch is bounded)
+    and the output carries exact ``cosine``; with
     ``refine=0`` the raw ADC ranking is returned as ``approx_cosine``.
     Both training passes share ONE bounded driver-side sample (same
     collect as ivf_topk). Approximate by design (cell pruning +
@@ -1454,15 +1412,11 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     cents = _train_quantizer(corpus, nlist, vec_col, seed=seed, sample=sample)
     books = _train_pq_books(sample, cents, m_sub, nbits, seed=seed)
 
-    encoded = _pq_encoded(corpus, cents, books, id_col, vec_col)
-    cent_df = _centroid_df(corpus.sparkSession, cents)
-    probe = _pq_probe(queries, cent_df, nprobe, query_id_col, vec_col)
-    cand = (encoded.join(F.broadcast(probe), "cell")
-            .filter(F.col(id_col) != F.col(query_id_col))
-            .select(query_id_col, "_qvec", id_col, "cell", "codes"))
-    scored = _adc_scores(cand, cents, books, query_id_col, id_col)
-    return _pq_finish(scored, corpus, queries, k, refine, id_col, vec_col,
-                      query_id_col)
+    probe, cells, bounded = _resolve_probe_from_queries(
+        queries, cents, nprobe, query_id_col, vec_col)
+    return _pq_rank(_pq_encoded(corpus, cents, books, id_col, vec_col),
+                    probe, cells, bounded, cents, books, corpus, queries,
+                    k, refine, id_col, vec_col, query_id_col)
 
 
 def _centroid_df(spark: SparkSession, cents) -> DataFrame:
@@ -1494,8 +1448,7 @@ def _pq_encoded(corpus: DataFrame, cents, books, id_col: str,
                 continue
             m = np.asarray([np.asarray(v, dtype=np.float64)
                             for v in pdf[vec_col]])
-            unit = m / np.maximum(np.linalg.norm(m, axis=1)[:, None], 1e-12)
-            cell = (unit @ cents.T).argmax(axis=1)
+            _, unit, cell = _place(m, cents)
             resid = unit - cents[cell]
             codes = np.empty((len(m), m_sub), dtype=np.int32)
             for j in range(m_sub):
@@ -1510,21 +1463,6 @@ def _pq_encoded(corpus: DataFrame, cents, books, id_col: str,
 
     return corpus.select(id_col, vec_col).mapInPandas(
         encode, schema=f"{id_col} long, cell int, codes array<int>")
-
-
-def _pq_probe(queries: DataFrame, cent_df: DataFrame, nprobe: int,
-              query_id_col: str, vec_col: str) -> DataFrame:
-    """nprobe nearest cells per query: ``query_id | _qvec | cell``."""
-    qc = (
-        queries.crossJoin(F.broadcast(cent_df))
-        .select(query_id_col, F.col(vec_col).alias("_qvec"), "cell",
-                cosine(F.col("_qvec"), F.col("centroid")).alias("_ccos"))
-    )
-    wq = W.partitionBy(query_id_col).orderBy(F.col("_ccos").desc(), F.col("cell"))
-    return (
-        qc.withColumn("_r", F.row_number().over(wq)).filter(F.col("_r") <= nprobe)
-        .select(query_id_col, _as_double(F.col("_qvec")).alias("_qvec"), "cell")
-    )
 
 
 def _adc_scores(cand: DataFrame, cents, books, query_id_col: str,
@@ -1572,19 +1510,28 @@ def _adc_scores(cand: DataFrame, cents, books, query_id_col: str,
         adc_score, schema=f"{query_id_col} long, {id_col} long, _score double")
 
 
-def _pq_finish(scored: DataFrame, corpus: DataFrame, queries: DataFrame,
-               k: int, refine: int, id_col: str, vec_col: str,
-               query_id_col: str, bounded: bool = True) -> DataFrame:
-    """Top-k off the ADC ranking; with ``refine`` the top k*refine are
-    exactly re-ranked against their true vectors (the float column is
-    read for shortlist rows only — never materialized corpus-wide).
+def _pq_rank(data: DataFrame, probe: DataFrame, cells: list[int],
+             bounded: bool, cents, books, corpus: DataFrame,
+             queries: DataFrame, k: int, refine: int, id_col: str,
+             vec_col: str, query_id_col: str) -> DataFrame:
+    """The IVF-PQ ranking tail over code rows (``id | cell | codes``):
+    keep the probed cells, join the probe on ``cell``, ADC-score
+    (``_adc_scores``) and take the top k; with ``refine`` the top
+    k*refine are exactly re-ranked against their true vectors (the
+    float column is read for shortlist rows only — never materialized
+    corpus-wide).
 
-    ``bounded`` carries the caller's probe-gate verdict: a query batch
+    ``bounded`` carries the probe gate's verdict: a query batch
     small enough to broadcast as a probe is also small enough to
     broadcast as a shortlist (nq x k x refine id pairs) and as a
     query-vector side; an over-ceiling batch leaves BOTH refine joins
     to the planner (shuffle on id / query_id) — the same rule, applied
     to every query-proportional build side in the search."""
+    cand = (data.filter(F.col("cell").isin(cells))   # -> partition pruning
+            .join(probe, "cell")
+            .filter(F.col(id_col) != F.col(query_id_col))
+            .select(query_id_col, "_qvec", id_col, "cell", "codes"))
+    scored = _adc_scores(cand, cents, books, query_id_col, id_col)
     w = W.partitionBy(query_id_col).orderBy(F.col("_score").desc(), F.col(id_col))
     if not refine:
         return (
@@ -1751,11 +1698,6 @@ def ivfpq_search_index(spark: SparkSession, index_path: str,
 
     probe, cells, bounded = _resolve_probe_from_queries(
         queries, cents, nprobe, query_id_col, vec_col)
-    data = (ivf_index_data(spark, index_path, delta_root=delta_root)
-            .filter(F.col("cell").isin(cells)))   # -> partition pruning
-    cand = (data.join(probe, "cell")
-            .filter(F.col(id_col) != F.col(query_id_col))
-            .select(query_id_col, "_qvec", id_col, "cell", "codes"))
-    scored = _adc_scores(cand, cents, books, query_id_col, id_col)
-    return _pq_finish(scored, corpus, queries, k, refine, id_col, vec_col,
-                      query_id_col, bounded=bounded)
+    return _pq_rank(ivf_index_data(spark, index_path, delta_root=delta_root),
+                    probe, cells, bounded, cents, books, corpus, queries,
+                    k, refine, id_col, vec_col, query_id_col)

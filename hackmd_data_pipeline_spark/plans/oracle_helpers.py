@@ -174,11 +174,6 @@ def _fmix_inline(h: str) -> str:
     return _xor(d, f"({d}) >> 32")
 
 
-def _xxh_round(acc: str, inp: str) -> str:
-    """XXH64 accumulator round: rotl31(acc + inp*P2) * P1."""
-    return _mulmod(_rotl(_addmod(acc, _mulmod(inp, _P2)), 31), _P1)
-
-
 def _round0(v: str) -> str:
     return _mulmod(_rotl(_mulmod(v, _P2), 31), _P1)
 

@@ -170,7 +170,7 @@ def _store_cache_path(sf_dir: str, kind: str) -> str:
     source_edges._edge_path keys by pid to avoid). Bounded: one dir per
     live process per dataset, rebuilt-in-place per run. The SHARED
     "warm" path stays pid-free (reuse across processes is its point)
-    and is published via the atomic-rename guard in _ensure_warm_store
+    and is published via the atomic-rename guard in _ensure_index
     below instead."""
     import hashlib
     import os
@@ -193,36 +193,15 @@ def _store_cache_path(sf_dir: str, kind: str) -> str:
 
 
 def _ensure_warm_store(stored, dest: str, **build_kwargs) -> None:
-    """Build the shared warm store ONCE per dataset, publish-by-rename
-    (r07 ADVICE): concurrent processes each build into a pid-suffixed
-    staging dir and the first ``os.rename`` into place wins — readers
-    only ever see an absent dir or a fully-committed one, never a
-    half-written overwrite. The loser discards its (identical by
-    construction) staging copy."""
-    import os
-
+    """Build the shared warm dedup store ONCE per dataset through the
+    one publish-by-rename body (``_ensure_index``; r07 ADVICE):
+    readers only ever see an absent dir or a fully-committed one."""
     from ..operators.dedup_store import build_dedup_store
 
     stages = ("shingles", "signatures", "pairs", "clusters")
     need = stages[:stages.index(build_kwargs.get("through", "clusters")) + 1]
-
-    def complete(path: str) -> bool:
-        return all(os.path.exists(os.path.join(path, t, "_SUCCESS"))
-                   for t in need)
-
-    if complete(dest):
-        return
-    stage = f"{dest}.build_p{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    build_dedup_store(stored, stage, **build_kwargs)
-    try:
-        os.rename(stage, dest)
-    except OSError:
-        if complete(dest):          # lost the race to an equivalent build
-            shutil.rmtree(stage, ignore_errors=True)
-        else:                       # crashed leftover occupies dest
-            shutil.rmtree(dest, ignore_errors=True)
-            os.rename(stage, dest)
+    _ensure_index(stored, dest,
+                  lambda df, p: build_dedup_store(df, p, **build_kwargs), need)
 
 
 @query(
@@ -374,30 +353,15 @@ def dedup_store_commit_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_warm_span_store(stored, dest: str, k: int = 32) -> None:
-    """Build the shared warm SPAN store once per dataset, publish-by-
-    rename (the _ensure_warm_store recipe applied to commit_spans):
-    the stored corpus lands as one epoch-0 span-hash generation."""
-    import os
-
+    """Build the shared warm SPAN store once per dataset (publish-by-
+    rename via ``_ensure_index``): the stored corpus lands as one
+    epoch-0 span-hash generation."""
     from ..operators.dedup_store import commit_spans
 
-    def complete(path: str) -> bool:
-        return os.path.exists(os.path.join(path, "spans", "epoch=0",
-                                           "_SUCCESS"))
-
-    if complete(dest):
-        return
-    stage = f"{dest}.build_p{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    commit_spans(stored, stage, epoch_id=0, k=k, out_partitions=8)
-    try:
-        os.rename(stage, dest)
-    except OSError:
-        if complete(dest):
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            shutil.rmtree(dest, ignore_errors=True)
-            os.rename(stage, dest)
+    _ensure_index(stored, dest,
+                  lambda df, p: commit_spans(df, p, epoch_id=0, k=k,
+                                             out_partitions=8),
+                  ("spans/epoch=0",))
 
 
 from .oracle_helpers import exact_substring_oracle  # noqa: E402
@@ -914,9 +878,14 @@ def _index_cache_path(sf_dir: str, kind: str,
 
 
 def _ensure_index(stored, dest: str, build_fn, tables: tuple[str, ...]) -> None:
-    """Build a shared persisted ANN index once per dataset,
-    publish-by-rename (the _ensure_warm_store recipe): concurrent
-    processes never read a half-written index."""
+    """Build a shared per-dataset artifact (ANN index, warm dedup or
+    span store) ONCE, publish-by-rename: ``dest`` is complete when
+    every ``tables`` entry (a path under it) holds a ``_SUCCESS``
+    marker. Concurrent processes each build into a pid-suffixed
+    staging dir and the first ``os.rename`` into place wins; the loser
+    discards its (identical by construction) copy, and a crashed
+    leftover at ``dest`` is replaced. Readers never see a half-written
+    artifact."""
     import os
 
     def complete(path: str) -> bool:

@@ -51,17 +51,20 @@ class ControlTable:
             return -1
 
     def read(self) -> DataFrame:
+        """The current generation typed by exactly ``self.schema`` on
+        both branches. A file-source read types every column nullable,
+        so the (tiny, by design) generation is collected JVM-side and
+        re-declared as a local relation — an eager snapshot that a
+        later generation GC cannot pull out from under the reader."""
+        from ..session import empty_local_df, jvm_local_df
+
         gen = self.current_gen()
         if gen < 0:
-            # JVM empty relation (r12): createDataFrame([], schema) is
-            # a defaultParallelism-slice python relation whose empty
-            # slices still cost a worker round trip each — serial
-            # under the generation write's coalesce(1) (~10 s/flip)
-            from ..session import empty_local_df
-
             return empty_local_df(self.spark, self.schema)
-        return self.spark.read.schema(self.schema).parquet(
-            os.path.join(self.root, f"gen={gen}"))
+        rows = (self.spark.read.schema(self.schema)
+                .parquet(os.path.join(self.root, f"gen={gen}"))
+                ._jdf.collectAsList())
+        return jvm_local_df(self.spark, rows, self.schema)
 
     def write(self, df: DataFrame) -> int:
         gen = self.current_gen() + 1

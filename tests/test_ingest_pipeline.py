@@ -151,6 +151,24 @@ def test_control_table_generation_gc(spark, tmp_path):
     assert table.read().count() == 2
 
 
+def test_control_table_read_returns_declared_schema(spark, tmp_path):
+    """Schema contract: ControlTable.read() is typed by exactly the
+    declared StructType (nullability included) on the empty-generation
+    branch and on the parquet branch, so ``.to(schema)`` holds on both."""
+    from hackmd_data_pipeline_spark.etl import STAGE_LEDGER_SCHEMA
+
+    for schema, seed in ((RAW_BATCHES_SCHEMA, _seed_batches(spark)),
+                         (STAGE_LEDGER_SCHEMA, None)):
+        table = ControlTable(spark, str(tmp_path / schema.fields[0].name), schema)
+        empty = table.read()
+        assert empty.schema == schema
+        assert empty.to(schema).count() == 0
+        table.write(seed if seed is not None else empty)
+        written = table.read()
+        assert written.schema == schema
+        assert written.to(schema).count() == (0 if seed is None else seed.count())
+
+
 # --------------------------------------------------------------- streaming
 
 

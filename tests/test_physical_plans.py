@@ -173,7 +173,7 @@ _BNLJ_OK = {
     "subq_q11_important_stock",    # 1-row count + 1-row total scalar cross joins
     "subq_q20_excess_stock",       # 1-row supplier-count scalar cross join (r05)
     "agg_cms_heavy_hitters",       # 1-row token-total scalar cross join (r05)
-    "sim_ann_ivfpq_recall",        # bounded query x centroid cross join (r05)
+    "sim_ann_ivfpq_recall",        # 1-row corpus-recall scalar cross join (r05)
     "docs_temperature_sample",     # 1-row min/total + total-kept scalar cross joins
     "sim_knn_join_ivf",            # 1-row corpus-recall scalar cross join
     "sim_knn_join_ivfpq",          # 1-row corpus-recall scalar cross join

@@ -11,7 +11,7 @@ from hackmd_data_pipeline_spark.operators.dedup import minhash_lsh_pairs, shingl
 from hackmd_data_pipeline_spark.operators.similarity import brute_force_topk, ivf_topk
 from hackmd_data_pipeline_spark.tables import load_table
 
-from .conftest import SF_CORRECT, local_df
+from .conftest import SF_CORRECT, SF_SMOKE, local_df
 
 
 def test_ivf_recall_vs_exact(spark):
@@ -845,6 +845,62 @@ def test_semdedup_from_index_equals_in_session(spark, tmp_path):
     pruned = {r.vec_id for r in
               semdedup_from_index(spark, idx, threshold=0.9).collect()}
     assert 100 not in pruned and 200 in pruned
+
+
+def test_in_session_ann_plans_have_no_query_centroid_nested_loop(spark):
+    """ivf_topk and ivfpq_topk probe through the persisted path's
+    ``_probe_topk`` matmul: no query x centroid cross join may survive
+    in their plans (neither a BroadcastNestedLoopJoin nor a
+    CartesianProduct, nor a logical cross join)."""
+    from hackmd_data_pipeline_spark.operators.similarity import ivfpq_topk
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+    for df in (ivf_topk(emb, queries, k=10, nlist=16, nprobe=6),
+               ivfpq_topk(emb, queries, k=10, nprobe=6),
+               ivfpq_topk(emb, queries, k=10, nprobe=6, refine=0)):
+        qe = df._jdf.queryExecution()
+        physical = qe.executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in physical, physical
+        assert "CartesianProduct" not in physical, physical
+        assert "Cross" not in qe.optimizedPlan().toString()
+
+
+def test_zero_and_tiny_norm_vectors_placed_alike(spark, tmp_path):
+    """One placement kernel: a zero-norm vector and a norm-1e-13
+    vector land in the same cell whether placed by build_ivf_index,
+    build_ivfpq_index or semdedup (same corpus + seed -> same trained
+    quantizer), and scaling a vector down to norm 1e-13 does not move
+    it out of its cell."""
+    from hackmd_data_pipeline_spark.operators.similarity import (
+        build_ivf_index,
+        build_ivfpq_index,
+        semdedup,
+    )
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    src = emb.filter(F.col("vec_id") == 5).first().embedding
+    norm = sum(float(x) ** 2 for x in src) ** 0.5
+    odd = spark.createDataFrame(
+        [(10 ** 6, [0.0] * len(src)),
+         (10 ** 6 + 1, [float(x) * 1e-13 / norm for x in src])],
+        emb.schema)
+    corpus = emb.unionByName(odd)
+    ids = (5, 10 ** 6, 10 ** 6 + 1)
+
+    def cells(df):
+        return {r.vec_id: r.cell for r in
+                df.filter(F.col("vec_id").isin(*ids)).select("vec_id", "cell").collect()}
+
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    build_ivf_index(corpus, ivf, nlist=16, seed=42)
+    build_ivfpq_index(corpus, pq, nlist=16, seed=42)
+    by_ivf = cells(spark.read.parquet(ivf + "/data"))
+    by_pq = cells(spark.read.parquet(pq + "/data"))
+    by_sem = cells(semdedup(corpus, n_clusters=16, seed=42))
+    assert by_ivf == by_pq == by_sem, (by_ivf, by_pq, by_sem)
+    assert by_ivf[10 ** 6 + 1] == by_ivf[5]
 
 
 def test_ivf_index_time_travel(spark, tmp_path):
