@@ -180,7 +180,9 @@ def main() -> None:
 
     ref: dict[str, float] = {}
     ref_name = None
-    spark_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # the live session's core count: SPARK_GRAFT_MASTER overrides the
+    # local[$SPARK_GRAFT_CPUS] master, so the env value can be wrong
+    spark_cpus = n_workers
     try:
         arts = sorted(Path(__file__).parent.glob("BENCH_LOCAL_r*.json"),
                       key=_round_run)
@@ -310,7 +312,7 @@ def main() -> None:
             "uptime_sec": uptime,
             "wall_sec": round(time.perf_counter() - t_run0, 1),
             "cpus": os.cpu_count(),
-            # the SPARK core count ($SPARK_GRAFT_CPUS -> local[N]) —
+            # the SPARK core count (the session's defaultParallelism) —
             # os.cpu_count() above is the host and cannot distinguish
             # the driver's low-core scaling run from the main run
             "spark_cpus": spark_cpus,

@@ -26,8 +26,10 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schemas import CATEGORY_PROGRESS_SCHEMA, CATEGORY_RUN_STATS_SCHEMA, RAW_RECORD_SCHEMA
 from .streaming.control import ControlTable
@@ -66,8 +68,8 @@ class Collector:
         (reference arxiv_collector.py:217-222) — EXCEPT via left-anti."""
         # Arrow local relation (r12): a python-parallelized
         # createDataFrame embedded in the progress table's generation
-        # write makes its coalesce(1) evaluate defaultParallelism
-        # pickled slices serially (~5 s per flip on local[32])
+        # write evaluates defaultParallelism pickled slices through
+        # Python workers (~5 s per flip on local[32] when coalesced)
         from .session import arrow_local_df
 
         yaml_df = arrow_local_df(
@@ -100,14 +102,15 @@ class Collector:
         """O-19 + O-22 build side: ids ingested within the lookback
         window (reference load_existing_ids, arxiv_collector.py:123-134).
         The time bound keeps this broadcastable at scale."""
+        from .sources.fs import fs_exists
+
         if lookback_months is None:
             lookback_months = self.lookback_months
-        try:
-            raw = self.spark.read.schema(RAW_RECORD_SCHEMA).json(f"{self.root}/raw")
-        except Exception:
+        if not fs_exists(self.spark, f"{self.root}/raw"):
             from .session import empty_local_df
 
             return empty_local_df(self.spark, "entry_id string")
+        raw = self.spark.read.schema(RAW_RECORD_SCHEMA).json(f"{self.root}/raw")
         cutoff = F.current_timestamp() - F.expr(f"INTERVAL {lookback_months} MONTHS")
         return (
             raw.select("entry_id", F.to_timestamp("published").alias("_pub"))
@@ -131,13 +134,14 @@ class Collector:
             # the run proceeds (arxiv_collector.py:260-264), and the
             # file listing behind a DataFrame is fixed at creation
             known = F.broadcast(self.known_ids())
+            # Arrow local relation: a python-parallelized list would be
+            # evaluated by Python workers twice, once by the count and
+            # once by the write
             records = list(self.fetch(cat, self.max_results))
-            if records:
-                incoming = self.spark.createDataFrame(records, RAW_RECORD_SCHEMA)
-            else:
-                from .session import empty_local_df
-
-                incoming = empty_local_df(self.spark, RAW_RECORD_SCHEMA)
+            incoming = self.spark.createDataFrame(
+                pa.Table.from_pylist(
+                    records, schema=to_arrow_schema(RAW_RECORD_SCHEMA)),
+                RAW_RECORD_SCHEMA)
             fresh = (
                 incoming.dropDuplicates(["entry_id"])           # O-23
                 .join(known, "entry_id", "left_anti")           # O-22
@@ -157,8 +161,7 @@ class Collector:
             self._mark_finished(cat)
 
         if stats_rows:
-            # Arrow local relation — the run_stats generation write
-            # coalesces to one file (see register_new_categories)
+            # Arrow local relation (see register_new_categories)
             from .session import arrow_local_df
 
             stats = arrow_local_df(

@@ -45,24 +45,43 @@ pipeline restarts from the ledger, and the final canonical + history
 uninterrupted run.
 
 Scale posture: stage boundaries are parquet directories (the lake),
-control state is tiny generation-flipped parquet (streaming/
-control.py), and every stage's plan is the same oracled operator the
-registry serves — no driver-side data paths beyond the bounded
-control reads.
+control state is tiny generation-flipped parquet that the driver
+writes and reads through Arrow (streaming/control.py), and every
+stage's plan is the same oracled operator the registry serves — no
+driver-side data paths beyond the bounded control state. The driver
+loop itself launches no bookkeeping jobs: the ledger is read once per
+``run()`` (the driver is its only writer) and each flip costs the one
+job of its generation write; stage counts are observed on the stage's
+own sink write (``Dataset.observe``), not re-read and counted.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .collector import Collector, FetchFn
 from .functions.scalars import WS_CLASS
 from .streaming.control import ControlTable
 from .streaming.pipeline import run_ingest_stream
+
+
+def _observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count (``n``) and the named ``aggs``
+    observed by whichever action next runs it — a stage's sink write
+    reports its own counts with no job of its own (the
+    dedup_store.update_clusters posture). Read them with ``obs.get``
+    after the write."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n"),
+                      *(c.alias(k) for k, c in aggs.items())), obs
+
 
 def hashed_embeddings(docs: DataFrame, dim: int = 16,
                       id_col: str = "doc_id",
@@ -168,6 +187,10 @@ class CorpusPipeline:
         self.fault_hook = fault_hook
         self.ledger = ControlTable(spark, f"{root}/control/stage_ledger",
                                    STAGE_LEDGER_SCHEMA)
+        # stage -> (status, attempt): the ledger as of its last write
+        # by this process; loaded from disk by run() (a restart
+        # rebuilds it there) or by the first _mark
+        self._rows: dict[str, tuple[str, int]] | None = None
 
     # ------------------------------------------------------------ ledger ops
 
@@ -176,25 +199,21 @@ class CorpusPipeline:
                 for r in self.ledger.read().collect()}
 
     def _mark(self, stage: str, status: str, attempt: int) -> None:
-        from .session import arrow_local_df
-
-        rows = self._statuses()
-        rows[stage] = (status, attempt)
-        items = sorted(rows.items())
-        # JVM Arrow local relation, NOT createDataFrame(list): the
+        if self._rows is None:
+            self._rows = self._statuses()
+        self._rows[stage] = (status, attempt)
+        now = datetime.now(timezone.utc)
+        # Arrow local relation, NOT createDataFrame(list): the
         # python-parallelized form spreads the rows over
-        # defaultParallelism pickled slices, and the ledger write's
-        # coalesce(1) then evaluates all of them SEQUENTIALLY through
-        # one task's Python worker — measured 5-7 s PER LEDGER FLIP on
-        # local[32] (~100 s of a 150 s pipeline run; r12, the r09
-        # centroid-write lesson applied to the control tables)
-        self.ledger.write(arrow_local_df(
-            self.spark,
-            {"stage": [s for s, _ in items],
-             "status": [st for _, (st, _) in items],
-             "attempt": [at for _, (_, at) in items]},
-            "stage string, status string, attempt int",
-        ).withColumn("updated_at", F.current_timestamp()))
+        # defaultParallelism pickled slices that the generation write
+        # evaluates through Python workers (5-7 s PER LEDGER FLIP on
+        # local[32] when that write coalesced them, r12)
+        self.ledger.write(self.spark.createDataFrame(
+            pa.Table.from_pylist(
+                [{"stage": s, "status": st, "attempt": at, "updated_at": now}
+                 for s, (st, at) in sorted(self._rows.items())],
+                schema=to_arrow_schema(STAGE_LEDGER_SCHEMA)),
+            STAGE_LEDGER_SCHEMA))
 
     def _fault(self, point: str, stage: str) -> None:
         if self.fault_hook is not None:
@@ -205,8 +224,11 @@ class CorpusPipeline:
     def run(self) -> dict:
         """Resume-safe drive loop: claim → work → commit per stage."""
         summary: dict = {}
+        # read once: the driver is the ledger's only writer, so the
+        # rows _mark keeps are what every later read would return
+        self._rows = self._statuses()
         for stage in self.STAGES:
-            status, attempt = self._statuses().get(stage, ("pending", 0))
+            status, attempt = self._rows.get(stage, ("pending", 0))
             if status == "finished":
                 summary[stage] = "skipped(finished)"
                 continue
@@ -260,10 +282,10 @@ class CorpusPipeline:
             F.col("primary_category").alias("source"),
             F.length(text).alias("n_chars"),
         )
+        docs, obs = _observed(docs)
         docs.write.mode("overwrite").parquet(
             f"{self.root}/corpus/documents.parquet")
-        return {"documents": self.spark.read.parquet(
-            f"{self.root}/corpus/documents.parquet").count()}
+        return {"documents": obs.get["n"]}
 
     def _stage_curate(self) -> dict:
         """Per-document verdicts (the oracled docs_curation_decisions
@@ -276,10 +298,10 @@ class CorpusPipeline:
         kept = docs.join(
             self.spark.read.parquet(f"{self.root}/corpus/decisions.parquet")
             .filter("kept").select("doc_id"), "doc_id", "left_semi")
+        kept, obs = _observed(kept)
         kept.write.mode("overwrite").parquet(
             f"{self.root}/corpus/kept_documents.parquet")
-        return {"kept": self.spark.read.parquet(
-            f"{self.root}/corpus/kept_documents.parquet").count()}
+        return {"kept": obs.get["n"]}
 
     def _stage_audit_spans(self) -> dict:
         """Exact-substring (verbatim-leak) audit THROUGH the persisted
@@ -317,12 +339,12 @@ class CorpusPipeline:
             f"{self.root}/corpus/span_report.parquet")
             .filter(F.col("dup_fraction") <= F.lit(self.max_dup_fraction))
             .select("doc_id"))
-        audited = kept.join(keep_ids, "doc_id", "left_semi")
+        audited, obs = _observed(kept.join(keep_ids, "doc_id", "left_semi"))
         audited.write.mode("overwrite").parquet(
             f"{self.root}/corpus/audited_documents.parquet")
         audited = self.spark.read.parquet(
             f"{self.root}/corpus/audited_documents.parquet")
-        n_kept = audited.count()
+        n_kept = obs.get["n"]
         if n_kept:
             commit_spans(audited, store, epoch_id=0, k=self.span_k,
                          out_partitions=4)
@@ -352,11 +374,10 @@ class CorpusPipeline:
             f"{self.root}/corpus/clusters.parquet")
             .filter(F.col("doc_id") != F.col("cluster_id"))
             .select("doc_id"))
-        resolved = kept.join(dropped, "doc_id", "left_anti")
+        resolved, obs = _observed(kept.join(dropped, "doc_id", "left_anti"))
         resolved.write.mode("overwrite").parquet(
             f"{self.root}/corpus/resolved_documents.parquet")
-        return {"resolved": self.spark.read.parquet(
-            f"{self.root}/corpus/resolved_documents.parquet").count()}
+        return {"resolved": obs.get["n"]}
 
     def _stage_annotate(self) -> dict:
         """Fill the reference's DECLARED-but-never-populated enrichment
@@ -415,13 +436,14 @@ class CorpusPipeline:
             .withColumn("keywords", F.coalesce(
                 F.col("keywords"), F.array().cast("array<string>")))
         )
+        annotated, obs = _observed(
+            annotated, with_topic=F.count("topic"),
+            quality_kept=F.count_if(F.col("quality_keep")))
         annotated.write.mode("overwrite").parquet(
             f"{self.root}/corpus/annotated_documents.parquet")
-        out = self.spark.read.parquet(
-            f"{self.root}/corpus/annotated_documents.parquet")
-        return {"annotated": out.count(),
-                "with_topic": out.filter(F.col("topic").isNotNull()).count(),
-                "quality_kept": out.filter(F.col("quality_keep")).count()}
+        n = obs.get
+        return {"annotated": n["n"], "with_topic": n["with_topic"],
+                "quality_kept": n["quality_kept"]}
 
     def _stage_index_embeddings(self) -> dict:
         """Embed the annotated corpus and maintain the RETRIEVAL index
@@ -463,15 +485,18 @@ class CorpusPipeline:
             # delta vs the float path is gated in tests.
             from .operators.similarity import dequantize, normalize_quantize
 
-            (normalize_quantize(emb).write.mode("overwrite")
-             .parquet(f"{self.root}/corpus/embeddings_q8.parquet"))
+            q8, obs = _observed(normalize_quantize(emb))
+            q8.write.mode("overwrite").parquet(
+                f"{self.root}/corpus/embeddings_q8.parquet")
             emb = dequantize(self.spark.read.parquet(
                 f"{self.root}/corpus/embeddings_q8.parquet"))
         else:
+            emb, obs = _observed(emb)
             emb.write.mode("overwrite").parquet(
                 f"{self.root}/corpus/embeddings.parquet")
             emb = self.spark.read.parquet(
                 f"{self.root}/corpus/embeddings.parquet")
+        n_emb = obs.get["n"]
 
         ptr = f"{self.root}/stores/ann/ptr"
         cur = pointer_current(self.spark, ptr)
@@ -479,7 +504,7 @@ class CorpusPipeline:
             g0 = f"{self.root}/stores/ann/index_g0"
             build_ivf_index(emb, g0, nlist=self.ann_nlist)
             pointer_publish(self.spark, ptr, g0)
-            return {"indexed": emb.count(), "skipped": 0,
+            return {"indexed": n_emb, "skipped": 0,
                     "bootstrapped": True, "maintained": False}
         # replay / later-cycle path: own-epoch wipe, bounded id skip,
         # upsert only what the searchable set lacks
@@ -493,7 +518,7 @@ class CorpusPipeline:
         m = maintain_ivf_index(self.spark, ptr,
                                max_deltas=self.ann_max_deltas)
         return {"indexed": n_fresh,
-                "skipped": emb.count() - n_fresh,
+                "skipped": n_emb - n_fresh,
                 "bootstrapped": False, "maintained": m["compacted"]}
 
     def _stage_finalize(self) -> dict:
@@ -507,7 +532,8 @@ class CorpusPipeline:
         resolved = self.spark.read.parquet(
             f"{self.root}/corpus/annotated_documents.parquet")
         split = deterministic_split(resolved, "doc_id", self.split_fractions)
-        (split.write.mode("overwrite").partitionBy("split")
+        written, obs = _observed(split)
+        (written.write.mode("overwrite").partitionBy("split")
          .parquet(f"{self.root}/out/corpus"))
         with_tokens = (
             split.withColumn(
@@ -517,8 +543,7 @@ class CorpusPipeline:
         packed = pack_sequences(with_tokens, self.pack_budget)
         packed.write.mode("overwrite").parquet(
             f"{self.root}/out/packed.parquet")
-        out = self.spark.read.parquet(f"{self.root}/out/corpus")
-        return {"final_docs": out.count(),
+        return {"final_docs": obs.get["n"],
                 "sequences": self.spark.read.parquet(
                     f"{self.root}/out/packed.parquet")
                 .select("seq_id").distinct().count()}

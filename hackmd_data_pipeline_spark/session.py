@@ -90,34 +90,27 @@ def arrow_local_df(spark: SparkSession, columns: dict, schema: str):
     return spark.createDataFrame(pd.DataFrame(columns), schema)
 
 
-def jvm_local_df(spark: SparkSession, jrows, schema):
-    """DataFrame over JVM-side rows (a ``java.util.List`` of ``Row``)
-    as a JVM local relation typed by EXACTLY ``schema`` — nullability
-    included, which every file-source read and expression-built frame
-    drops. Nothing crosses into Python, and the planner sees the true
-    (tiny) size: broadcastable, and pruned as empty when it is.
-    ``schema`` may be a StructType or a DDL string."""
+def empty_local_df(spark: SparkSession, schema):
+    """Empty DataFrame typed by EXACTLY ``schema`` (nullability
+    included) as a JVM local relation: nothing crosses into Python,
+    and the planner sees the true (zero) size — broadcastable, and
+    pruned as empty. ``schema`` may be a StructType or a DDL string.
+
+    ``spark.createDataFrame([], schema)`` builds a python-parallelized
+    relation of ``defaultParallelism`` EMPTY pickled slices — each
+    still costs a Python-worker round trip when evaluated, and a
+    downstream ``coalesce(1)`` walks all of them sequentially in one
+    task (measured 10.5 s for an EMPTY 32-slice relation on local[32],
+    r12). ``range(0)`` + typed null casts loses the declared
+    nullability, and ``createDataFrame(emptyRDD(), schema)`` keeps it
+    but plans as an RDD scan of unknown size (a left-anti join against
+    it became a SortMergeJoin: 0.80 s vs 0.008 s on 4 cores)."""
     from pyspark.sql import DataFrame
     from pyspark.sql import types as T
 
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     js = spark._jsparkSession
-    return DataFrame(js.createDataFrame(jrows, js.parseDataType(schema.json())),
+    return DataFrame(js.createDataFrame(spark._jvm.java.util.ArrayList(),
+                                        js.parseDataType(schema.json())),
                      spark)
-
-
-def empty_local_df(spark: SparkSession, schema):
-    """Empty DataFrame with exactly ``schema`` as a JVM local relation.
-
-    ``spark.createDataFrame([], schema)`` builds a python-parallelized
-    relation of ``defaultParallelism`` EMPTY pickled slices — each
-    still costs a Python-worker round trip when evaluated, and a
-    downstream ``coalesce(1)`` (the control-table generation write)
-    walks all of them sequentially in one task (measured 10.5 s for an
-    EMPTY 32-slice relation on local[32], r12). ``range(0)`` + typed
-    null casts loses the declared nullability, and
-    ``createDataFrame(emptyRDD(), schema)`` keeps it but plans as an
-    RDD scan of unknown size (a left-anti join against it became a
-    SortMergeJoin: 0.80 s vs 0.008 s on 4 cores)."""
-    return jvm_local_df(spark, spark._jvm.java.util.ArrayList(), schema)

@@ -10,6 +10,11 @@ UPDATE, and doesn't need them:
     Parquet directories rewritten wholesale, versioned by generation
     (write new generation, then flip a pointer file — atomic on a
     filesystem with atomic rename; analogous to a 1-row commit log).
+  * the generation file is written and read by the DRIVER through
+    Arrow (``DataFrame.toArrow`` -> ``pyarrow.parquet``, and back as a
+    local relation): a flip costs the one job that evaluates the new
+    state, a read costs none — where a Spark parquet write and a
+    collect each cost a job of their own.
   * the claim race disappears: Spark owns all parallelism, so claim =
     filter + order + limit on a single driver (plans/control.py), and
     the streaming path gets exactly-once file claiming from the
@@ -29,9 +34,11 @@ from pyspark.sql import types as T
 class ControlTable:
     """A small, whole-rewritten state table with generation flips.
 
-    Layout: ``{root}/gen={n}/`` parquet + ``{root}/_CURRENT`` pointer.
-    Readers read the pointed generation; writers write gen n+1 then
-    rename a temp pointer over _CURRENT (atomic on POSIX).
+    Layout: ``{root}/gen={n}/part-00000.parquet`` + ``{root}/_CURRENT``
+    pointer. Readers read the pointed generation; writers write gen n+1
+    then rename a temp pointer over _CURRENT (atomic on POSIX). The
+    driver writes and reads a generation through Arrow, so ``root``
+    must be a local path (the pointer flip already assumes one).
     """
 
     def __init__(self, spark: SparkSession, root: str, schema: T.StructType):
@@ -51,25 +58,36 @@ class ControlTable:
             return -1
 
     def read(self) -> DataFrame:
-        """The current generation typed by exactly ``self.schema`` on
-        both branches. A file-source read types every column nullable,
-        so the (tiny, by design) generation is collected JVM-side and
-        re-declared as a local relation — an eager snapshot that a
-        later generation GC cannot pull out from under the reader."""
-        from ..session import empty_local_df, jvm_local_df
+        """The current generation as a local relation typed by exactly
+        ``self.schema`` (nullability included), built without a Spark
+        job. An eager snapshot: a later generation GC cannot pull it
+        out from under the reader. Reading through the declared Arrow
+        schema also takes generations written by Spark itself (INT96
+        instants, which Arrow reads tz-naive) as UTC instants."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from ..session import empty_local_df
 
         gen = self.current_gen()
         if gen < 0:
             return empty_local_df(self.spark, self.schema)
-        rows = (self.spark.read.schema(self.schema)
-                .parquet(os.path.join(self.root, f"gen={gen}"))
-                ._jdf.collectAsList())
-        return jvm_local_df(self.spark, rows, self.schema)
+        table = pq.read_table(os.path.join(self.root, f"gen={gen}"),
+                              schema=to_arrow_schema(self.schema))
+        return self.spark.createDataFrame(table, self.schema)
 
     def write(self, df: DataFrame) -> int:
+        import pyarrow.parquet as pq
+
         gen = self.current_gen() + 1
         path = os.path.join(self.root, f"gen={gen}")
-        df.coalesce(1).write.mode("overwrite").parquet(path)
+        table = df.toArrow()
+        # a crash between this write and the flip leaves gen n+1
+        # unreferenced; the retry starts it over
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"),
+                       store_schema=False)
         tmp = self._pointer() + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(gen))

@@ -52,3 +52,21 @@ def local_df(spark, rows, schema):
         return spark.createDataFrame(rows, schema)
     cols = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
     return spark.createDataFrame(pd.DataFrame(cols), schema)
+
+
+def jobs_launched(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted through a job
+    group of its own once the listener bus has delivered every event
+    (the status tracker is fed asynchronously)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-launched-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -99,3 +99,20 @@ def test_collector_to_etl_roundtrip(spark, collected, tmp_path):
     assert counts["canonical"] == 5 * len(CATS) + 2
     papers = spark.read.parquet(str(tmp_path / "out" / "papers"))
     assert papers.filter(F.col("primary_category") == "cs.CL").count() == 7
+
+
+def test_known_ids_fresh_and_populated_root(spark, collected, tmp_path):
+    """A root with no raw history yet has no known ids (an empty
+    ``entry_id string`` frame, not a swallowed read error); a populated
+    root returns every id it wrote."""
+    from pyspark.sql import types as T
+
+    fresh = Collector(spark, str(tmp_path / "fresh"), _fake_fetch,
+                      CATS).known_ids()
+    assert fresh.schema == T.StructType.fromDDL("entry_id string")
+    assert fresh.count() == 0
+    c, _, _ = collected
+    ids = {r.entry_id for r in c.known_ids().collect()}
+    assert ids == {f"http://example.org/abs/{cat}.{i}"
+                   for cat in CATS for i in range(5)} | {
+        f"http://example.org/abs/shared.{i}" for i in range(2)}

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from hackmd_data_pipeline_spark.etl import (
@@ -296,3 +297,70 @@ def test_composed_pipeline_kill_restart_exactly_once(spark, tmp_path):
     assert attempts["collect"] >= 3      # claimed-kill + done-kill + success
     assert attempts["ingest"] >= 3       # batch-kill + done-kill + success
     assert attempts["finalize"] >= 2
+
+
+def test_ledger_mark_launches_at_most_one_job(spark, tmp_path):
+    """A ledger flip is its generation write and nothing else: no
+    read-back of the ledger, no separate collect."""
+    from .conftest import jobs_launched
+
+    p = CorpusPipeline(spark, str(tmp_path / "mark"), _fetch, CATEGORIES)
+    for status in ("processing", "finished"):
+        assert jobs_launched(
+            spark, lambda: p._mark("collect", status, 1)) <= 1
+    assert {r.stage: r.status for r in p.ledger.read().collect()} == {
+        "collect": "finished"}
+
+
+@pytest.fixture(scope="module", params=[False, True], ids=["float", "q8"])
+def clean_run(request, spark, tmp_path_factory):
+    """One uninterrupted run per embedding storage posture, with every
+    ``ledger.read`` call counted."""
+    p = CorpusPipeline(spark, str(tmp_path_factory.mktemp("clean")), _fetch,
+                       CATEGORIES, emb_quantize=request.param)
+    reads = []
+    read = p.ledger.read
+    p.ledger.read = lambda: reads.append(1) or read()
+    summary = p.run()
+    p.ledger.read = read
+    return p, summary, len(reads)
+
+
+def test_run_reads_ledger_once(clean_run):
+    _, _, n_reads = clean_run
+    assert n_reads == 1
+
+
+def test_run_summary_counts_match_outputs(spark, clean_run):
+    """Every count a stage reports equals a read-back count of the
+    output it wrote."""
+    p, summary, _ = clean_run
+    o = p.outputs()
+
+    def n(name: str, where=None) -> int:
+        df = spark.read.parquet(o.get(name) or f"{p.root}/corpus/{name}")
+        return (df if where is None else df.filter(where)).count()
+
+    assert summary["ingest"] == {"canonical": n("canonical"),
+                                 "history": n("history"),
+                                 "quarantine": 0}
+    assert summary["build_documents"] == {"documents": n("documents")}
+    assert summary["curate"] == {"kept": n("kept_documents.parquet")}
+    assert summary["resolve"] == {"resolved": n("resolved")}
+    assert summary["audit_spans"] == {
+        "audited_kept": n("audited"),
+        "dropped_verbatim": n("resolved") - n("audited")}
+    assert summary["annotate"] == {
+        "annotated": n("annotated"),
+        "with_topic": n("annotated", F.col("topic").isNotNull()),
+        "quality_kept": n("annotated", F.col("quality_keep"))}
+    assert summary["index_embeddings"] == {
+        "indexed": n("embeddings"), "skipped": 0,
+        "bootstrapped": True, "maintained": False}
+    assert summary["finalize"] == {
+        "final_docs": n("corpus"),
+        "sequences": spark.read.parquet(o["packed"])
+        .select("seq_id").distinct().count()}
+    assert (summary["curate"]["kept"], summary["resolve"]["resolved"],
+            summary["audit_spans"]["audited_kept"]) == (
+        N_RESOLVED + 2, N_RESOLVED, N_AUDITED)

@@ -169,6 +169,59 @@ def test_control_table_read_returns_declared_schema(spark, tmp_path):
         assert written.to(schema).count() == (0 if seed is None else seed.count())
 
 
+def test_control_table_read_launches_no_job(spark, tmp_path):
+    """The driver reads a generation through Arrow into a local
+    relation: neither the empty branch nor the parquet branch costs a
+    Spark job, and the snapshot collects without one either."""
+    from .conftest import jobs_launched
+
+    table = ControlTable(spark, str(tmp_path / "jobs"), RAW_BATCHES_SCHEMA)
+    assert jobs_launched(spark, table.read) == 0
+    table.write(_seed_batches(spark))
+    snap = []
+    assert jobs_launched(spark, lambda: snap.append(table.read())) == 0
+    assert jobs_launched(spark, snap[0].collect) == 0
+    assert snap[0].count() == 7
+
+
+def test_control_table_timestamps_survive_non_utc_session(spark, tmp_path,
+                                                          monkeypatch):
+    """A written ``updated_at`` reads back as the same instant when
+    both the driver process and the Spark session run in a non-UTC
+    zone — for generations written through Arrow and for one written
+    by Spark itself (INT96, which Arrow reads tz-naive)."""
+    import os
+    import time
+
+    from hackmd_data_pipeline_spark.etl import STAGE_LEDGER_SCHEMA
+
+    epoch = 1767225600                      # 2026-01-01T00:00:00Z
+    prior_tz = spark.conf.get("spark.sql.session.timeZone")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        row = spark.range(1).select(
+            F.lit("s").alias("stage"), F.lit("finished").alias("status"),
+            F.lit(1).alias("attempt"),
+            F.timestamp_seconds(F.lit(epoch)).alias("updated_at"))
+        table = ControlTable(spark, str(tmp_path / "tz"), STAGE_LEDGER_SCHEMA)
+        table.write(row)
+        legacy = ControlTable(spark, str(tmp_path / "legacy"),
+                              STAGE_LEDGER_SCHEMA)
+        row.coalesce(1).write.parquet(os.path.join(legacy.root, "gen=0"))
+        with open(os.path.join(legacy.root, "_CURRENT"), "w") as f:
+            f.write("0")
+        for t in (table, legacy):
+            back = t.read()
+            assert back.select(F.unix_seconds("updated_at")).first()[0] == epoch
+            assert back.first().updated_at.timestamp() == epoch
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior_tz)
+        monkeypatch.undo()
+        time.tzset()
+
+
 # --------------------------------------------------------------- streaming
 
 
