@@ -14,6 +14,6 @@ Reusable, scale-designed implementations:
     zorder.py       Morton-curve clustering;  rollup.py  incremental +
                     sketch rollup maintenance
     sampling.py     splits/rebalancing;  packing.py  sequence packing
-    scd.py          SCD2 merge;  maintenance.py  compaction, global ids
+    maintenance.py  small-file compaction, partition retention
     prefix.py       distributed prefix sum (frozen range partitioning)
 """

@@ -20,9 +20,6 @@ aggregate) stays JVM-side in the registry query.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .checkpointing import iter_checkpoint_eager
 
 _END = "</w>"
 
@@ -79,90 +76,6 @@ def train_merges_from_word_freq(
             key = tuple(out)
             new_freq[key] = new_freq.get(key, 0) + freq
         word_freq = new_freq
-    return merges
-
-
-def train_bpe_merges_distributed(df: DataFrame, text_col: str = "text",
-                                 n_merges: int = 64,
-                                 checkpoint_every: int = 8,
-                                 ) -> list[tuple[str, str]]:
-    """Corpus-wide BPE training: the same sequential algorithm as
-    ``train_bpe_merges``, but every merge round's pair statistics are
-    computed over the WHOLE corpus distributedly (VERDICT r05 item 7 —
-    the ``docs_bpe_pair_counts`` query's aggregation, iterated).
-
-    BPE operates on the word-frequency table, not the corpus: the
-    corpus is scanned ONCE (tokenize -> explode -> count by word), and
-    every round thereafter runs on the distinct-word frame — bounded
-    by vocabulary size, which grows sub-linearly in corpus bytes, so
-    at 100 TB the per-round working set is millions of rows, not the
-    corpus. Per round: one shuffle (pair-count groupBy), a ONE-ROW
-    driver collect of the winning pair (bounded control data), and a
-    narrow JVM-side fold (``F.aggregate``) applying the merge
-    greedily left-to-right — identical semantics to the driver loop.
-    The word frame is checkpointed every ``checkpoint_every`` rounds
-    (iter_checkpoint_eager — reliable mode when a checkpoint dir is
-    configured, operators/checkpointing.py) so the k-round lineage
-    never compounds and survives executor loss on a real cluster.
-
-    Tie-breaking matches ``train_bpe_merges`` exactly (max by
-    (freq, a, b)); the equivalence contract — identical merge lists
-    when the sample path sees the full corpus — is pinned in
-    tests/test_bpe.py. Tokenization caveat shared with the driver
-    path: symbols are UTF-16 code units JVM-side vs code points in
-    Python, identical on BMP text.
-    """
-    from .checkpointing import CheckpointRotator
-
-    rotator = CheckpointRotator(df.sparkSession)
-    words = (
-        df.select(F.explode(F.split(F.lower(F.trim(F.col(text_col))),
-                                    "[ \\t\\n\\x0B\\f\\r]+")).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w").agg(F.count("*").alias("freq"))
-        .select(F.concat(F.split("w", ""), F.array(F.lit(_END)))
-                .alias("symbols"), "freq")
-        .transform(iter_checkpoint_eager)
-    )
-    rotator.rotate()
-
-    def merge_fold(a: str, b: str):
-        ab = F.lit(a + b)
-        return F.aggregate(
-            F.col("symbols"), F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0) & (F.element_at(acc, -1) == F.lit(a))
-                & (x == F.lit(b)),
-                F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1),
-                         F.array(ab)),
-            ).otherwise(F.concat(acc, F.array(x))))
-
-    merges: list[tuple[str, str]] = []
-    for rnd in range(n_merges):
-        n = F.size("symbols")
-        best = (
-            words.filter(n >= 2)
-            .select("freq",
-                    F.explode(F.arrays_zip(
-                        F.slice("symbols", 1, n - 1).alias("a"),
-                        F.slice("symbols", 2, n - 1).alias("b"))).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("freq"))
-            .orderBy(F.col("freq").desc(), F.col("a").desc(),
-                     F.col("b").desc())
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0].freq < 2:
-            break
-        a, b = best[0].a, best[0].b
-        merges.append((a, b))
-        words = words.select(merge_fold(a, b).alias("symbols"), "freq")
-        if (rnd + 1) % checkpoint_every == 0:
-            words = words.transform(iter_checkpoint_eager)
-            # eager: the new word frame is on disk -> the superseded
-            # checkpoint's files are deletable (r07 ADVICE GC)
-            rotator.rotate()
     return merges
 
 
@@ -254,9 +167,8 @@ def bpe_encode_stats(df: DataFrame, merges: list[tuple[str, str]],
 # path can be value-oracled cross-engine (the pinned-quantizer recipe
 # of operators/similarity.py::pinned_centroids). Real pipelines ship
 # the tokenizer as exactly this kind of fixed artifact; training
-# itself stays covered by the docs_bpe_pair_counts oracle, the
-# sequential contracts in tests/test_bpe.py, and the distributed-vs-
-# driver equivalence test.
+# itself stays covered by the docs_bpe_pair_counts oracle and the
+# sequential contracts in tests/test_bpe.py.
 PINNED_BPE_MERGES: list[tuple[str, str]] = [
     ('e', 'r'), ('e', '</w>'), ('n', '</w>'), ('er', '</w>'),
     ('w', '</w>'), ('o', 'w</w>'), ('o', 'r'), ('s', 't'),

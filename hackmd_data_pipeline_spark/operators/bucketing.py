@@ -20,7 +20,7 @@ shuffle-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
@@ -49,15 +49,3 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def colocated_join(spark: SparkSession, left_table: str, right_table: str,
-                   on: list[str], how: str = "inner") -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key.
-
-    With both sides bucketed identically this plans a sort-merge join
-    with NO Exchange on either side (asserted in
-    tests/test_bucketing.py) — output partitioning is the stored
-    bucketing, so downstream same-key aggs stay shuffle-free too.
-    """
-    return spark.table(left_table).join(spark.table(right_table), on, how)

@@ -2,9 +2,8 @@
 (r06 VERDICT item 3).
 
 The iterative operators (connected-components min-label propagation in
-operators/dedup.py, PageRank in operators/graph.py, the distributed
-BPE trainer in operators/bpe.py) must truncate their per-round lineage
-or the plan grows quadratically. ``localCheckpoint`` does that by
+operators/dedup.py, PageRank in operators/graph.py) must truncate their
+per-round lineage or the plan grows quadratically. ``localCheckpoint`` does that by
 storing blocks in EXECUTOR storage — fast, zero configuration, and the
 right default on local[*] — but on a real cluster those blocks die
 with their executor: one lost node makes the truncated lineage
@@ -23,7 +22,7 @@ Configure either way:
     because SparkConf entries cannot call setCheckpointDir themselves).
 
 Both modes produce identical results by contract —
-tests/test_checkpointing.py pins CC and distributed-BPE outputs equal
+tests/test_checkpointing.py pins CC outputs equal
 across modes and proves the reliable path actually writes checkpoint
 files.
 """
@@ -93,13 +92,6 @@ def iter_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def iter_checkpoint_eager(df: DataFrame) -> DataFrame:
-    """``iter_checkpoint`` with eager materialization — for call sites
-    whose next action is a driver collect that must not re-execute the
-    lineage (``.transform``-friendly form)."""
-    return iter_checkpoint(df, eager=True)
-
-
 class CheckpointRotator:
     """Deterministic reliable-checkpoint GC for iterative operators
     (r07 ADVICE medium).
@@ -108,7 +100,7 @@ class CheckpointRotator:
     ``<ckptRoot>/<contextUuid>/rdd-<id>/`` per checkpointed round and
     Spark itself only ever deletes those with
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` PLUS a
-    driver GC that happens to collect the RDD — so a long CC/BPE job
+    driver GC that happens to collect the RDD — so a long CC job
     grows the checkpoint dir by rounds x state size until disk
     exhaustion. (session.py sets that conf as the eventual-GC backstop
     for one-shot checkpoints; this class is the deterministic per-round

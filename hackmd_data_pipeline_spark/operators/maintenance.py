@@ -1,5 +1,5 @@
-"""Table-maintenance operators: small-file compaction and stable
-global id assignment.
+"""Table-maintenance operators: small-file compaction and partition
+retention.
 
 Small files are the silent killer of a 100 TB lake: a micro-batched
 ingest (the reference writes ~100-record gz objects, reference
@@ -7,14 +7,6 @@ config/config.yaml:16) leaves millions of tiny files whose per-file
 open/footer cost dominates scans. Compaction rewrites a table's files
 to a target size — metadata-driven (file listing), no shuffle beyond
 the coalesce.
-
-Global ids: training pipelines need a dense, stable ``0..n-1``
-numbering (shard assignment, shuffling, sampling). A naive
-``monotonically_increasing_id`` is neither dense nor stable;
-``zipWithIndex`` forces an RDD round-trip. The two-pass DataFrame
-form below counts rows per partition, prefix-sums the offsets on the
-driver (one tiny collect of num-partitions longs), and adds the
-offset to a per-partition row number — one extra job, no shuffle.
 """
 
 from __future__ import annotations
@@ -22,8 +14,7 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 
 def table_file_stats(spark: SparkSession, path: str) -> dict:
@@ -55,45 +46,6 @@ def compact(spark: SparkSession, path: str, target_file_bytes: int = 128 << 20,
     df.coalesce(n_files).write.mode("overwrite").parquet(out)
     return {"before": before, "after": table_file_stats(spark, out),
             "dest": out}
-
-
-def assign_global_ids(df: DataFrame, id_name: str = "global_id") -> DataFrame:
-    """Dense, gap-free ``0..n-1`` ids in partition-then-row order.
-
-    Pass 1 counts rows per partition (cheap agg on
-    spark_partition_id); the prefix-sum offsets — one long per
-    partition — broadcast back implicitly via the join on partition
-    id. No global sort, no single-partition window (the
-    row_number-over-empty-window trap that serializes the whole
-    dataset through one task).
-    """
-    counts = sorted(
-        (r._pid, r.n) for r in
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid").agg(F.count("*").alias("n")).collect())
-    offsets, acc = {}, 0
-    for pid, n in counts:
-        offsets[pid] = acc
-        acc += n
-
-    def add_ids(iterator):
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        next_id = offsets.get(pid, 0)
-        for pdf in iterator:
-            pdf = pdf.copy()
-            pdf[id_name] = range(next_id, next_id + len(pdf))
-            next_id += len(pdf)
-            yield pdf
-
-    # pass 2 is pure mapInPandas on the SAME partitioning (partition
-    # ids are stable for a deterministic source plan), so the id
-    # assignment itself incurs zero shuffle. (Fresh StructType — .add
-    # on df.schema would mutate the DataFrame's cached schema object.)
-    from pyspark.sql import types as T
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(id_name, T.LongType())])
-    return df.mapInPandas(add_ids, out_schema)
 
 
 def retention_sweep(spark: SparkSession, path: str, partition_col: str,

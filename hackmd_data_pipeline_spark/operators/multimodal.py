@@ -22,20 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("modality", T.StringType()),      # image|audio|video
-    T.StructField("mime", T.StringType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("meta", T.StructType([
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ])),
-])
-
 FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("modality", T.StringType()),

@@ -211,20 +211,6 @@ def merge_rollup_sketch_batch(batch: DataFrame, dest: str,
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
 
-def sketch_rollup_estimates(spark, dest: str,
-                            key_cols: Sequence[str] = ("event_type",)) -> DataFrame:
-    """Read back the sketch rollup as human-facing estimates:
-    per-(date, keys) distinct users, plus nothing else — the binary
-    state stays in storage."""
-    return (
-        spark.read.parquet(dest)
-        .select("event_date", *key_cols,
-                F.hll_sketch_estimate("users_hll").alias("est_distinct_users"),
-                "n_events")
-        .orderBy("event_date", *key_cols)
-    )
-
-
 # --------------------------------------------------------------------
 # Exactly-once rollup maintenance: delta-epoch layout
 #
@@ -326,25 +312,6 @@ def append_rollup_delta(batch: DataFrame, dest: str, epoch_id: int,
     delta.write.mode("overwrite").parquet(f"{dest}/deltas/epoch={epoch_id}")
 
 
-def _store_parts(spark: SparkSession, dest: str) -> list[DataFrame]:
-    """(active generation data) + (pending delta frames) of any
-    delta-epoch store using this layout — the raw parts a store's
-    merge fn folds. Layout-generic: also backs the streaming Bloom
-    membership store (streaming/membership.py)."""
-    from ..sources.fs import fs_exists
-
-    gen = _active_gen(spark, dest)
-    absorbed = _absorbed_epochs(spark, dest, gen)
-    pending = _pending_deltas(spark, dest, absorbed)
-
-    parts = []
-    if gen and fs_exists(spark, f"{dest}/gen-{gen}/data/_SUCCESS"):
-        parts.append(spark.read.parquet(f"{dest}/gen-{gen}/data"))
-    parts.extend(spark.read.parquet(f"{dest}/deltas/epoch={e}")
-                 for e in pending)
-    return parts
-
-
 def read_rollup(spark: SparkSession, dest: str, kind: str = "plain",
                 key_cols: Sequence[str] = ("event_type",)) -> DataFrame:
     """Merged view over (active generation) + (pending deltas).
@@ -352,9 +319,16 @@ def read_rollup(spark: SparkSession, dest: str, kind: str = "plain",
     Read cost grows with the number of un-compacted deltas — run
     ``compact_rollup`` periodically (its absence never affects
     correctness, only read amplification)."""
-    assert kind in _ROLLUP_KINDS
+    from ..sources.fs import fs_exists
 
-    parts = _store_parts(spark, dest)
+    assert kind in _ROLLUP_KINDS
+    gen = _active_gen(spark, dest)
+    absorbed = _absorbed_epochs(spark, dest, gen)
+    parts = []
+    if gen and fs_exists(spark, f"{dest}/gen-{gen}/data/_SUCCESS"):
+        parts.append(spark.read.parquet(f"{dest}/gen-{gen}/data"))
+    parts.extend(spark.read.parquet(f"{dest}/deltas/epoch={e}")
+                 for e in _pending_deltas(spark, dest, absorbed))
     if not parts:
         raise ValueError(f"empty rollup store at {dest}")
     df = parts[0]
@@ -363,14 +337,16 @@ def read_rollup(spark: SparkSession, dest: str, kind: str = "plain",
     return _rollup_merge(df, kind, key_cols)
 
 
-def _compact_generic(spark: SparkSession, dest: str, read_fn) -> dict:
-    """Generation-flip compaction core, shared by every delta-epoch
-    store: fold the merged view (``read_fn()``) into gen-<k+1>, write
-    the absorbed-epoch ledger, flip the ``_current`` pointer, clean
-    stale dirs. Crash-safe at every boundary (see layout comment) and
-    idempotent to re-runs."""
+def compact_rollup(spark: SparkSession, dest: str, kind: str = "plain",
+                   key_cols: Sequence[str] = ("event_type",)) -> dict:
+    """Fold pending deltas into a new generation and flip the pointer.
+
+    Safe to crash anywhere (see layout comment) and safe to re-run;
+    returns {'gen': new_gen, 'absorbed': n_epochs_total}."""
+    from ..session import arrow_local_df
     from ..sources.fs import fs_write_text
 
+    assert kind in _ROLLUP_KINDS
     gen = _active_gen(spark, dest)
     absorbed = _absorbed_epochs(spark, dest, gen)
     pending = _pending_deltas(spark, dest, absorbed)
@@ -378,13 +354,11 @@ def _compact_generic(spark: SparkSession, dest: str, read_fn) -> dict:
         _cleanup_rollup(spark, dest, gen, absorbed)
         return {"gen": gen, "absorbed": len(absorbed)}
 
-    merged = read_fn().localCheckpoint(
+    merged = read_rollup(spark, dest, kind, key_cols).localCheckpoint(
         eager=True)  # materialize BEFORE touching directories
     new_gen = gen + 1
     merged.write.mode("overwrite").parquet(f"{dest}/gen-{new_gen}/data")
     all_epochs = sorted(absorbed | set(pending))
-    from ..session import arrow_local_df
-
     # Arrow local relation: plain createDataFrame + coalesce(1) pays
     # ~0.2 s per Python partition sequentially (session.arrow_local_df)
     (arrow_local_df(spark, {"epoch": [int(e) for e in all_epochs]},
@@ -394,17 +368,6 @@ def _compact_generic(spark: SparkSession, dest: str, read_fn) -> dict:
     fs_write_text(spark, dest + "/_current", f"gen-{new_gen}")
     _cleanup_rollup(spark, dest, new_gen, set(all_epochs))
     return {"gen": new_gen, "absorbed": len(all_epochs)}
-
-
-def compact_rollup(spark: SparkSession, dest: str, kind: str = "plain",
-                   key_cols: Sequence[str] = ("event_type",)) -> dict:
-    """Fold pending deltas into a new generation and flip the pointer.
-
-    Safe to crash anywhere (see layout comment) and safe to re-run;
-    returns {'gen': new_gen, 'absorbed': n_epochs_total}."""
-    assert kind in _ROLLUP_KINDS
-    return _compact_generic(
-        spark, dest, lambda: read_rollup(spark, dest, kind, key_cols))
 
 
 def _cleanup_rollup(spark: SparkSession, dest: str, active_gen: int,

@@ -494,35 +494,20 @@ def build_ivf_index(corpus: DataFrame, dest: str, nlist: int = 16,
     """
     cents = centroids if centroids is not None else _train_quantizer(
         corpus, nlist, vec_col, seed=seed, sample_cap=sample_cap)
-
-    def write_data() -> None:
-        (_cell_assigner(corpus.select(id_col, vec_col), cents, vec_col)
-         # one shuffle on cell at build time buys ONE file per cell dir
-         # forever after: without it every write task emits a fragment
-         # into every cell it touches (~2.5 files/cell measured at the
-         # 100x sweep), and the probed-cell scan pays the per-file open
-         # cost on every search (r08 — the compact_store small-files
-         # lesson applied at write time)
-         .repartition(F.col("cell"))
-         .write.partitionBy("cell").mode("overwrite").parquet(dest + "/data"))
-
-    spark = corpus.sparkSession
-
-    def write_centroids() -> None:
-        (_centroid_df(spark, cents)
-         .coalesce(1).write.mode("overwrite").parquet(dest + "/centroids"))
-
-    # the two writes are independent once the quantizer is trained
-    # (cents is a driver-side array) — overlap them (guide §2.6) so
-    # the kilobyte centroid write rides the data write's tail instead
-    # of paying its own serial job slot; both futures are joined
-    # before return, so callers still see a complete index
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(write_data), pool.submit(write_centroids)]
-        for f in futs:
-            f.result()
+    (_cell_assigner(corpus.select(id_col, vec_col), cents, vec_col)
+     # one shuffle on cell at build time buys ONE file per cell dir
+     # forever after: without it every write task emits a fragment
+     # into every cell it touches (~2.5 files/cell measured at the
+     # 100x sweep), and the probed-cell scan pays the per-file open
+     # cost on every search (r08 — the compact_store small-files
+     # lesson applied at write time)
+     .repartition(F.col("cell"))
+     .write.partitionBy("cell").mode("overwrite").parquet(dest + "/data"))
+    # centroids last, in the caller's thread: they key _CENTROID_CACHE,
+    # so they must never be published over cell data that failed to
+    # write, and the write keeps the caller's job group and tags
+    (_centroid_df(corpus.sparkSession, cents)
+     .coalesce(1).write.mode("overwrite").parquet(dest + "/centroids"))
 
 
 # driver-side quantizer cache: a published index's centroids are

@@ -35,7 +35,6 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.joins import bounded_anti_join
 from ..operators.similarity import (
@@ -115,15 +114,6 @@ def run_ann_index_ingest(spark: SparkSession, vecs_path: str,
     return counts
 
 
-def maintenance_due(spark: SparkSession, index_path: str,
-                    max_deltas: int = 16) -> bool:
-    """True when outstanding delta generations exceed ``max_deltas`` —
-    the caller's cue to ``compact_ivf_index`` into a fresh directory
-    and swap pointers (read amplification is what accumulates; an
-    uncompacted index stays correct)."""
-    return len(ivf_delta_epochs(spark, index_path)) > max_deltas
-
-
 def maintain_ivf_index(spark: SparkSession, ptr_dir: str,
                        max_deltas: int = 16,
                        max_drift: float | None = None,
@@ -192,36 +182,3 @@ def maintain_ivf_index(spark: SparkSession, ptr_dir: str,
             fs_delete(spark, old)
     return {"compacted": True, "current": fresh, "previous": cur,
             "n_deltas": n_deltas, "l1_drift": drift}
-
-
-def run_vector_deletion_stream(spark: SparkSession, requests_path: str,
-                               checkpoint: str,
-                               index_path: str) -> dict[str, int]:
-    """Right-to-be-forgotten propagation for the vector index (the
-    ``streaming/neardup.py::run_deletion_stream`` twin): drain
-    deletion-request parquet drops (``vec_id`` rows) into
-    ``remove_vectors`` per micro-batch — tombstones commit
-    continuously, every search excludes the ids immediately, and the
-    next ``compact_ivf_index`` drops the rows physically.
-    At-least-once replay converges (re-tombstoning dead ids is a
-    cumulative-distinct no-op). Returns ``{"requests": n}``."""
-    from pyspark.sql import types as T
-
-    from ..operators.similarity import remove_vectors
-
-    counts = {"requests": 0}
-    schema = T.StructType().add("vec_id", T.LongType())
-
-    def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.dropDuplicates(["vec_id"])
-        if not batch.count():
-            return
-        counts["requests"] += remove_vectors(batch, index_path)
-
-    stream = spark.readStream.schema(schema).parquet(requests_path)
-    q = (stream.writeStream.foreachBatch(handle_batch)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return counts

@@ -278,45 +278,6 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
     return {"ingested": counts["ingested"], "clustered": clustered}
 
 
-def run_deletion_stream(spark: SparkSession, requests_path: str,
-                        checkpoint: str, store_dest: str) -> dict[str, int]:
-    """Right-to-be-forgotten PROPAGATION as a stream (r08): drain
-    deletion-request parquet drops (``doc_id`` rows — the shape a
-    compliance queue produces) into ``operators/dedup_store.py::
-    remove_docs`` per micro-batch, so tombstones commit and clusters
-    repair continuously, without a maintenance window.
-
-    At-least-once replay converges: a replayed batch re-tombstones
-    already-dead ids (cumulative distinct — harmless) and its repair
-    recomputes against the current resolved view, appending a
-    value-identical overlay (the update_clusters replay posture).
-    Returns ``{"requests": n, "retired": n, "relabeled": n}``."""
-    from pyspark.sql import types as T
-
-    from ..operators.dedup_store import remove_docs
-
-    counts = {"requests": 0, "retired": 0, "relabeled": 0}
-    schema = T.StructType().add("doc_id", T.LongType())
-
-    def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.dropDuplicates(["doc_id"])
-        n = batch.count()
-        if n == 0:
-            return
-        stats = remove_docs(batch, store_dest)
-        counts["requests"] += n
-        counts["retired"] += stats["n_retired"]
-        counts["relabeled"] += stats["n_relabeled"]
-
-    stream = spark.readStream.schema(schema).parquet(requests_path)
-    q = (stream.writeStream.foreachBatch(handle_batch)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return counts
-
-
 def run_span_ingest(spark: SparkSession, docs_path: str, out_root: str,
                     checkpoint: str, store_dest: str,
                     id_col: str = "doc_id", text_col: str = "text",

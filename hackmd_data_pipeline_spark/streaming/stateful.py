@@ -4,13 +4,12 @@ The reference has no custom per-key state beyond its Postgres control
 tables; a streaming engine needs one. This module implements
 per-user session tracking with ``applyInPandasWithState`` — the
 Spark-native building block for operator semantics that watermarked
-windows can't express (running per-key aggregates with custom expiry
-logic).
+windows can't express (running per-key aggregates across micro-batches).
 
 Scale posture: state is partitioned by the grouping key across
 executors and checkpointed by the streaming engine; each micro-batch
-touches only keys present in the batch plus timed-out state. The
-pandas UDF sees Arrow batches per key — no row-at-a-time Python.
+touches only keys present in the batch. The pandas UDF sees Arrow
+batches per key — no row-at-a-time Python.
 """
 
 from __future__ import annotations
@@ -68,64 +67,5 @@ def track_sessions(events: DataFrame) -> DataFrame:
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-class RunningTotalsProcessor:
-    """``transformWithStateInPandas`` twin of :func:`track_sessions` —
-    the Spark-4-native arbitrary-state API (SPARK-46815): typed state
-    handles (ValueState here; ListState/MapState/timers/TTL available)
-    instead of a single packed tuple, backed by the RocksDB state
-    store. Kept semantically IDENTICAL to the legacy operator so the
-    equivalence test pins both APIs to one contract.
-
-    Defined lazily as a plain class (pyspark's StatefulProcessor ABC
-    imported at call time) so importing this module never requires the
-    streaming-state machinery."""
-
-    def init(self, handle):  # StatefulProcessorHandle
-        self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        n, v = (0, 0.0)
-        if self._totals.exists():
-            n, v = self._totals.get()
-        for pdf in rows:
-            n += len(pdf)
-            v += float(pdf["value"].sum())
-        self._totals.update((n, v))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "value_sum": [v]})
-
-    def close(self):
-        pass
-
-
-def track_sessions_tws(events: DataFrame) -> DataFrame:
-    """Running per-user totals via ``transformWithStateInPandas``.
-
-    Same contract as :func:`track_sessions`; requires the RocksDB
-    state store provider (``spark.sql.streaming.stateStore.
-    providerClass`` — the new API refuses the default HDFS-backed
-    store) and the ``protobuf`` python package at runtime (the state
-    server speaks protobuf to the python worker; standard in a
-    ``pyspark[connect]`` install, absent in this test container, so
-    the equivalence test is import-gated). State layout here is a named ValueState per key; at 100 TB
-    the posture is identical to the legacy operator (state partitioned
-    by key, only touched keys per micro-batch) with finer-grained
-    store updates."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _P(RunningTotalsProcessor, StatefulProcessor):
-        pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_P(),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )

@@ -75,34 +75,6 @@ def test_pinned_merge_artifact_provenance(spark):
     assert train_bpe_merges(d, n_merges=64) == PINNED_BPE_MERGES
 
 
-def test_bpe_distributed_training_equals_driver_path(spark):
-    """VERDICT r05 item 7: the distributed per-round pair-count
-    trainer must learn the IDENTICAL merge list as the driver-side
-    sample path when the sample covers the full corpus — same greedy
-    algorithm, same (freq, a, b) tie-break, round for round."""
-    from hackmd_data_pipeline_spark.operators.bpe import (
-        train_bpe_merges_distributed)
-
-    d = load_table(spark, SF_SMOKE, "documents").filter(
-        F.col("doc_id") < 150)
-    drv = train_bpe_merges(d, n_merges=24, sample_cap=1_000_000)
-    dist = train_bpe_merges_distributed(d, n_merges=24)
-    assert dist == drv
-    # and the learned merges drive the same encode path
-    stats = bpe_encode_stats(d.filter(F.length(F.trim("text")) > 0), dist)
-    assert stats.filter(F.col("n_bpe_tokens") < F.col("n_words")).count() == 0
-
-
-def test_bpe_distributed_training_early_stop(spark):
-    """A corpus with no pair reaching freq >= 2 stops before n_merges
-    (the driver path's early-exit contract, distributed form)."""
-    from hackmd_data_pipeline_spark.operators.bpe import (
-        train_bpe_merges_distributed)
-
-    df = spark.createDataFrame([(0, "ab cd ef")], "doc_id long, text string")
-    assert train_bpe_merges_distributed(df, n_merges=8) == []
-
-
 def test_encode_cte_oracle_equivalence_hypothesis():
     """The r06 promotion's load-bearing claim, fuzzed beyond the
     corpus: for ARBITRARY word sets and merge lists trained on them,

@@ -13,8 +13,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from hackmd_data_pipeline_spark.operators.bucketing import (
-    colocated_join, write_bucketed)
+from hackmd_data_pipeline_spark.operators.bucketing import write_bucketed
 from hackmd_data_pipeline_spark.tables import load_table
 
 from .conftest import SF_CORRECT
@@ -66,9 +65,9 @@ def test_colocated_join_no_shuffle(spark, bucketed):
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        joined = colocated_join(
-            spark, "orders_b", "lineitem_b", on=["orderkey"]
-        ).select("orderkey", "o_totalprice", "l_extendedprice")
+        joined = (spark.table("orders_b")
+                  .join(spark.table("lineitem_b"), ["orderkey"])
+                  .select("orderkey", "o_totalprice", "l_extendedprice"))
         plan = _plan(joined)
         assert "SortMergeJoin" in plan
         assert not N_SHUFFLE.search(plan), f"bucketed join shuffled:\n{plan}"
@@ -95,6 +94,6 @@ def test_colocated_join_values_match_plain_join(spark, bucketed):
     o = load_table(spark, SF_CORRECT, "orders")
     li = load_table(spark, SF_CORRECT, "lineitem")
     want = o.join(li, o.o_orderkey == li.l_orderkey).count()
-    got = colocated_join(spark, "orders_b", "lineitem_b",
-                         on=["orderkey"]).count()
+    got = spark.table("orders_b").join(spark.table("lineitem_b"),
+                                       ["orderkey"]).count()
     assert got == want

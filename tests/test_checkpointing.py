@@ -13,7 +13,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hackmd_data_pipeline_spark.operators.bpe import train_bpe_merges_distributed
 from hackmd_data_pipeline_spark.operators.checkpointing import (
     iter_checkpoint,
     reliable_checkpoint_dir,
@@ -142,44 +141,15 @@ def test_rotator_deletes_superseded_keeps_live(spark, reliable_dir):
     swept by the cleaner), rotate twice, and check round 1's files are
     gone while round 2's still serve reads."""
     from hackmd_data_pipeline_spark.operators.checkpointing import (
-        CheckpointRotator,
-        iter_checkpoint_eager,
-    )
+        CheckpointRotator)
     rot = CheckpointRotator(spark)
-    df1 = iter_checkpoint_eager(spark.range(100))
+    df1 = iter_checkpoint(spark.range(100), eager=True)
     rot.rotate()
     dirs1 = set(_rdd_dirs(spark))
     assert dirs1, "eager reliable checkpoint wrote nothing"
-    df2 = iter_checkpoint_eager(df1.withColumn("y", F.col("id") * 2))
+    df2 = iter_checkpoint(df1.withColumn("y", F.col("id") * 2), eager=True)
     rot.rotate()
     dirs2 = set(_rdd_dirs(spark))
     assert not (dirs1 & dirs2), "superseded round's files not deleted"
     assert dirs2, "live round's files must survive rotation"
     assert df2.count() == 100  # live data still readable post-rotate
-
-
-def test_bpe_reliable_rounds_are_rotated(spark, reliable_dir):
-    docs = spark.createDataFrame(
-        [(i, "abc abd abe " * 4) for i in range(4)],
-        "doc_id long, text string")
-    merges = train_bpe_merges_distributed(docs, n_merges=9,
-                                          checkpoint_every=2)
-    assert len(merges) > 0
-    assert len(_rdd_dirs(spark)) <= 2, (
-        "superseded BPE word-frame checkpoints not rotated")
-
-
-def test_bpe_merges_identical_across_modes(spark, reliable_dir):
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " * 3)
-         for i in range(8)] +
-        [(100 + i, "pack my box with five dozen liquor jugs " * 2)
-         for i in range(8)],
-        "doc_id long, text string")
-    reliable = train_bpe_merges_distributed(docs, n_merges=12,
-                                            checkpoint_every=4)
-    spark.conf.set("spark.graft.checkpointDir", "")
-    local = train_bpe_merges_distributed(docs, n_merges=12,
-                                         checkpoint_every=4)
-    assert reliable == local
-    assert len(reliable) > 0

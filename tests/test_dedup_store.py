@@ -516,40 +516,6 @@ def test_load_clusters_time_travel(spark, tmp_path):
     assert at(None) == at(2)                                 # latest
 
 
-def test_deletion_stream_propagates_and_replays(spark, tmp_path):
-    """The compliance queue shape: deletion-request drops drain into
-    remove_docs per micro-batch; the resolved view repairs
-    continuously and a checkpointed re-run ingests nothing."""
-    from hackmd_data_pipeline_spark.operators.dedup_store import (
-        load_pairs)
-    from hackmd_data_pipeline_spark.streaming.neardup import (
-        run_deletion_stream)
-
-    dest = str(tmp_path / "store")
-    _seed_pairs(spark, dest, [(1, 2), (1, 3), (2, 3), (10, 11)])
-    reqs = str(tmp_path / "reqs")
-    ckpt = str(tmp_path / "ckpt")
-
-    local_df(spark, [(1,)], "doc_id long").coalesce(1) \
-        .write.mode("append").parquet(reqs)
-    c1 = run_deletion_stream(spark, reqs, ckpt, dest)
-    assert c1 == {"requests": 1, "retired": 1, "relabeled": 2}
-    assert _resolved(spark, dest) == {(2, 2), (3, 2), (10, 10), (11, 10)}
-
-    local_df(spark, [(10,), (11,)], "doc_id long").coalesce(1) \
-        .write.mode("append").parquet(reqs)
-    c2 = run_deletion_stream(spark, reqs, ckpt, dest)
-    assert c2 == {"requests": 2, "retired": 2, "relabeled": 0}
-    assert _resolved(spark, dest) == {(2, 2), (3, 2)}
-    # invariant after streamed deletes
-    assert _resolved(spark, dest) == _scratch(
-        load_pairs(spark, dest).select("id_a", "id_b"))
-
-    # exactly-once: same checkpoint, nothing pending
-    c3 = run_deletion_stream(spark, reqs, ckpt, dest)
-    assert c3 == {"requests": 0, "retired": 0, "relabeled": 0}
-
-
 def test_compact_store_folds_pairs_and_clusters_tombstone_free(
         spark, tmp_path):
     """A compacted store must be SELF-CONTAINED (r08 ADVICE): pairs

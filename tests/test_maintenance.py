@@ -1,5 +1,5 @@
-"""Maintenance operators: compaction file-count math and dense stable
-global id assignment.
+"""Maintenance operators: compaction file-count math and partition
+retention.
 """
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hackmd_data_pipeline_spark.operators.maintenance import (
-    assign_global_ids, compact, table_file_stats)
+    compact, table_file_stats)
 from hackmd_data_pipeline_spark.tables import load_table
 
 from .conftest import SF_CORRECT
@@ -25,21 +25,6 @@ def test_compact_reduces_file_count(spark, tmp_path):
     assert result["after"]["n_files"] <= 4
     # lossless: same rows after compaction
     assert (spark.read.parquet(result["dest"]).count() == li.count())
-
-
-def test_assign_global_ids_dense_and_stable(spark):
-    d = load_table(spark, SF_CORRECT, "documents").repartition(7)
-    n = d.count()
-    ids1 = assign_global_ids(d)
-    got = [r.global_id for r in ids1.select("global_id").collect()]
-    assert sorted(got) == list(range(n))          # dense 0..n-1, unique
-    # stable: same ids for same rows across two materializations
-    a = {(r.doc_id): r.global_id for r in ids1.collect()}
-    b = {(r.doc_id): r.global_id
-         for r in assign_global_ids(d).collect()}
-    assert a == b
-    # schema passthrough + appended column
-    assert ids1.columns == d.columns + ["global_id"]
 
 
 def test_retention_sweep_drops_old_partitions(spark, tmp_path):

@@ -159,159 +159,6 @@ def test_query_invariant_booleans_hold(spark, query_name, col):
     assert df.filter(~F.col(col)).count() == 0
 
 
-# ---------------------------------------------------------------- #
-# streaming store (streaming/membership.py)                         #
-# ---------------------------------------------------------------- #
-
-def _bits_set(df):
-    return sorted(r.pos for r in df.collect())
-
-
-def test_bloom_store_equals_single_pass(spark, tmp_path):
-    """Epoch deltas merged by the store == one filter built over the
-    concatenated batches, at any compaction state."""
-    from hackmd_data_pipeline_spark.streaming.membership import (
-        append_bloom_delta,
-        compact_bloom,
-        read_bloom_bits,
-    )
-
-    m, k = 1 << 12, 5
-    dest = str(tmp_path / "bloom")
-    batches = [_keys_df(spark, range(i * 80, i * 80 + 100)) for i in range(3)]
-    whole = batches[0]
-    for b in batches[1:]:
-        whole = whole.unionByName(b)
-    expect = _bits_set(bloom_build(whole.distinct(), F.col("k"), m, k))
-
-    for i, b in enumerate(batches):
-        append_bloom_delta(b, dest, epoch_id=i, key=F.col("k"),
-                           num_bits=m, num_hashes=k)
-    assert _bits_set(read_bloom_bits(spark, dest)) == expect
-
-    info = compact_bloom(spark, dest)
-    assert info["gen"] == 1 and info["absorbed"] == 3
-    assert _bits_set(read_bloom_bits(spark, dest)) == expect
-
-
-def test_bloom_store_replay_is_exactly_once(spark, tmp_path):
-    """Replaying an epoch (foreachBatch at-least-once) leaves the
-    merged bit set unchanged — the delta overwrite + union-idempotent
-    merge absorb it."""
-    from hackmd_data_pipeline_spark.streaming.membership import (
-        append_bloom_delta,
-        read_bloom_bits,
-    )
-
-    m, k = 1 << 12, 5
-    dest = str(tmp_path / "bloom")
-    a = _keys_df(spark, range(100))
-    b = _keys_df(spark, range(50, 150))
-    append_bloom_delta(a, dest, 0, F.col("k"), m, k)
-    append_bloom_delta(b, dest, 1, F.col("k"), m, k)
-    before = _bits_set(read_bloom_bits(spark, dest))
-    append_bloom_delta(b, dest, 1, F.col("k"), m, k)  # replay epoch 1
-    assert _bits_set(read_bloom_bits(spark, dest)) == before
-
-
-def test_bloom_store_prefilter_and_post_compact_appends(spark, tmp_path):
-    """bloom_filter_batch: no false negatives against everything the
-    store has absorbed — including deltas appended AFTER a compaction
-    (the gen + pending merge path)."""
-    from hackmd_data_pipeline_spark.streaming.membership import (
-        append_bloom_delta,
-        bloom_filter_batch,
-        compact_bloom,
-        read_bloom_bits,
-    )
-
-    m, k = 1 << 12, 5
-    dest = str(tmp_path / "bloom")
-    append_bloom_delta(_keys_df(spark, range(100)), dest, 0, F.col("k"), m, k)
-    compact_bloom(spark, dest)
-    append_bloom_delta(_keys_df(spark, range(100, 200)), dest, 1,
-                       F.col("k"), m, k)
-
-    probes = _keys_df(spark, range(200))  # all absorbed keys
-    out = bloom_filter_batch(probes, dest, F.col("k"), m, k)
-    assert out.filter(~F.col("bloom_pass")).count() == 0
-    # merged view == single-pass filter over all 200 keys
-    expect = _bits_set(bloom_build(_keys_df(spark, range(200)),
-                                   F.col("k"), m, k))
-    assert _bits_set(read_bloom_bits(spark, dest)) == expect
-
-
-def test_bloom_store_from_stream(spark, tmp_path):
-    """availableNow drain over a file stream maintains the store; a
-    second drain of NEW files extends it without rereading old ones."""
-    from hackmd_data_pipeline_spark.streaming.membership import (
-        maintain_bloom_stream,
-        read_bloom_bits,
-    )
-
-    m, k = 1 << 12, 5
-    src = tmp_path / "src"
-    dest = str(tmp_path / "bloom")
-    ckpt = str(tmp_path / "ckpt")
-    _keys_df(spark, range(100)).write.parquet(str(src / "f1"))
-
-    schema = "k long"
-    stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-    q = maintain_bloom_stream(stream, dest, ckpt, "k", m, k)
-    q.awaitTermination()
-
-    _keys_df(spark, range(100, 150)).write.parquet(str(src / "f2"))
-    q = maintain_bloom_stream(
-        spark.readStream.schema(schema).parquet(str(src / "*")),
-        dest, ckpt, "k", m, k)
-    q.awaitTermination()
-
-    expect = _bits_set(bloom_build(_keys_df(spark, range(150)),
-                                   F.col("k"), m, k))
-    assert _bits_set(read_bloom_bits(spark, dest)) == expect
-
-
-def test_cms_store_equals_single_pass_and_replay_safe(spark, tmp_path):
-    """Epoch CMS deltas merged by the store == one sketch over the
-    concatenated batches; an epoch replay (non-idempotent SUM merge!)
-    is absorbed by the epoch-keyed overwrite; compaction + a
-    post-compact delta keep estimates exact for absorbed keys."""
-    from hackmd_data_pipeline_spark.streaming.membership import (
-        append_cms_delta,
-        cms_estimate_batch,
-        compact_cms,
-        read_cms_counters,
-    )
-
-    d, w = 4, 256
-    dest = str(tmp_path / "cms")
-    a = _keys_df(spark, range(100)).select("k", F.lit(2).alias("w"))
-    b = _keys_df(spark, range(50, 150)).select("k", F.lit(3).alias("w"))
-
-    append_cms_delta(a, dest, 0, F.col("k"), F.col("w"), d, w)
-    append_cms_delta(b, dest, 1, F.col("k"), F.col("w"), d, w)
-    append_cms_delta(b, dest, 1, F.col("k"), F.col("w"), d, w)  # replay
-    whole = cms_build(a.unionByName(b), F.col("k"), F.col("w"), d, w)
-    key = lambda r: (r.j, r.pos, r.cnt)  # noqa: E731
-    assert (sorted(map(key, read_cms_counters(spark, dest).collect()))
-            == sorted(map(key, whole.collect())))
-
-    info = compact_cms(spark, dest)
-    assert info["gen"] == 1 and info["absorbed"] == 2
-    append_cms_delta(a, dest, 2, F.col("k"), F.col("w"), d, w)
-
-    # true per-key totals after epochs {a, b, a}: 2+2 on [0,50),
-    # 2+3+2 on [50,100), 3 on [100,150) — estimates never below truth,
-    # and exact when width is collision-free enough to check equality
-    est = cms_estimate_batch(
-        _keys_df(spark, range(150)).select(
-            "k",
-            (F.when(F.col("k") < 50, 4)
-             .when(F.col("k") < 100, 7).otherwise(3)).alias("truth")),
-        dest, F.col("k"), d, w)
-    assert est.filter(F.col("cms_est") < F.col("truth")).count() == 0
-
-
 def test_feature_hashing_invariants(spark):
     """Hashing-trick contracts the value gate can't state: per-doc L1
     mass is bounded by the doc's token count (each token contributes

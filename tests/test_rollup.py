@@ -127,7 +127,6 @@ def test_sketch_rollup_incremental_equals_single_pass(spark, tmp_path):
 
     from hackmd_data_pipeline_spark.operators.rollup import (
         merge_rollup_sketch_batch,
-        sketch_rollup_estimates,
         time_rollup_sketch,
     )
     from hackmd_data_pipeline_spark.tables import load_table
@@ -144,8 +143,11 @@ def test_sketch_rollup_incremental_equals_single_pass(spark, tmp_path):
     merge_rollup_sketch_batch(b1, dest)
     merge_rollup_sketch_batch(b2, dest)
 
-    got = {(str(r.event_date), r.event_type): r.est_distinct_users
-           for r in sketch_rollup_estimates(spark, dest).collect()}
+    merged = spark.read.parquet(dest).select(
+        "event_date", "event_type",
+        F.hll_sketch_estimate("users_hll").alias("est"))
+    got = {(str(r.event_date), r.event_type): r.est
+           for r in merged.collect()}
 
     single = (time_rollup_sketch(ev)
               .select("event_date", "event_type",

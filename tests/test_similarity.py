@@ -11,7 +11,7 @@ from hackmd_data_pipeline_spark.operators.dedup import minhash_lsh_pairs, shingl
 from hackmd_data_pipeline_spark.operators.similarity import brute_force_topk, ivf_topk
 from hackmd_data_pipeline_spark.tables import load_table
 
-from .conftest import SF_CORRECT, SF_SMOKE, local_df
+from .conftest import SF_CORRECT, SF_SMOKE, jobs_launched, local_df
 
 
 def test_ivf_recall_vs_exact(spark):
@@ -1240,3 +1240,46 @@ def test_bounded_sample_driver_rows_bounded_when_many_partitions(
     y = simmod._bounded_sample(few, "embedding", sample_cap=8)
     assert len(y) == 8
     assert max(seen) < 16
+
+
+def test_build_ivf_index_failed_data_write_leaves_no_centroids(
+        spark, tmp_path):
+    """The centroids key the driver-side quantizer cache, so the build
+    writes them only after the cell data: a data write that fails
+    leaves no centroids directory to be read against missing cells."""
+    import os
+
+    import pytest
+
+    from hackmd_data_pipeline_spark.operators.similarity import (
+        build_ivf_index, pinned_centroids)
+
+    emb = load_table(spark, SF_CORRECT, "embeddings").filter(
+        F.col("vec_id") < 200)
+    cents = pinned_centroids(emb, 8)
+    broken = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == 5, F.raise_error(F.lit("forced failure")))
+        .otherwise(F.col("embedding")))
+    idx = str(tmp_path / "idx")
+    with pytest.raises(Exception, match="forced failure"):
+        build_ivf_index(broken, idx, nlist=8, centroids=cents)
+    assert not os.path.exists(os.path.join(idx, "centroids"))
+
+
+def test_build_ivf_index_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Every job of the build runs in the caller's job group, so a
+    pipeline stage's job count and tags cover the index writes."""
+    from hackmd_data_pipeline_spark.operators.similarity import (
+        build_ivf_index)
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    untagged = set(sc.statusTracker().getJobIdsForGroup(None))
+    emb = load_table(spark, SF_CORRECT, "embeddings").filter(
+        F.col("vec_id") < 200)
+    n = jobs_launched(spark, lambda: build_ivf_index(
+        emb, str(tmp_path / "idx"), nlist=8))
+    assert n > 0
+    new_untagged = set(sc.statusTracker().getJobIdsForGroup(None)) - untagged
+    assert not new_untagged, f"jobs outside the caller's group: {new_untagged}"

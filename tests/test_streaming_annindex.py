@@ -14,13 +14,10 @@ from hackmd_data_pipeline_spark.operators.similarity import (
     ivf_index_data,
     ivf_search_index,
 )
-from hackmd_data_pipeline_spark.streaming.annindex import (
-    maintenance_due,
-    run_ann_index_ingest,
-)
+from hackmd_data_pipeline_spark.streaming.annindex import run_ann_index_ingest
 from hackmd_data_pipeline_spark.tables import load_table
 
-from .conftest import SF_CORRECT, local_df
+from .conftest import SF_CORRECT
 
 
 def _write_drop(df, path):
@@ -81,8 +78,6 @@ def test_ann_index_stream_compaction_cycle(spark, tmp_path):
                                & (F.col("vec_id") < hi)), vecs_in)
         run_ann_index_ingest(spark, vecs_in, idx, ckpt, nlist=8)
     assert len(ivf_delta_epochs(spark, idx)) == 2
-    assert not maintenance_due(spark, idx, max_deltas=2)
-    assert maintenance_due(spark, idx, max_deltas=1)
 
     folded = str(tmp_path / "folded")
     compact_ivf_index(spark, idx, folded)
@@ -102,35 +97,6 @@ def test_ann_index_stream_compaction_cycle(spark, tmp_path):
     hit = ivf_search_index(spark, folded, _probe_for(emb, 399), k=3,
                            nprobe=2).collect()
     assert hit[0].vec_id == 399 and hit[0].cosine > 0.999999
-
-
-def test_vector_deletion_stream_propagates(spark, tmp_path):
-    """Deletion requests drain into index tombstones continuously: a
-    deleted vector vanishes from search between drains, and a
-    checkpointed re-run ingests nothing."""
-    from hackmd_data_pipeline_spark.streaming.annindex import (
-        run_vector_deletion_stream,
-    )
-
-    vecs_in = str(tmp_path / "in")
-    idx = str(tmp_path / "idx")
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    _write_drop(emb.filter(F.col("vec_id") < 200), vecs_in)
-    run_ann_index_ingest(spark, vecs_in, idx, str(tmp_path / "ck1"), nlist=8)
-
-    reqs = str(tmp_path / "reqs")
-    ckpt = str(tmp_path / "ck2")
-    local_df(spark, [(7,), (8,)], "vec_id long").coalesce(1) \
-        .write.mode("append").parquet(reqs)
-    c1 = run_vector_deletion_stream(spark, reqs, ckpt, idx)
-    assert c1 == {"requests": 2}
-    assert ivf_index_data(spark, idx).count() == 198
-    got = ivf_search_index(spark, idx, _probe_for(emb, 7), k=3,
-                           nprobe=8).collect()
-    assert 7 not in {r.vec_id for r in got}
-
-    c2 = run_vector_deletion_stream(spark, reqs, ckpt, idx)
-    assert c2 == {"requests": 0}
 
 
 def test_pointer_maintained_index_cycle(spark, tmp_path):

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import types as T
 
 from hackmd_data_pipeline_spark.streaming.stateful import track_sessions
@@ -64,139 +63,3 @@ def test_stateful_sessions_accumulate(spark, tmp_path):
     assert run2[1].n_events == 3 and run2[1].value_sum == 17.0  # state carried
     assert run2[3].n_events == 1 and run2[3].value_sum == 7.0
     assert 2 not in run2  # untouched key not re-emitted in update mode
-
-
-@pytest.fixture()
-def rocksdb_spark(spark):
-    """transformWithState requires the RocksDB state store; scope the
-    provider override to the test (other suites keep the default)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    yield spark
-    if old is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, old)
-
-
-def _drain_tws(spark, source_dir, ckpt):
-    from hackmd_data_pipeline_spark.streaming.stateful import (
-        track_sessions_tws,
-    )
-
-    collected: list = []
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(
-        str(source_dir / "*"))
-    q = (track_sessions_tws(stream)
-         .writeStream.foreachBatch(
-             lambda batch, _eid: collected.extend(batch.collect()))
-         .option("checkpointLocation", str(ckpt))
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return {r.user_id: r for r in collected}
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def test_running_totals_processor_logic():
-    """r05 (VERDICT item 6): the container has no protobuf and installs
-    are off-limits, so the TWS ENGINE path stays import-gated — but the
-    processor's own semantics (init wiring, exists/get fallback,
-    multi-chunk accumulation, update+emit per key) run here against a
-    faked ValueState handle, shrinking the untested surface to Spark's
-    transformWithStateInPandas plumbing alone."""
-    import pandas as pd
-
-    from hackmd_data_pipeline_spark.streaming.stateful import (
-        RunningTotalsProcessor,
-        _STATE_SCHEMA,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            assert schema is _STATE_SCHEMA
-            return self.states.setdefault(name, FakeValueState())
-
-    p, h = RunningTotalsProcessor(), FakeHandle()
-    p.init(h)
-    # first batch for key 7: two Arrow chunks accumulate in one call
-    out1 = list(p.handleInputRows(
-        (7,), [pd.DataFrame({"value": [10.0, 5.0]}),
-               pd.DataFrame({"value": [1.0]})], None))
-    assert len(out1) == 1
-    assert out1[0].to_dict("records") == [
-        {"user_id": 7, "n_events": 3, "value_sum": 16.0}]
-    # second batch: state carried through the handle
-    out2 = list(p.handleInputRows(
-        (7,), [pd.DataFrame({"value": [4.0]})], None))
-    assert out2[0].to_dict("records") == [
-        {"user_id": 7, "n_events": 4, "value_sum": 20.0}]
-    assert h.states["totals"].get() == (4, 20.0)
-    p.close()
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state-server protocol needs protobuf "
-           "(standard pyspark[connect] dep, absent in this container "
-           "and installs are off-limits per the environment contract); "
-           "the operator is real — gated like the JDBC edge; its "
-           "processor logic is covered protobuf-free by "
-           "test_running_totals_processor_logic")
-def test_transform_with_state_equals_legacy(rocksdb_spark, tmp_path):
-    """The Spark-4-native transformWithStateInPandas operator carries
-    the SAME running-totals contract as the legacy
-    applyInPandasWithState form: identical per-key totals, state
-    surviving across stream restarts, update-mode emission of touched
-    keys only."""
-    spark = rocksdb_spark
-    source_dir = tmp_path / "src"
-    source_dir.mkdir()
-    ckpt = tmp_path / "ckpt_tws"
-    t = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    _write_batch(spark, source_dir, "b1",
-                 [(1, t, 10.0), (1, t, 5.0), (2, t, 1.0)])
-    run1 = _drain_tws(spark, source_dir, ckpt)
-    assert run1[1].n_events == 2 and run1[1].value_sum == 15.0
-    assert run1[2].n_events == 1
-
-    _write_batch(spark, source_dir, "b2", [(1, t, 2.0), (3, t, 7.0)])
-    run2 = _drain_tws(spark, source_dir, ckpt)
-    assert run2[1].n_events == 3 and run2[1].value_sum == 17.0
-    assert run2[3].n_events == 1 and run2[3].value_sum == 7.0
-    assert 2 not in run2
-
-    # cross-API equivalence on identical input, fresh checkpoints
-    legacy = _drain(spark, source_dir, tmp_path / "ckpt_legacy")
-    fresh = _drain_tws(spark, source_dir, tmp_path / "ckpt_tws2")
-    assert {(k, r.n_events, r.value_sum) for k, r in legacy.items()} == \
-        {(k, r.n_events, r.value_sum) for k, r in fresh.items()}
