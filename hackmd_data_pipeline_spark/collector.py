@@ -13,9 +13,12 @@ and run stats in Postgres (reference src/extract/arxiv_collector.py:
     createDataFrame, within-batch dropDuplicates (O-23), left-anti
     join against the bounded id history (O-22 — the lookback filter
     keeps the build side broadcastable, the reference's own
-    memory-bound trick), partitioned gzip-JSONL write (O-3 layout);
+    memory-bound trick), partitioned gzip-JSONL write (O-3 layout)
+    in one job: its count is observed on the write, and
+    ``maxRecordsPerFile`` keeps each file to ``batch_size`` records;
   * category progress / run stats are ControlTable generation flips
-    (streaming/control.py) instead of row UPDATEs (O-26/O-30);
+    (streaming/control.py) instead of row UPDATEs (O-26/O-30),
+    computed by the driver on Arrow tables: no Spark job;
   * the self-invoking loop (O-35) is a drain-until-done driver loop:
     each call processes ``categories_per_run`` pending categories and
     reports whether work remains.
@@ -25,6 +28,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterable
+from datetime import datetime, timezone
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schemas import CATEGORY_PROGRESS_SCHEMA, CATEGORY_RUN_STATS_SCHEMA, RAW_RECORD_SCHEMA
+from .session import empty_local_df, observed
+from .sources.fs import fs_exists
 from .streaming.control import ControlTable
 
 # records per output file — the reference's batch_size=100
@@ -65,53 +71,39 @@ class Collector:
 
     def register_new_categories(self) -> None:
         """O-23c: YAML category list minus categories already tracked
-        (reference arxiv_collector.py:217-222) — EXCEPT via left-anti."""
-        # Arrow local relation (r12): a python-parallelized
-        # createDataFrame embedded in the progress table's generation
-        # write evaluates defaultParallelism pickled slices through
-        # Python workers (~5 s per flip on local[32] when coalesced)
-        from .session import arrow_local_df
+        (reference arxiv_collector.py:217-222), duplicates kept as a
+        left-anti join keeps them."""
+        cur = self.progress.table()
+        tracked = set(cur["category_name"].to_pylist())
+        now = datetime.now(timezone.utc)
+        new = [{"category_name": c, "status": "", "updated_at": now}
+               for c in self.categories if c not in tracked]
+        if new:
+            self.progress.write(pa.concat_tables(
+                [cur, pa.Table.from_pylist(new, schema=cur.schema)]))
 
-        yaml_df = arrow_local_df(
-            self.spark, {"category_name": list(self.categories)},
-            "category_name string")
-        cur = self.progress.read()
-        new = (
-            yaml_df.join(cur.select("category_name"), "category_name", "left_anti")
-            .select("category_name", F.lit("").alias("status"),
-                    F.current_timestamp().alias("updated_at"))
-        )
-        if new.take(1):
-            self.progress.write(cur.unionByName(new))
+    def _pending(self) -> list[str]:
+        """Not-Finished categories by name; NULL is not pending (SQL)."""
+        rows = self.progress.table().to_pylist()
+        return sorted(r["category_name"] for r in rows
+                      if r["status"] is not None and r["status"] != "Finished")
 
     def pending_categories(self) -> list[str]:
         """O-17 + O-34: not-Finished categories, first k (reference
         arxiv_collector.py:63-72,87-91)."""
-        return [
-            r.category_name
-            for r in self.progress.read()
-            .filter(F.col("status") != "Finished")
-            .orderBy("category_name")
-            .limit(self.categories_per_run)
-            .collect()
-        ]
+        return self._pending()[:self.categories_per_run]
 
     # ------------------------------------------------------------- dedup side
 
-    def known_ids(self, lookback_months: int | None = None) -> DataFrame:
+    def known_ids(self) -> DataFrame:
         """O-19 + O-22 build side: ids ingested within the lookback
         window (reference load_existing_ids, arxiv_collector.py:123-134).
         The time bound keeps this broadcastable at scale."""
-        from .sources.fs import fs_exists
-
-        if lookback_months is None:
-            lookback_months = self.lookback_months
         if not fs_exists(self.spark, f"{self.root}/raw"):
-            from .session import empty_local_df
-
             return empty_local_df(self.spark, "entry_id string")
         raw = self.spark.read.schema(RAW_RECORD_SCHEMA).json(f"{self.root}/raw")
-        cutoff = F.current_timestamp() - F.expr(f"INTERVAL {lookback_months} MONTHS")
+        cutoff = (F.current_timestamp()
+                  - F.expr(f"INTERVAL {self.lookback_months} MONTHS"))
         return (
             raw.select("entry_id", F.to_timestamp("published").alias("_pub"))
             .filter(F.col("_pub").isNull() | (F.col("_pub") >= cutoff))
@@ -130,54 +122,47 @@ class Collector:
         stats_rows = []
         for cat in todo:
             t0 = time.monotonic()
-            # re-resolve per category: the reference's id set grows as
-            # the run proceeds (arxiv_collector.py:260-264), and the
-            # file listing behind a DataFrame is fixed at creation
-            known = F.broadcast(self.known_ids())
-            # Arrow local relation: a python-parallelized list would be
-            # evaluated by Python workers twice, once by the count and
-            # once by the write
             records = list(self.fetch(cat, self.max_results))
-            incoming = self.spark.createDataFrame(
-                pa.Table.from_pylist(
-                    records, schema=to_arrow_schema(RAW_RECORD_SCHEMA)),
-                RAW_RECORD_SCHEMA)
-            fresh = (
-                incoming.dropDuplicates(["entry_id"])           # O-23
-                .join(known, "entry_id", "left_anti")           # O-22
-            )
-            n_written = fresh.count()
-            if n_written:
+            n_written = 0
+            if records:
+                # re-resolve per category: the reference's id set grows
+                # as the run proceeds (arxiv_collector.py:260-264), and
+                # the file listing behind a DataFrame is fixed at
+                # creation
+                known = F.broadcast(self.known_ids())
+                # Arrow local relation: a python-parallelized list
+                # would be evaluated through Python workers
+                incoming = self.spark.createDataFrame(
+                    pa.Table.from_pylist(
+                        records, schema=to_arrow_schema(RAW_RECORD_SCHEMA)),
+                    RAW_RECORD_SCHEMA)
+                fresh, obs = observed(
+                    incoming.dropDuplicates(["entry_id"])       # O-23
+                    .join(known, "entry_id", "left_anti"))      # O-22
+                # the records are already in the driver: one write task
                 (
                     fresh.withColumn("_cat", F.regexp_replace(F.lit(cat), r"\.", "_"))
                     .withColumn("_ingest_date", F.current_date())
-                    .repartition(max(1, n_written // self.batch_size))
+                    .coalesce(1)
                     .write.mode("append")
                     .option("compression", "gzip")
+                    .option("maxRecordsPerFile", self.batch_size)
                     .partitionBy("_cat", "_ingest_date")
                     .json(f"{self.root}/raw")
                 )
-            stats_rows.append((cat, time.monotonic() - t0, n_written, n_written, None))
+                n_written = obs.get["n"]
+            stats_rows.append({"category_name": cat,
+                               "time_sec": time.monotonic() - t0,
+                               "s3_count": n_written, "pg_count": n_written})
             self._mark_finished(cat)
 
         if stats_rows:
-            # Arrow local relation (see register_new_categories)
-            from .session import arrow_local_df
-
-            stats = arrow_local_df(
-                self.spark,
-                {"category_name": [r[0] for r in stats_rows],
-                 "time_sec": [float(r[1]) for r in stats_rows],
-                 "s3_count": [int(r[2]) for r in stats_rows],
-                 "pg_count": [int(r[3]) for r in stats_rows]},
-                "category_name string, time_sec double, "
-                "s3_count int, pg_count int",
-            ).withColumn("updated_at", F.current_timestamp())
-            self.run_stats.write(self.run_stats.read().unionByName(stats))
-
-        pending_after = (
-            self.progress.read().filter(F.col("status") != "Finished").count())
-        return {"processed": todo, "pending_after": pending_after}
+            cur = self.run_stats.table()
+            now = datetime.now(timezone.utc)
+            self.run_stats.write(pa.concat_tables([cur, pa.Table.from_pylist(
+                [{**r, "updated_at": now} for r in stats_rows],
+                schema=cur.schema)]))
+        return {"processed": todo, "pending_after": len(self._pending())}
 
     def drain(self, max_runs: int = 100) -> int:
         """O-35 loop: run until no pending categories. Returns runs."""
@@ -188,10 +173,9 @@ class Collector:
 
     def _mark_finished(self, category: str) -> None:
         """O-26 (reference arxiv_collector.py:93-100)."""
-        cur = self.progress.read()
-        hit = F.col("category_name") == category
-        self.progress.write(
-            cur.withColumn("status", F.when(hit, "Finished").otherwise(F.col("status")))
-            .withColumn("updated_at",
-                        F.when(hit, F.current_timestamp()).otherwise(F.col("updated_at")))
-        )
+        cur = self.progress.table()
+        now = datetime.now(timezone.utc)
+        self.progress.write(pa.Table.from_pylist(
+            [{**r, "status": "Finished", "updated_at": now}
+             if r["category_name"] == category else r
+             for r in cur.to_pylist()], schema=cur.schema))

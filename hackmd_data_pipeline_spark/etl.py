@@ -50,9 +50,11 @@ writes and reads through Arrow (streaming/control.py), and every
 stage's plan is the same oracled operator the registry serves — no
 driver-side data paths beyond the bounded control state. The driver
 loop itself launches no bookkeeping jobs: the ledger is read once per
-``run()`` (the driver is its only writer) and each flip costs the one
-job of its generation write; stage counts are observed on the stage's
-own sink write (``Dataset.observe``), not re-read and counted.
+``run()`` (the driver is its only writer) and a flip writes the Arrow
+table ``_mark`` builds, so it launches no job; stage counts are
+observed on the stage's own sink write (``Dataset.observe``), not
+re-read and counted; and a stage reading back what it just wrote
+passes the written frame's schema, so no footer-inference job runs.
 """
 
 from __future__ import annotations
@@ -61,26 +63,15 @@ from collections.abc import Callable
 from datetime import datetime, timezone
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from .collector import Collector, FetchFn
 from .functions.scalars import WS_CLASS
+from .session import observed
 from .streaming.control import ControlTable
 from .streaming.pipeline import run_ingest_stream
-
-
-def _observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observation]:
-    """``df`` with its row count (``n``) and the named ``aggs``
-    observed by whichever action next runs it — a stage's sink write
-    reports its own counts with no job of its own (the
-    dedup_store.update_clusters posture). Read them with ``obs.get``
-    after the write."""
-    obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("n"),
-                      *(c.alias(k) for k, c in aggs.items())), obs
 
 
 def hashed_embeddings(docs: DataFrame, dim: int = 16,
@@ -203,17 +194,9 @@ class CorpusPipeline:
             self._rows = self._statuses()
         self._rows[stage] = (status, attempt)
         now = datetime.now(timezone.utc)
-        # Arrow local relation, NOT createDataFrame(list): the
-        # python-parallelized form spreads the rows over
-        # defaultParallelism pickled slices that the generation write
-        # evaluates through Python workers (5-7 s PER LEDGER FLIP on
-        # local[32] when that write coalesced them, r12)
-        self.ledger.write(self.spark.createDataFrame(
-            pa.Table.from_pylist(
-                [{"stage": s, "status": st, "attempt": at, "updated_at": now}
-                 for s, (st, at) in sorted(self._rows.items())],
-                schema=to_arrow_schema(STAGE_LEDGER_SCHEMA)),
-            STAGE_LEDGER_SCHEMA))
+        self.ledger.write(pa.Table.from_pylist(
+            [{"stage": s, "status": st, "attempt": at, "updated_at": now}
+             for s, (st, at) in sorted(self._rows.items())]))
 
     def _fault(self, point: str, stage: str) -> None:
         if self.fault_hook is not None:
@@ -282,7 +265,7 @@ class CorpusPipeline:
             F.col("primary_category").alias("source"),
             F.length(text).alias("n_chars"),
         )
-        docs, obs = _observed(docs)
+        docs, obs = observed(docs)
         docs.write.mode("overwrite").parquet(
             f"{self.root}/corpus/documents.parquet")
         return {"documents": obs.get["n"]}
@@ -296,9 +279,10 @@ class CorpusPipeline:
         decisions.write.mode("overwrite").parquet(
             f"{self.root}/corpus/decisions.parquet")
         kept = docs.join(
-            self.spark.read.parquet(f"{self.root}/corpus/decisions.parquet")
+            self.spark.read.schema(decisions.schema)
+            .parquet(f"{self.root}/corpus/decisions.parquet")
             .filter("kept").select("doc_id"), "doc_id", "left_semi")
-        kept, obs = _observed(kept)
+        kept, obs = observed(kept)
         kept.write.mode("overwrite").parquet(
             f"{self.root}/corpus/kept_documents.parquet")
         return {"kept": obs.get["n"]}
@@ -335,16 +319,22 @@ class CorpusPipeline:
         report = exact_substring_spans(kept, k=self.span_k)
         report.write.mode("overwrite").parquet(
             f"{self.root}/corpus/span_report.parquet")
-        keep_ids = (self.spark.read.parquet(
-            f"{self.root}/corpus/span_report.parquet")
-            .filter(F.col("dup_fraction") <= F.lit(self.max_dup_fraction))
-            .select("doc_id"))
-        audited, obs = _observed(kept.join(keep_ids, "doc_id", "left_semi"))
+        keep_ids = (self.spark.read.schema(report.schema)
+                    .parquet(f"{self.root}/corpus/span_report.parquet")
+                    .filter(F.col("dup_fraction")
+                            <= F.lit(self.max_dup_fraction))
+                    .select("doc_id", F.lit(True).alias("_keep")))
+        # a left join observed above the join counts every input doc;
+        # a semi join against an empty keep-set may never scan them
+        flagged, obs = observed(kept.join(keep_ids, "doc_id", "left"),
+                                kept=F.count("_keep"))
+        audited = flagged.filter(F.col("_keep")).drop("_keep")
         audited.write.mode("overwrite").parquet(
             f"{self.root}/corpus/audited_documents.parquet")
-        audited = self.spark.read.parquet(
+        audited = self.spark.read.schema(audited.schema).parquet(
             f"{self.root}/corpus/audited_documents.parquet")
-        n_kept = obs.get["n"]
+        n = obs.get
+        n_in, n_kept = n["n"], n["kept"]
         if n_kept:
             commit_spans(audited, store, epoch_id=0, k=self.span_k,
                          out_partitions=4)
@@ -354,7 +344,6 @@ class CorpusPipeline:
                                WS_CLASS)).alias("n_tokens"))
              .coalesce(4).write.mode("overwrite")
              .parquet(f"{store}/docs/epoch=0"))
-        n_in = kept.count()
         return {"audited_kept": n_kept, "dropped_verbatim": n_in - n_kept}
 
     def _stage_resolve(self) -> dict:
@@ -370,11 +359,11 @@ class CorpusPipeline:
             F.col("id").alias("doc_id"), "cluster_id")
         clusters.write.mode("overwrite").parquet(
             f"{self.root}/corpus/clusters.parquet")
-        dropped = (self.spark.read.parquet(
+        dropped = (self.spark.read.schema(clusters.schema).parquet(
             f"{self.root}/corpus/clusters.parquet")
             .filter(F.col("doc_id") != F.col("cluster_id"))
             .select("doc_id"))
-        resolved, obs = _observed(kept.join(dropped, "doc_id", "left_anti"))
+        resolved, obs = observed(kept.join(dropped, "doc_id", "left_anti"))
         resolved.write.mode("overwrite").parquet(
             f"{self.root}/corpus/resolved_documents.parquet")
         return {"resolved": obs.get["n"]}
@@ -436,7 +425,7 @@ class CorpusPipeline:
             .withColumn("keywords", F.coalesce(
                 F.col("keywords"), F.array().cast("array<string>")))
         )
-        annotated, obs = _observed(
+        annotated, obs = observed(
             annotated, with_topic=F.count("topic"),
             quality_kept=F.count_if(F.col("quality_keep")))
         annotated.write.mode("overwrite").parquet(
@@ -485,16 +474,16 @@ class CorpusPipeline:
             # delta vs the float path is gated in tests.
             from .operators.similarity import dequantize, normalize_quantize
 
-            q8, obs = _observed(normalize_quantize(emb))
+            q8, obs = observed(normalize_quantize(emb))
             q8.write.mode("overwrite").parquet(
                 f"{self.root}/corpus/embeddings_q8.parquet")
-            emb = dequantize(self.spark.read.parquet(
+            emb = dequantize(self.spark.read.schema(q8.schema).parquet(
                 f"{self.root}/corpus/embeddings_q8.parquet"))
         else:
-            emb, obs = _observed(emb)
+            emb, obs = observed(emb)
             emb.write.mode("overwrite").parquet(
                 f"{self.root}/corpus/embeddings.parquet")
-            emb = self.spark.read.parquet(
+            emb = self.spark.read.schema(emb.schema).parquet(
                 f"{self.root}/corpus/embeddings.parquet")
         n_emb = obs.get["n"]
 
@@ -532,7 +521,7 @@ class CorpusPipeline:
         resolved = self.spark.read.parquet(
             f"{self.root}/corpus/annotated_documents.parquet")
         split = deterministic_split(resolved, "doc_id", self.split_fractions)
-        written, obs = _observed(split)
+        written, obs = observed(split)
         (written.write.mode("overwrite").partitionBy("split")
          .parquet(f"{self.root}/out/corpus"))
         with_tokens = (
@@ -544,7 +533,7 @@ class CorpusPipeline:
         packed.write.mode("overwrite").parquet(
             f"{self.root}/out/packed.parquet")
         return {"final_docs": obs.get["n"],
-                "sequences": self.spark.read.parquet(
+                "sequences": self.spark.read.schema(packed.schema).parquet(
                     f"{self.root}/out/packed.parquet")
                 .select("seq_id").distinct().count()}
 

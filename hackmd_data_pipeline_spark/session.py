@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -72,6 +73,17 @@ def get_spark(app_name: str = "hackmd_data_pipeline_spark",
     return spark
 
 
+def observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count (``n``) and the named ``aggs``
+    observed by whichever action next runs it — a sink write reports
+    its own counts with no job of its own. Read them with ``obs.get``
+    after the write. Observe a plan's top, not an input below a join:
+    a join that AQE finds empty on one side may never run the other."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n"),
+                      *(c.alias(k) for k, c in aggs.items())), obs
+
+
 def arrow_local_df(spark: SparkSession, columns: dict, schema: str):
     """Small LOCAL DataFrame built through a pandas/Arrow relation.
 
@@ -105,7 +117,6 @@ def empty_local_df(spark: SparkSession, schema):
     nullability, and ``createDataFrame(emptyRDD(), schema)`` keeps it
     but plans as an RDD scan of unknown size (a left-anti join against
     it became a SortMergeJoin: 0.80 s vs 0.008 s on 4 cores)."""
-    from pyspark.sql import DataFrame
     from pyspark.sql import types as T
 
     if isinstance(schema, str):

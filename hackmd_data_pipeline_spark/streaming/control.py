@@ -10,11 +10,10 @@ UPDATE, and doesn't need them:
     Parquet directories rewritten wholesale, versioned by generation
     (write new generation, then flip a pointer file — atomic on a
     filesystem with atomic rename; analogous to a 1-row commit log).
-  * the generation file is written and read by the DRIVER through
-    Arrow (``DataFrame.toArrow`` -> ``pyarrow.parquet``, and back as a
-    local relation): a flip costs the one job that evaluates the new
-    state, a read costs none — where a Spark parquet write and a
-    collect each cost a job of their own.
+  * the generation file is written and read by the DRIVER as an
+    Arrow table (``pyarrow.parquet``; read back as Arrow or a local
+    relation): neither a flip nor a read costs a Spark job — where a
+    Spark parquet write and a collect each cost a job of their own.
   * the claim race disappears: Spark owns all parallelism, so claim =
     filter + order + limit on a single driver (plans/control.py), and
     the streaming path gets exactly-once file claiming from the
@@ -26,9 +25,14 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..session import empty_local_df
 
 
 class ControlTable:
@@ -37,8 +41,8 @@ class ControlTable:
     Layout: ``{root}/gen={n}/part-00000.parquet`` + ``{root}/_CURRENT``
     pointer. Readers read the pointed generation; writers write gen n+1
     then rename a temp pointer over _CURRENT (atomic on POSIX). The
-    driver writes and reads a generation through Arrow, so ``root``
-    must be a local path (the pointer flip already assumes one).
+    driver writes and reads a generation as Arrow, with no Spark job,
+    so ``root`` must be a local path (the pointer flip assumes one).
     """
 
     def __init__(self, spark: SparkSession, root: str, schema: T.StructType):
@@ -57,31 +61,34 @@ class ControlTable:
         except FileNotFoundError:
             return -1
 
+    def table(self) -> pa.Table:
+        """The current generation as an Arrow table of the declared
+        schema (empty without one). Spark-written generations' INT96
+        instants, which Arrow reads tz-naive, come back as UTC."""
+        schema = to_arrow_schema(self.schema)
+        gen = self.current_gen()
+        if gen < 0:
+            return schema.empty_table()
+        return pq.read_table(os.path.join(self.root, f"gen={gen}"),
+                             schema=schema)
+
     def read(self) -> DataFrame:
         """The current generation as a local relation typed by exactly
         ``self.schema`` (nullability included), built without a Spark
         job. An eager snapshot: a later generation GC cannot pull it
-        out from under the reader. Reading through the declared Arrow
-        schema also takes generations written by Spark itself (INT96
-        instants, which Arrow reads tz-naive) as UTC instants."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from ..session import empty_local_df
-
-        gen = self.current_gen()
-        if gen < 0:
+        out from under the reader."""
+        if self.current_gen() < 0:
             return empty_local_df(self.spark, self.schema)
-        table = pq.read_table(os.path.join(self.root, f"gen={gen}"),
-                              schema=to_arrow_schema(self.schema))
-        return self.spark.createDataFrame(table, self.schema)
+        return self.spark.createDataFrame(self.table(), self.schema)
 
-    def write(self, df: DataFrame) -> int:
-        import pyarrow.parquet as pq
-
+    def write(self, table: pa.Table) -> int:
+        """Write ``table``'s declared columns, cast to the declared
+        schema, as the next generation. DataFrame callers pass
+        ``df.toArrow()``."""
+        table = (table.select([f.name for f in self.schema.fields])
+                 .cast(to_arrow_schema(self.schema)))
         gen = self.current_gen() + 1
         path = os.path.join(self.root, f"gen={gen}")
-        table = df.toArrow()
         # a crash between this write and the flip leaves gen n+1
         # unreferenced; the retry starts it over
         shutil.rmtree(path, ignore_errors=True)
@@ -126,7 +133,7 @@ def claim_pending(table: ControlTable, n: int,
         )
         .drop("_claimed")
     )
-    table.write(updated.select(*[f.name for f in table.schema.fields]))
+    table.write(updated.toArrow())
     return table.read().join(F.broadcast(claimed_keys.select(key_col)), key_col, "left_semi")
 
 
@@ -152,4 +159,4 @@ def mark_status(table: ControlTable, keys: list[str], status: str,
             F.when(hit, F.lit(error_msg)).otherwise(F.col("error_msg")),
         )
     )
-    table.write(updated.select(*[f.name for f in table.schema.fields]))
+    table.write(updated.toArrow())

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from ..operators.freeze import checkpoint_with_block_ids, unpersist_blocks
 from ..plans.ingest import completeness_filter, to_canonical, to_history
 from ..schemas import RAW_RECORD_SCHEMA
+from ..session import observed
 from ..sources.writers import write_partitioned_parquet
 
 
@@ -96,6 +97,12 @@ def run_ingest_stream(spark: SparkSession, raw_path: str, out_root: str,
         .withColumn("source_path", F.input_file_name())
     )
 
+    # a micro-batch runs on the stream's thread, under the query's run
+    # id: run it under the caller's job group, if any, instead
+    sc = spark.sparkContext
+    caller_group = {k: sc.getLocalProperty(k) for k in (
+        "spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel")}
     counts = {"canonical": 0, "history": 0, "quarantine": 0}
     history_path = f"{out_root}/papers_history"
 
@@ -162,15 +169,14 @@ def run_ingest_stream(spark: SparkSession, raw_path: str, out_root: str,
                 if h_ids is not None:
                     history_src = incoming.join(F.broadcast(h_ids),
                                                 "entry_id", "left_anti")
-            history = to_history(history_src)
-
-            counts["canonical"] += canonical.count()
-            counts["history"] += history.count()
-
+            canonical, c_obs = observed(canonical)
+            history, h_obs = observed(to_history(history_src))
             write_partitioned_parquet(canonical, canonical_path,
                                       partition_cols=("primary_category",))
             write_partitioned_parquet(history, history_path,
                                       partition_cols=(), sort_col=None)
+            counts["canonical"] += c_obs.get["n"]
+            counts["history"] += h_obs.get["n"]
             # Quarantine exactly-once: a batch replayed after a crash
             # re-presents the SAME whole files; anti-join on a ROW
             # identity — (source_path, xxhash64 of the corrupt line) —
@@ -215,8 +221,20 @@ def run_ingest_stream(spark: SparkSession, raw_path: str, out_root: str,
         if batch_hook is not None:
             batch_hook(epoch_id)
 
+    def in_caller_group(batch: DataFrame, epoch_id: int) -> None:
+        if caller_group["spark.jobGroup.id"] is None:
+            return handle_batch(batch, epoch_id)
+        own = {k: sc.getLocalProperty(k) for k in caller_group}
+        for k, v in caller_group.items():
+            sc.setLocalProperty(k, v)
+        try:
+            handle_batch(batch, epoch_id)
+        finally:
+            for k, v in own.items():
+                sc.setLocalProperty(k, v)
+
     q = (
-        raw.writeStream.foreachBatch(handle_batch)
+        raw.writeStream.foreachBatch(in_caller_group)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

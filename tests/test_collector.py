@@ -85,6 +85,68 @@ def test_partition_layout_and_stats(spark, collected):
     assert by_cat["cs.CL"].s3_count == 7
     assert by_cat["cs.DB"].s3_count == 5
 
+
+def test_raw_files_hold_at_most_batch_size_records(collected):
+    """Every raw file holds at most ``batch_size`` (3) records, the
+    reference's per-file batching: cs.CL's 7 records land as 3+3+1."""
+    import glob
+    import gzip
+
+    _, root, _ = collected
+    sizes = {}
+    for path in glob.glob(f"{root}/raw/_cat=*/_ingest_date=*/*.json.gz"):
+        with gzip.open(path, "rt") as f:
+            sizes.setdefault(path.split("/")[-3], []).append(
+                sum(1 for line in f if line.strip()))
+    assert all(n <= 3 for ns in sizes.values() for n in ns), sizes
+    assert sorted(sizes["_cat=cs_CL"]) == [1, 3, 3]
+    assert sum(map(sum, sizes.values())) == 5 * len(CATS) + 2
+
+
+def test_control_flips_launch_no_job(spark, tmp_path):
+    """Registration, selection and the finish flip are driver-side
+    Arrow work on the progress generation: no Spark job."""
+    from .conftest import jobs_launched
+
+    c = Collector(spark, str(tmp_path / "flips"), _fake_fetch, CATS,
+                  categories_per_run=3)
+    assert jobs_launched(spark, c.register_new_categories) == 0
+    got = []
+    assert jobs_launched(spark, lambda: got.extend(c.pending_categories())) == 0
+    assert got == ["cs.CL", "cs.DB", "cs.LG"]
+    assert jobs_launched(spark, lambda: c._mark_finished("cs.CL")) == 0
+    assert c.pending_categories() == ["cs.DB", "cs.LG", "stat.ML"]
+
+
+def test_pending_skips_null_status_in_name_order(spark, tmp_path):
+    """SQL semantics: a NULL ``status`` is not pending (``NULL !=
+    'Finished'`` is not true), and pending categories come back in
+    name order, whatever the generation's row order."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from hackmd_data_pipeline_spark.schemas import CATEGORY_PROGRESS_SCHEMA
+
+    c = Collector(spark, str(tmp_path / "pending"), _fake_fetch,
+                  ["e", "b", "a", "d", "c"], categories_per_run=2)
+    gen = os.path.join(c.progress.root, "gen=0")
+    os.makedirs(gen)
+    pq.write_table(pa.Table.from_pylist(
+        [{"category_name": n, "status": s, "updated_at": None}
+         for n, s in (("e", ""), ("b", None), ("a", ""), ("d", ""),
+                      ("c", "Finished"))],
+        schema=to_arrow_schema(CATEGORY_PROGRESS_SCHEMA)),
+        os.path.join(gen, "part-00000.parquet"))
+    with open(os.path.join(c.progress.root, "_CURRENT"), "w") as f:
+        f.write("0")
+    assert c.pending_categories() == ["a", "d"]
+    c.categories_per_run = 10
+    assert c.pending_categories() == ["a", "d", "e"]
+
+
 def test_idempotent_rerun(spark, collected):
     c, root, _ = collected
     # all categories Finished -> a new run processes nothing

@@ -300,16 +300,32 @@ def test_composed_pipeline_kill_restart_exactly_once(spark, tmp_path):
 
 
 def test_ledger_mark_launches_at_most_one_job(spark, tmp_path):
-    """A ledger flip is its generation write and nothing else: no
-    read-back of the ledger, no separate collect."""
+    """A ledger flip is the driver's Arrow write of its generation and
+    nothing else: no Spark job at all."""
     from .conftest import jobs_launched
 
     p = CorpusPipeline(spark, str(tmp_path / "mark"), _fetch, CATEGORIES)
     for status in ("processing", "finished"):
         assert jobs_launched(
-            spark, lambda: p._mark("collect", status, 1)) <= 1
+            spark, lambda: p._mark("collect", status, 1)) == 0
     assert {r.stage: r.status for r in p.ledger.read().collect()} == {
         "collect": "finished"}
+
+
+def test_audit_spans_counts_input_when_every_doc_dropped(spark, tmp_path):
+    """With every doc above ``max_dup_fraction`` the audit keeps none,
+    and the stage still reports each input doc as dropped."""
+    texts = ["alpha beta gamma delta epsilon zeta eta theta iota kappa"] * 3
+    p = CorpusPipeline(spark, str(tmp_path / "audit"), _fetch, CATEGORIES,
+                       span_k=4, max_dup_fraction=0.5)
+    spark.createDataFrame(
+        [(i, f"id{i}", t, "en", "cs.CL", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, entry_id string, text string, lang string, "
+        "source string, n_chars int",
+    ).write.parquet(p.outputs()["resolved"])
+    assert p._stage_audit_spans() == {"audited_kept": 0,
+                                      "dropped_verbatim": 3}
+    assert spark.read.parquet(p.outputs()["audited"]).count() == 0
 
 
 @pytest.fixture(scope="module", params=[False, True], ids=["float", "q8"])

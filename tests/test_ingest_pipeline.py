@@ -119,7 +119,7 @@ def _seed_batches(spark, n=7):
 
 def test_control_table_claim_and_status(spark, tmp_path):
     table = ControlTable(spark, str(tmp_path / "raw_batches"), RAW_BATCHES_SCHEMA)
-    table.write(_seed_batches(spark))
+    table.write(_seed_batches(spark).toArrow())
 
     claimed = claim_pending(table, 3)
     keys = sorted(r.batch_id for r in claimed.collect())
@@ -145,7 +145,7 @@ def test_control_table_generation_gc(spark, tmp_path):
     import os
     table = ControlTable(spark, str(tmp_path / "gc"), RAW_BATCHES_SCHEMA)
     for _ in range(4):
-        table.write(_seed_batches(spark, n=2))
+        table.write(_seed_batches(spark, n=2).toArrow())
     gens = [d for d in os.listdir(table.root) if d.startswith("gen=")]
     assert len(gens) <= 2                         # old generations GC'd
     assert table.read().count() == 2
@@ -163,7 +163,7 @@ def test_control_table_read_returns_declared_schema(spark, tmp_path):
         empty = table.read()
         assert empty.schema == schema
         assert empty.to(schema).count() == 0
-        table.write(seed if seed is not None else empty)
+        table.write((seed if seed is not None else empty).toArrow())
         written = table.read()
         assert written.schema == schema
         assert written.to(schema).count() == (0 if seed is None else seed.count())
@@ -177,7 +177,7 @@ def test_control_table_read_launches_no_job(spark, tmp_path):
 
     table = ControlTable(spark, str(tmp_path / "jobs"), RAW_BATCHES_SCHEMA)
     assert jobs_launched(spark, table.read) == 0
-    table.write(_seed_batches(spark))
+    table.write(_seed_batches(spark).toArrow())
     snap = []
     assert jobs_launched(spark, lambda: snap.append(table.read())) == 0
     assert jobs_launched(spark, snap[0].collect) == 0
@@ -206,7 +206,7 @@ def test_control_table_timestamps_survive_non_utc_session(spark, tmp_path,
             F.lit(1).alias("attempt"),
             F.timestamp_seconds(F.lit(epoch)).alias("updated_at"))
         table = ControlTable(spark, str(tmp_path / "tz"), STAGE_LEDGER_SCHEMA)
-        table.write(row)
+        table.write(row.toArrow())
         legacy = ControlTable(spark, str(tmp_path / "legacy"),
                               STAGE_LEDGER_SCHEMA)
         row.coalesce(1).write.parquet(os.path.join(legacy.root, "gen=0"))
@@ -223,6 +223,34 @@ def test_control_table_timestamps_survive_non_utc_session(spark, tmp_path,
 
 
 # --------------------------------------------------------------- streaming
+
+
+def test_ingest_jobs_run_in_callers_job_group(spark, raw_dir, tmp_path):
+    """Micro-batches run on the stream's thread, yet every job
+    ``run_ingest_stream`` launches belongs to the caller's job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def last_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())),
+                   default=-1)
+
+    group = f"ingest-{uuid.uuid4().hex}"
+    first = last_job() + 1
+    sc.setJobGroup(group, group)
+    try:
+        run_ingest_stream(spark, raw_dir, str(tmp_path / "out"),
+                          str(tmp_path / "ckpt"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    launched = set(range(first, last_job() + 1))
+    assert launched
+    assert launched <= set(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_streaming_ingest_exactly_once(spark, raw_dir, tmp_path):
