@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import empty_local_df
+from ..session import empty_local_df, in_caller_group
+from ..sources.fs import fs_delete, fs_exists
 from .dedup import (
     band_buckets,
     dedup_clusters,
@@ -38,11 +39,47 @@ from .dedup import (
 )
 
 
+def _write_shingles_and_signatures(sh: DataFrame, sh_path: str,
+                                   sig_path: str, id_col: str,
+                                   num_hashes: int) -> None:
+    """Write the shingle frame ``sh`` to ``sh_path`` and its MinHash
+    signatures to ``sig_path`` as one stage: the two writes run
+    concurrently from one persisted frame, so the text is shingled
+    once and the commit takes about one write's wall time (the block
+    manager's per-partition write lock makes the second consumer of a
+    caching partition wait instead of recomputing). Both writes run in
+    the caller's job group.
+
+    The pair commits together or not at all: if either write fails,
+    both outputs are removed once both writes have ended, and the
+    error propagates. A resume then finds neither ``_SUCCESS`` and
+    rebuilds both from one input, never new signatures beside stale
+    shingles or the reverse."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    spark = sh.sparkSession
+    sh = sh.persist()
+    writes = (
+        lambda: sh.write.mode("overwrite").parquet(sh_path),
+        lambda: minhash_signatures_from(sh, id_col, num_hashes)
+        .write.mode("overwrite").parquet(sig_path),
+    )
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [pool.submit(in_caller_group(spark, w)) for w in writes]
+        for f in futs:
+            f.result()
+    except BaseException:
+        for path in (sh_path, sig_path):
+            fs_delete(spark, path)
+        raise
+    finally:
+        sh.unpersist()
+
+
 def _stage_complete(spark: SparkSession, path: str) -> bool:
     """A stage directory counts as complete iff Spark's commit marker
     is present — a crashed write leaves files but no _SUCCESS."""
-    from ..sources.fs import fs_exists
-
     return fs_exists(spark, path + "/_SUCCESS")
 
 
@@ -54,11 +91,14 @@ def build_dedup_store(df: DataFrame, dest: str, id_col: str = "doc_id",
                       through: str = "clusters") -> None:
     """Materialize the dedup artifact chain under ``dest``.
 
-    Stage order matters: every write is followed by a re-read, so each
-    stage's lineage roots at parquet, not at the raw corpus — the
-    corpus text is scanned exactly once (the shingle pass). A stage
-    whose output already has a ``_SUCCESS`` commit marker is SKIPPED
-    (read back instead of recomputed), so a failed/interrupted build
+    Stage order matters: the pairs and clusters stages root at the
+    parquet of the stage before, not at the raw corpus — the corpus
+    text is scanned exactly once (the shingle pass). Shingles and
+    signatures, when both are due, commit as one stage: both writes
+    run from one persisted shingle frame, and a failure of either
+    removes both (``_write_shingles_and_signatures``). A stage whose
+    output already has a ``_SUCCESS`` commit marker is SKIPPED (read
+    back instead of recomputed), so a failed/interrupted build
     resumes from the last completed stage when re-called with the same
     dest — pass ``force=True`` to rebuild everything (required when
     the INPUT corpus or parameters changed; stage-skip cannot detect
@@ -83,36 +123,12 @@ def build_dedup_store(df: DataFrame, dest: str, id_col: str = "doc_id",
     need_sig = depth >= 1 and (force or not _stage_complete(
         spark, dest + "/signatures"))
     if need_sh and need_sig:
-        # both stages due: derive signatures from the PERSISTED shingle
-        # frame and run the two writes CONCURRENTLY (guide §2.6) — one
-        # epoch-style overlap instead of write -> readback -> write.
-        # The corpus text is still scanned exactly once: the block
-        # manager's per-partition write lock makes the second consumer
-        # of a caching partition wait for the first instead of
-        # recomputing (measured 1.32 -> 0.96 s for the two-stage build
-        # over 3/4 of sf0.1, r12). Values identical either way — the
-        # signature min-reductions see the same rows from cache as
-        # from the parquet readback.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import StorageLevel
-
-        sh_live = hashed_shingle_table(df, id_col, text_col, shingle_n)
-        sh_live = sh_live.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(lambda: sh_live.write.mode("overwrite")
-                                .parquet(dest + "/shingles")),
-                    pool.submit(lambda: minhash_signatures_from(
-                        sh_live, id_col, num_hashes)
-                        .write.mode("overwrite")
-                        .parquet(dest + "/signatures")),
-                ]
-                for f in futs:
-                    f.result()
-        finally:
-            sh_live.unpersist()
+        # both stages due: one overlapped commit of the pair (measured
+        # 1.32 -> 0.96 s against write -> readback -> write over 3/4
+        # of sf0.1, r12); values are identical either way
+        _write_shingles_and_signatures(
+            hashed_shingle_table(df, id_col, text_col, shingle_n),
+            dest + "/shingles", dest + "/signatures", id_col, num_hashes)
     elif need_sh:
         sh = hashed_shingle_table(df, id_col, text_col, shingle_n)
         sh.write.mode("overwrite").parquet(dest + "/shingles")
@@ -174,28 +190,9 @@ def commit_batch(batch: DataFrame, dest: str, epoch_id: int,
     sh = hashed_shingle_table(batch, id_col, text_col, shingle_n)
     if out_partitions is not None:
         sh = sh.coalesce(out_partitions)
-    sh = sh.persist()
-    # the two table writes are independent consumers of the persisted
-    # shingle frame — overlap them (guide §2.6, r12): the batch text
-    # is still shingled once (block-manager write locks make the
-    # second consumer of a caching partition wait, not recompute), and
-    # the epoch's commit wall time drops from two serial write jobs to
-    # ~one. Same files, same rows, replay-idempotent as before.
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(lambda: sh.write.mode("overwrite").parquet(
-                    f"{dest}/shingles/epoch={epoch_id}")),
-                pool.submit(lambda: minhash_signatures_from(
-                    sh, id_col, num_hashes).write.mode("overwrite")
-                    .parquet(f"{dest}/signatures/epoch={epoch_id}")),
-            ]
-            for f in futs:
-                f.result()
-    finally:
-        sh.unpersist()
+    _write_shingles_and_signatures(
+        sh, f"{dest}/shingles/epoch={epoch_id}",
+        f"{dest}/signatures/epoch={epoch_id}", id_col, num_hashes)
 
 
 def commit_spans(batch: DataFrame, dest: str, epoch_id: int,

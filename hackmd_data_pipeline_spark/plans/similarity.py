@@ -321,32 +321,21 @@ def dedup_store_commit_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Together the three entries gate build-once (store), warm-read
     (batch), and grow-by-commit (this) — the whole persistence
     surface of continuous ingest. The cycle store is rebuilt per run
-    at a wiped deterministic path (bench charges the honest composed
-    cost; epochs are overwrite-idempotent, so a crashed run's replay
-    converges)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    at a wiped deterministic path, and the three epochs commit one
+    after another, as a stream's micro-batches do (bench charges the
+    honest composed cost; epochs are overwrite-idempotent, so a
+    crashed run's replay converges)."""
     from ..operators.dedup_store import commit_batch, incremental_pairs
 
     d = load_table(spark, sf_dir, "documents")
     dest = _store_cache_path(sf_dir, "cycle")
     shutil.rmtree(dest, ignore_errors=True)
-
-    def one_epoch(args) -> None:
-        epoch, residue = args
+    for epoch, residue in enumerate((1, 2, 3)):
         # test-SF batches are ~1k docs: bound the per-epoch file count
         # (commit_batch docstring) so the cycle benches the lifecycle,
         # not 32-way file-commit overhead on kilobyte shards
         commit_batch(d.filter(F.col("doc_id") % 4 == residue), dest, epoch,
                      out_partitions=4)
-
-    # the three epoch commits are INDEPENDENT (distinct epoch dirs,
-    # overwrite-idempotent) — overlap them from a driver thread pool
-    # (guide §2.6) so one epoch's commit-protocol tail backfills with
-    # the next epoch's work; store contents identical to the serial
-    # form by construction (r12)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(one_epoch, enumerate((1, 2, 3))))
     return (incremental_pairs(d.filter(F.col("doc_id") % 4 == 0), dest,
                               jaccard_threshold=0.3)
             .orderBy("id_a", "id_b"))
@@ -424,25 +413,17 @@ def dedup_span_commit_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup counts and mismatching the hash. Together the two entries
     gate build-once (warm store) and grow-by-commit — the span
     store's whole persistence surface. Cycle store rebuilt per run at
-    a wiped pid-keyed path (honest composed cost; epoch overwrites
-    make a crashed run's replay converge)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    a wiped pid-keyed path, its epochs committed one after another as
+    a stream's micro-batches are (honest composed cost; epoch
+    overwrites make a crashed run's replay converge)."""
     from ..operators.dedup_store import commit_spans, incremental_spans
 
     d = load_table(spark, sf_dir, "documents")
     dest = _store_cache_path(sf_dir, "spancycle")
     shutil.rmtree(dest, ignore_errors=True)
-
-    def one_epoch(args) -> None:
-        epoch, residue = args
+    for epoch, residue in enumerate((1, 2, 3)):
         commit_spans(d.filter(F.col("doc_id") % 4 == residue), dest, epoch,
                      out_partitions=4)
-
-    # independent epoch commits overlapped (guide §2.6 — the
-    # dedup_store_commit_cycle posture); contents identical to serial
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(one_epoch, enumerate((1, 2, 3))))
     return (incremental_spans(d.filter(F.col("doc_id") % 4 == 0), dest)
             .orderBy("doc_id"))
 

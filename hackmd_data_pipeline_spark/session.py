@@ -13,6 +13,7 @@ env for a real cluster, Arrow enabled for the Pandas-UDF slow path.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -82,6 +83,50 @@ def observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observation]:
     obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("n"),
                       *(c.alias(k) for k, c in aggs.items())), obs
+
+
+_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description",
+               "spark.job.interruptOnCancel")
+
+
+def in_caller_group(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn``, run in the job group of the thread that wraps it. A
+    micro-batch runs on its stream's thread, under the query's run id,
+    and a pool thread under no group at all; wrap the callable where
+    the caller's group is set, and every job it launches on the other
+    thread counts under that group. Sets and restores only the group
+    keys, so the stream's own local properties survive."""
+    sc = spark.sparkContext
+    caller = {k: sc.getLocalProperty(k) for k in _GROUP_KEYS}
+    if caller["spark.jobGroup.id"] is None:
+        return fn
+
+    def run(*args, **kwargs):
+        own = {k: sc.getLocalProperty(k) for k in _GROUP_KEYS}
+        for k, v in caller.items():
+            sc.setLocalProperty(k, v)
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            for k, v in own.items():
+                sc.setLocalProperty(k, v)
+    return run
+
+
+def drain(stream: DataFrame, checkpoint: str,
+          handle_batch: Callable[[DataFrame, int], None]) -> None:
+    """Run ``handle_batch(batch, epoch_id)`` over every micro-batch
+    pending on ``stream``, then stop (``availableNow``): the
+    reference's self-invoking Lambda loop. The checkpoint records the
+    files each epoch consumed, so a re-run drains only what is new and
+    a failed epoch replays with the same id. Batches run in the
+    caller's job group."""
+    (stream.writeStream
+     .foreachBatch(in_caller_group(stream.sparkSession, handle_batch))
+     .option("checkpointLocation", checkpoint)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
 
 
 def arrow_local_df(spark: SparkSession, columns: dict, schema: str):

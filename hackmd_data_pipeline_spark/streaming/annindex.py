@@ -44,6 +44,7 @@ from ..operators.similarity import (
     publish_gen_manifest,
     upsert_ivf_index,
 )
+from ..session import drain
 from ..sources.fs import fs_delete, fs_exists
 
 
@@ -105,12 +106,8 @@ def run_ann_index_ingest(spark: SparkSession, vecs_path: str,
         fresh.unpersist()
         batch.unpersist()
 
-    stream = spark.readStream.schema(vec_schema).parquet(vecs_path)
-    q = (stream.writeStream.foreachBatch(handle_batch)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark.readStream.schema(vec_schema).parquet(vecs_path),
+          checkpoint, handle_batch)
     return counts
 
 

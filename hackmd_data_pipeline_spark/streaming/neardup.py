@@ -52,6 +52,7 @@ from ..operators.dedup_store import (
     update_clusters,
 )
 from ..operators.joins import bounded_anti_join
+from ..session import drain
 from ..sources.fs import fs_delete, fs_exists
 
 
@@ -63,13 +64,6 @@ def _read_clean(spark: SparkSession, root: str, cols: list[str]) -> DataFrame:
     """Read an epoch-partitioned store table, projecting away the
     partition column so consumers see the flat schema."""
     return spark.read.parquet(root).select(*cols)
-
-
-# store appends go through the batch-mode commit path (r07: lifted
-# into operators/dedup_store.commit_batch so the registered
-# dedup_store_commit_cycle query value-checks the same code the
-# stream runs)
-_append_store = commit_batch
 
 
 def run_neardup_ingest(spark: SparkSession, docs_path: str, out_root: str,
@@ -167,8 +161,8 @@ def run_neardup_ingest(spark: SparkSession, docs_path: str, out_root: str,
         survivors.write.mode("overwrite").parquet(
             _epoch_dir(out_root + "/corpus", epoch_id))
         if n_kept:
-            _append_store(survivors, store_dest, epoch_id, id_col, text_col,
-                          num_hashes, shingle_n)
+            commit_batch(survivors, store_dest, epoch_id, id_col, text_col,
+                         num_hashes, shingle_n)
         # counts update LAST: a crash before this point replays the
         # epoch and converges to the same files
         counts["kept"] += n_kept
@@ -178,13 +172,8 @@ def run_neardup_ingest(spark: SparkSession, docs_path: str, out_root: str,
             batch_new.unpersist()
         batch.unpersist()
 
-    stream = (spark.readStream.schema(doc_schema)
-              .parquet(docs_path))
-    q = (stream.writeStream.foreachBatch(handle_batch)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark.readStream.schema(doc_schema).parquet(docs_path),
+          checkpoint, handle_batch)
     return counts
 
 
@@ -265,13 +254,8 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
         counts["ingested"] += n_in
         batch.unpersist()
 
-    stream = (spark.readStream.schema(doc_schema)
-              .parquet(docs_path))
-    q = (stream.writeStream.foreachBatch(handle_batch)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark.readStream.schema(doc_schema).parquet(docs_path),
+          checkpoint, handle_batch)
     clustered = (load_clusters(spark, store_dest).count()
                  if fs_exists(spark, store_dest + "/cluster_deltas")
                  or fs_exists(spark, store_dest + "/clusters") else 0)
@@ -325,7 +309,6 @@ def run_span_ingest(spark: SparkSession, docs_path: str, out_root: str,
         incremental_spans,
         load_tombstones,
     )
-    from ..operators.joins import bounded_anti_join
     from ..schemas import TPCH_SCHEMAS
 
     doc_schema = TPCH_SCHEMAS["documents"]
@@ -405,10 +388,6 @@ def run_span_ingest(spark: SparkSession, docs_path: str, out_root: str,
             fresh.unpersist()
         batch.unpersist()
 
-    stream = spark.readStream.schema(doc_schema).parquet(docs_path)
-    q = (stream.writeStream.foreachBatch(handle_batch)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark.readStream.schema(doc_schema).parquet(docs_path),
+          checkpoint, handle_batch)
     return counts

@@ -42,14 +42,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.freeze import checkpoint_with_block_ids, unpersist_blocks
 from ..plans.ingest import completeness_filter, to_canonical, to_history
 from ..schemas import RAW_RECORD_SCHEMA
-from ..session import observed
+from ..session import drain, observed
+from ..sources.fs import fs_exists
 from ..sources.writers import write_partitioned_parquet
 
 
@@ -97,12 +97,6 @@ def run_ingest_stream(spark: SparkSession, raw_path: str, out_root: str,
         .withColumn("source_path", F.input_file_name())
     )
 
-    # a micro-batch runs on the stream's thread, under the query's run
-    # id: run it under the caller's job group, if any, instead
-    sc = spark.sparkContext
-    caller_group = {k: sc.getLocalProperty(k) for k in (
-        "spark.jobGroup.id", "spark.job.description",
-        "spark.job.interruptOnCancel")}
     counts = {"canonical": 0, "history": 0, "quarantine": 0}
     history_path = f"{out_root}/papers_history"
 
@@ -125,21 +119,25 @@ def run_ingest_stream(spark: SparkSession, raw_path: str, out_root: str,
         store's entry_ids within the lookback window (the reference's
         6-month in-memory id set, arxiv_collector.py:123-134) —
         bounded, so it broadcasts at scale. None if the store does
-        not exist yet (first batch)."""
-        anchor = _window_anchor()
-        try:
-            return (
-                spark.read.parquet(path)
-                .filter(F.col("etl_timestamp")
-                        >= anchor - F.expr(f"INTERVAL {lookback}"))
-                .select("entry_id")
-            )
-        except AnalysisException:
+        not exist yet (first batch). Read with the two columns' types
+        given, so no footer is read to infer them and a store whose
+        first write never committed reads as empty."""
+        if not fs_exists(spark, path):
             return None
+        return (
+            spark.read.schema("entry_id string, etl_timestamp timestamp")
+            .parquet(path)
+            .filter(F.col("etl_timestamp")
+                    >= _window_anchor() - F.expr(f"INTERVAL {lookback}"))
+            .select("entry_id")
+        )
 
     def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        bad = batch.filter(F.col("_corrupt_record").isNotNull())
-        good = batch.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+        # the checkpoint job below counts the corrupt rows: a clean
+        # batch then runs no quarantine job at all
+        parsed, b_obs = observed(
+            batch, bad=F.count_if(F.col("_corrupt_record").isNotNull()))
+        good = parsed.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
         good = completeness_filter(good)
         if dedup:
             # O-23 within-batch first-wins; the cross-batch anti-join
@@ -177,43 +175,8 @@ def run_ingest_stream(spark: SparkSession, raw_path: str, out_root: str,
                                       partition_cols=(), sort_col=None)
             counts["canonical"] += c_obs.get["n"]
             counts["history"] += h_obs.get["n"]
-            # Quarantine exactly-once: a batch replayed after a crash
-            # re-presents the SAME whole files; anti-join on a ROW
-            # identity — (source_path, xxhash64 of the corrupt line) —
-            # not the path alone (r05 ADVICE), so a crash that left a
-            # PARTIALLY-visible quarantine append (non-job-atomic
-            # committers) still replays the file's remaining corrupt
-            # rows instead of dropping them forever. The build side is
-            # BOUNDED by the same etl_timestamp lookback as the
-            # canonical/history sides (r06 ADVICE: an unbounded
-            # distinct over all-time corrupt rows grows forever on a
-            # long-running deployment — and a replayed file can only
-            # be one the checkpoint saw within the retention window);
-            # rows written before the column existed stay in the build
-            # side rather than being silently expired.
-            bad = (bad.select("source_path", "_corrupt_record")
-                   .withColumn("_row_h", F.xxhash64("_corrupt_record"))
-                   .withColumn("etl_timestamp", _window_anchor()))
-            try:
-                seen = spark.read.parquet(quarantine_path)
-                if "etl_timestamp" in seen.columns:
-                    seen = seen.filter(
-                        F.coalesce(
-                            F.col("etl_timestamp")
-                            >= _window_anchor() - F.expr(f"INTERVAL {lookback}"),
-                            F.lit(True)))
-                seen = (seen.select("source_path",
-                                    F.xxhash64("_corrupt_record").alias("_row_h"))
-                        .distinct())
-                bad = bad.join(F.broadcast(seen),
-                               ["source_path", "_row_h"], "left_anti")
-            except AnalysisException:
-                pass  # quarantine table not created yet
-            bad = bad.drop("_row_h")
-            nbad = bad.count()
-            counts["quarantine"] += nbad
-            if nbad:
-                bad.write.mode("append").parquet(quarantine_path)
+            if b_obs.get["bad"]:
+                counts["quarantine"] += _quarantine(batch)
         finally:
             # release even when a sink throws — a retried/failed batch
             # must not leak its checkpoint blocks
@@ -221,23 +184,44 @@ def run_ingest_stream(spark: SparkSession, raw_path: str, out_root: str,
         if batch_hook is not None:
             batch_hook(epoch_id)
 
-    def in_caller_group(batch: DataFrame, epoch_id: int) -> None:
-        if caller_group["spark.jobGroup.id"] is None:
-            return handle_batch(batch, epoch_id)
-        own = {k: sc.getLocalProperty(k) for k in caller_group}
-        for k, v in caller_group.items():
-            sc.setLocalProperty(k, v)
-        try:
-            handle_batch(batch, epoch_id)
-        finally:
-            for k, v in own.items():
-                sc.setLocalProperty(k, v)
+    def _quarantine(batch: DataFrame) -> int:
+        """Append ``batch``'s corrupt rows not yet quarantined; return
+        how many were appended.
 
-    q = (
-        raw.writeStream.foreachBatch(in_caller_group)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        Exactly-once: a batch replayed after a crash re-presents the
+        SAME whole files; anti-join on a ROW identity — (source_path,
+        xxhash64 of the corrupt line) — not the path alone (r05
+        ADVICE), so a crash that left a PARTIALLY-visible quarantine
+        append (non-job-atomic committers) still replays the file's
+        remaining corrupt rows instead of dropping them forever. The
+        build side is BOUNDED by the same etl_timestamp lookback as
+        the canonical/history sides (r06 ADVICE: an unbounded distinct
+        over all-time corrupt rows grows forever on a long-running
+        deployment — and a replayed file can only be one the
+        checkpoint saw within the retention window); rows written
+        before the column existed read it as null and stay in the
+        build side rather than being silently expired."""
+        bad = (batch.filter(F.col("_corrupt_record").isNotNull())
+               .select("source_path", "_corrupt_record")
+               .withColumn("_row_h", F.xxhash64("_corrupt_record"))
+               .withColumn("etl_timestamp", _window_anchor()))
+        if fs_exists(spark, quarantine_path):
+            seen = (spark.read.schema("source_path string, "
+                                      "_corrupt_record string, "
+                                      "etl_timestamp timestamp")
+                    .parquet(quarantine_path)
+                    .filter(F.coalesce(
+                        F.col("etl_timestamp")
+                        >= _window_anchor() - F.expr(f"INTERVAL {lookback}"),
+                        F.lit(True)))
+                    .select("source_path",
+                            F.xxhash64("_corrupt_record").alias("_row_h"))
+                    .distinct())
+            bad = bad.join(F.broadcast(seen),
+                           ["source_path", "_row_h"], "left_anti")
+        bad, q_obs = observed(bad.drop("_row_h"))
+        bad.write.mode("append").parquet(quarantine_path)
+        return q_obs.get["n"]
+
+    drain(raw, checkpoint, handle_batch)
     return counts

@@ -101,6 +101,56 @@ def test_store_build_resumes_from_completed_stage(spark, tmp_path):
     assert stage_sig("shingles") != before, "force must rebuild"
 
 
+@pytest.mark.parametrize("caller", ["build_dedup_store", "commit_batch"])
+def test_failed_shingle_write_commits_neither_table(spark, tmp_path,
+                                                    monkeypatch, caller):
+    """Shingles and signatures commit as one stage: when the shingle
+    write fails, no ``_SUCCESS`` is left under either table, so a
+    resume on a DIFFERENT input rebuilds both, and the signatures are
+    exactly the MinHash of the shingles beside them."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hackmd_data_pipeline_spark.operators.dedup import (
+        minhash_signatures_from)
+    from hackmd_data_pipeline_spark.operators.dedup_store import commit_batch
+
+    dest = str(tmp_path / "store")
+    d = load_table(spark, SF_CORRECT, "documents").select("doc_id", "text")
+    if caller == "build_dedup_store":
+        def build(df):
+            build_dedup_store(df, dest, through="signatures")
+        sub = ""
+    else:
+        def build(df):
+            commit_batch(df, dest, 0)
+        sub = "/epoch=0"
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if "/shingles" in path:
+            raise RuntimeError("injected shingle write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(RuntimeError, match="injected"):
+        build(d.filter(F.col("doc_id") < 60))
+    monkeypatch.undo()
+    for table in ("shingles", "signatures"):
+        assert not os.path.exists(f"{dest}/{table}{sub}/_SUCCESS"), table
+
+    second = d.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 120))
+    build(second)
+    sh = spark.read.parquet(f"{dest}/shingles{sub}")
+    sigs = sorted(tuple(r) for r in
+                  spark.read.parquet(f"{dest}/signatures{sub}").collect())
+    assert sigs == sorted(tuple(r) for r in
+                          minhash_signatures_from(sh, "doc_id", 16).collect())
+    assert ({r.doc_id for r in sh.select("doc_id").collect()}
+            == {r.doc_id for r in second.select("doc_id").collect()})
+
+
 def test_incremental_pairs_match_full_rebuild(spark, tmp_path):
     """Incremental new-vs-store dedup must equal the full-rebuild pair
     set restricted to pairs touching the new batch."""

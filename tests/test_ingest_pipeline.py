@@ -11,6 +11,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from hackmd_data_pipeline_spark.operators.dedup_store import commit_batch
 from hackmd_data_pipeline_spark.plans.ingest import (
     completeness_filter, idempotent_new_rows, to_canonical, to_history)
 from hackmd_data_pipeline_spark.schemas import (
@@ -19,7 +20,13 @@ from hackmd_data_pipeline_spark.sources.jsonl_gz import (
     read_raw_jsonl, split_quarantine)
 from hackmd_data_pipeline_spark.streaming.control import (
     ControlTable, claim_pending, mark_status)
+from hackmd_data_pipeline_spark.streaming.annindex import run_ann_index_ingest
+from hackmd_data_pipeline_spark.streaming.neardup import (
+    run_cluster_maintained_ingest, run_neardup_ingest, run_span_ingest)
 from hackmd_data_pipeline_spark.streaming.pipeline import run_ingest_stream
+from hackmd_data_pipeline_spark.tables import load_table
+
+from .conftest import SF_CORRECT
 
 
 def _record(i: int, **overrides) -> dict:
@@ -225,32 +232,105 @@ def test_control_table_timestamps_survive_non_utc_session(spark, tmp_path,
 # --------------------------------------------------------------- streaming
 
 
-def test_ingest_jobs_run_in_callers_job_group(spark, raw_dir, tmp_path):
-    """Micro-batches run on the stream's thread, yet every job
-    ``run_ingest_stream`` launches belongs to the caller's job group."""
+def _ingest_raw(spark, tmp_path, raw_dir):
+    return lambda: run_ingest_stream(spark, raw_dir, str(tmp_path / "out"),
+                                     str(tmp_path / "ckpt"))
+
+
+def _docs_drop(spark, tmp_path, table="documents", key="doc_id"):
+    path = str(tmp_path / "in")
+    (load_table(spark, SF_CORRECT, table).filter(F.col(key) < 60)
+     .coalesce(1).write.parquet(path))
+    return path
+
+
+def _ingest_docs(run, **kw):
+    def prepare(spark, tmp_path, raw_dir):
+        docs = _docs_drop(spark, tmp_path)
+        return lambda: run(spark, docs, str(tmp_path / "out"),
+                           str(tmp_path / "ckpt"), str(tmp_path / "store"),
+                           **kw)
+    return prepare
+
+
+def _ingest_vectors(spark, tmp_path, raw_dir):
+    vecs = _docs_drop(spark, tmp_path, "embeddings", "vec_id")
+    return lambda: run_ann_index_ingest(spark, vecs, str(tmp_path / "idx"),
+                                        str(tmp_path / "ckpt"), nlist=4)
+
+
+def _commit_batch(spark, tmp_path, raw_dir):
+    docs = spark.read.parquet(_docs_drop(spark, tmp_path))
+    return lambda: commit_batch(docs, str(tmp_path / "store"), 0)
+
+
+_OFF_THREAD_WORK = {
+    "run_ingest_stream": _ingest_raw,
+    "run_neardup_ingest": _ingest_docs(run_neardup_ingest),
+    "run_cluster_maintained_ingest":
+        _ingest_docs(run_cluster_maintained_ingest),
+    "run_span_ingest": _ingest_docs(run_span_ingest, k=8),
+    "run_ann_index_ingest": _ingest_vectors,
+    "commit_batch": _commit_batch,
+}
+
+
+def _last_job(sc) -> int:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())),
+               default=-1)
+
+
+@pytest.mark.parametrize("work", sorted(_OFF_THREAD_WORK))
+def test_ingest_jobs_run_in_callers_job_group(spark, raw_dir, tmp_path, work):
+    """Micro-batches run on the stream's thread and ``commit_batch``'s
+    writes on pool threads, yet every job each launches belongs to the
+    caller's job group."""
     import uuid
 
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-
-    def last_job() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = store.jobsList(None)
-        return max((jobs.apply(i).jobId() for i in range(jobs.size())),
-                   default=-1)
-
+    run = _OFF_THREAD_WORK[work](spark, tmp_path, raw_dir)
     group = f"ingest-{uuid.uuid4().hex}"
-    first = last_job() + 1
+    first = _last_job(sc) + 1
     sc.setJobGroup(group, group)
     try:
-        run_ingest_stream(spark, raw_dir, str(tmp_path / "out"),
-                          str(tmp_path / "ckpt"))
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    launched = set(range(first, last_job() + 1))
+    launched = set(range(first, _last_job(sc) + 1))
     assert launched
     assert launched <= set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_clean_ingest_batch_runs_no_job_after_its_sinks(spark, tmp_path,
+                                                        monkeypatch):
+    """A micro-batch with no corrupt row finds that out from the
+    checkpoint job's observed count: after its canonical and history
+    writes it launches no further job (no quarantine count or read)."""
+    from hackmd_data_pipeline_spark.streaming import pipeline as P
+
+    raw = tmp_path / "raw_clean"
+    raw.mkdir()
+    with gzip.open(raw / "clean.jsonl.gz", "wt", encoding="utf-8") as f:
+        f.write("\n".join(json.dumps(_record(i)) for i in range(6)) + "\n")
+    sc = spark.sparkContext
+    after_sinks, at_hook = [], []
+    real_write = P.write_partitioned_parquet
+
+    def write(df, path, **kw):
+        real_write(df, path, **kw)
+        after_sinks.append(_last_job(sc))
+
+    monkeypatch.setattr(P, "write_partitioned_parquet", write)
+    counts = run_ingest_stream(
+        spark, str(raw), str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        batch_hook=lambda epoch: at_hook.append(_last_job(sc)))
+    assert counts == {"canonical": 6, "history": 6, "quarantine": 0}
+    assert len(after_sinks) == 2 and len(at_hook) == 1
+    assert at_hook[0] == after_sinks[-1]
+    assert not (tmp_path / "out" / "quarantine").exists()
 
 
 def test_streaming_ingest_exactly_once(spark, raw_dir, tmp_path):
