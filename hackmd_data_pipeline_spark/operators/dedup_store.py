@@ -445,21 +445,26 @@ def _gate_dead(spark: SparkSession, root: str, dead: DataFrame) -> DataFrame:
     return dead
 
 
+# The store tables' declared schemas: a read that names its schema
+# launches no schema-inference job (an inferring read costs one per call)
+_TOMBSTONE_SCHEMA = "id long"
+_PAIR_SCHEMA = "id_a long, id_b long, jaccard double"
+_CLUSTER_SCHEMA = "id long, cluster_id long"
+
+
 def load_tombstones(spark: SparkSession, dest: str,
                     delta_root: str | None = None) -> DataFrame | None:
     """All deleted ids (``id`` column), or None when no deletion has
     ever been committed — callers skip the anti-join entirely in the
     no-deletes case, so the hot paths pay nothing until the first
-    ``remove_docs``."""
+    ``remove_docs``. One multi-path read of every committed seq."""
     root = delta_root or dest
     seqs = _tombstone_seqs(spark, root)
     if not seqs:
         return None
-    df = spark.read.parquet(f"{root}/tombstones/seq={seqs[0]}")
-    for s in seqs[1:]:
-        df = df.unionByName(
-            spark.read.parquet(f"{root}/tombstones/seq={s}"))
-    return df.select("id").distinct()
+    return (spark.read.schema(_TOMBSTONE_SCHEMA)
+            .parquet(*[f"{root}/tombstones/seq={s}" for s in seqs])
+            .distinct())
 
 
 def load_pairs(spark: SparkSession, dest: str,
@@ -471,15 +476,16 @@ def load_pairs(spark: SparkSession, dest: str,
     remove_docs maintain), MINUS any pair touching a tombstoned id
     (a deleted doc's content must stop influencing resolution the
     moment its tombstone commits, before compaction physically drops
-    its rows). Read via explicit per-directory unions because Spark's
-    partition discovery rejects mixing the flat layout with epoch
-    subdirs."""
+    its rows). Read as ONE scan over the explicit directories, each
+    its own base path, because Spark's partition discovery rejects
+    mixing the flat layout with epoch subdirs under one root. A delta
+    written without ``jaccard`` reads it as null."""
     from ..sources.fs import fs_exists, fs_list_dirs
 
     root = delta_root or dest
     parts = []
     if fs_exists(spark, dest + "/pairs/_SUCCESS"):
-        parts.append(spark.read.parquet(dest + "/pairs"))
+        parts.append(dest + "/pairs")
     for name in sorted(fs_list_dirs(spark, root + "/pair_deltas")):
         # COMMITTED deltas only: a crashed update_clusters leaves a
         # partial dir without Spark's _SUCCESS marker; reading its
@@ -487,13 +493,10 @@ def load_pairs(spark: SparkSession, dest: str,
         # the epoch replay overwrites it (r08)
         if (name.startswith("epoch=") and fs_exists(
                 spark, f"{root}/pair_deltas/{name}/_SUCCESS")):
-            parts.append(
-                spark.read.parquet(f"{root}/pair_deltas/{name}"))
+            parts.append(f"{root}/pair_deltas/{name}")
     if not parts:
         raise ValueError(f"no persisted pairs under {dest}")
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    df = spark.read.schema(_PAIR_SCHEMA).parquet(*parts)
     dead = load_tombstones(spark, dest, delta_root=root)
     if dead is not None:
         da = _gate_dead(spark, root, dead.select(F.col("id").alias("_dead_a")))
@@ -503,9 +506,6 @@ def load_pairs(spark: SparkSession, dest: str,
               .join(db,
                     F.col("id_b") == F.col("_dead_b"), "left_anti"))
     return df
-
-
-_CLUSTER_SCHEMA = "id long, cluster_id long"
 
 
 def _cluster_delta_seqs(spark: SparkSession, root: str) -> list[int]:
@@ -558,20 +558,21 @@ def load_clusters(spark: SparkSession, dest: str,
     if as_of_seq is not None:
         seqs = [s for s in seqs if s <= as_of_seq]
     has_base = fs_exists(spark, dest + "/clusters/_SUCCESS")
-    if not seqs and has_base:
-        return spark.read.parquet(dest + "/clusters")
-    base = (spark.read.parquet(dest + "/clusters") if has_base
+    base = (spark.read.schema(_CLUSTER_SCHEMA).parquet(dest + "/clusters")
+            if has_base
             # empty base: a store grown purely by update_clusters from
             # its first epoch has overlays but never a flat stage
             # (JVM empty relation — session.empty_local_df, r12)
             else empty_local_df(spark, _CLUSTER_SCHEMA))
     if not seqs:
         return base
-    df = base.select("id", "cluster_id", F.lit(-1).alias("_seq"))
-    for s in seqs:
-        df = df.unionByName(
-            spark.read.parquet(f"{root}/cluster_deltas/seq={s}")
-            .select("id", "cluster_id", F.lit(s).alias("_seq")))
+    # every overlay in one scan: basePath keeps ``seq`` as a column
+    overlays = (spark.read.schema(_CLUSTER_SCHEMA)
+                .option("basePath", root + "/cluster_deltas")
+                .parquet(*[f"{root}/cluster_deltas/seq={s}" for s in seqs]))
+    df = (base.select("id", "cluster_id", F.lit(-1).alias("_seq"))
+          .unionByName(overlays.select("id", "cluster_id",
+                                       F.col("seq").cast("int").alias("_seq"))))
     w = W.partitionBy("id").orderBy(F.col("_seq").desc())
     return (df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -622,15 +623,19 @@ def incremental_pairs(new_docs: DataFrame, dest: str,
                        dead.select(F.col("id").alias(id_col))),
             id_col, "left_anti")
 
-    # project to the logical schema: a store written by the streaming
-    # ingest is epoch-partitioned (.../epoch=N) and carries an extra
-    # partition column the flat layout doesn't have
-    sh_all = (live(spark.read.parquet(dest + "/shingles")
-                   .select(*sh_new.columns)).unionByName(sh_new))
+    # the stored tables carry the batch frames' own schemas, so the
+    # reads declare them (no inference job); project to the logical
+    # schema: a store written by the streaming ingest is
+    # epoch-partitioned (.../epoch=N) and carries an extra partition
+    # column the flat layout doesn't have
+    def stored(table: str, like: DataFrame) -> DataFrame:
+        return live(spark.read.schema(like.schema)
+                    .parquet(f"{dest}/{table}").select(*like.columns))
+
+    sh_all = stored("shingles", sh_new).unionByName(sh_new)
     buckets_new = band_buckets(sig_new, id_col, num_hashes, bands)
     buckets_all = band_buckets(
-        live(spark.read.parquet(dest + "/signatures")
-             .select(*sig_new.columns)),
+        stored("signatures", sig_new),
         id_col, num_hashes, bands
     ).unionByName(buckets_new)
 
@@ -700,7 +705,8 @@ def update_clusters(new_pairs: DataFrame, dest: str, epoch_id: int,
     root = delta_root or dest
     new_pairs.write.mode("overwrite").parquet(
         f"{root}/pair_deltas/epoch={epoch_id}")
-    p = (spark.read.parquet(f"{root}/pair_deltas/epoch={epoch_id}")
+    p = (spark.read.schema(new_pairs.schema)
+         .parquet(f"{root}/pair_deltas/epoch={epoch_id}")
          .select("id_a", "id_b"))
     dead = load_tombstones(spark, dest, delta_root=root)
     if dead is not None:

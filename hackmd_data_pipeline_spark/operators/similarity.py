@@ -503,10 +503,15 @@ def build_ivf_index(corpus: DataFrame, dest: str, nlist: int = 16,
      # lesson applied at write time)
      .repartition(F.col("cell"))
      .write.partitionBy("cell").mode("overwrite").parquet(dest + "/data"))
-    # centroids last, in the caller's thread: they key _CENTROID_CACHE,
-    # so they must never be published over cell data that failed to
-    # write, and the write keeps the caller's job group and tags
-    (_centroid_df(corpus.sparkSession, cents)
+    _write_centroids(corpus.sparkSession, cents, dest)
+
+
+def _write_centroids(spark: SparkSession, cents, dest: str) -> None:
+    """Publish ``cents`` as ``dest/centroids``. Called last, in the
+    caller's thread: centroids key _CENTROID_CACHE, so they must never
+    be published over cell data that failed to write, and the write
+    keeps the caller's job group and tags."""
+    (_centroid_df(spark, cents)
      .coalesce(1).write.mode("overwrite").parquet(dest + "/centroids"))
 
 
@@ -516,18 +521,23 @@ def build_ivf_index(corpus: DataFrame, dest: str, nlist: int = 16,
 # of driver latency apiece on the composed registry entries (r09
 # VERDICT item 1). Keyed by (realpath, _SUCCESS mtime_ns) so an
 # in-place rebuild (tests inject centroids at the same path)
-# invalidates; non-local schemes fall through to an uncached read.
+# invalidates. A local index is read through pyarrow (no Spark job);
+# a URI (s3a://, hdfs://, file:), which os.stat cannot key and pyarrow
+# cannot open for the Hadoop schemes, falls through to an uncached
+# Spark read.
 _CENTROID_CACHE: dict = {}
 
 
 def load_ivf_centroids(spark: SparkSession, index_path: str):
     """The persisted quantizer as an (nlist, dim) float64 array ordered
     by cell id — kilobytes by construction (nlist x dim doubles), a
-    bounded driver read (cached per (path, mtime) within the
-    process; the returned array is read-only)."""
+    bounded driver read (a local index through pyarrow, with no Spark
+    job; cached per (path, mtime) within the process; the returned
+    array is read-only)."""
     import os
 
     import numpy as np
+    import pyarrow.parquet as pq
 
     cdir = index_path + "/centroids"
     try:
@@ -537,9 +547,14 @@ def load_ivf_centroids(spark: SparkSession, index_path: str):
         key = None
     if key is not None and key in _CENTROID_CACHE:
         return _CENTROID_CACHE[key]
-    rows = (spark.read.parquet(cdir)
-            .orderBy("cell").collect())
-    cents = np.asarray([r.centroid for r in rows], dtype=np.float64)
+    if key is None:
+        rows = spark.read.parquet(cdir).orderBy("cell").collect()
+        cents = np.asarray([r.centroid for r in rows], dtype=np.float64)
+    else:
+        t = pq.read_table(cdir, columns=["cell", "centroid"])
+        order = np.argsort(t.column("cell").to_numpy())
+        cents = np.asarray(t.column("centroid").to_pylist(),
+                           dtype=np.float64)[order]
     cents.setflags(write=False)
     if key is not None:
         if len(_CENTROID_CACHE) > 64:
@@ -654,7 +669,8 @@ def upsert_ivf_index(batch: DataFrame, index_path: str, epoch_id: int,
     over the BATCH (centroids are a kilobyte broadcast; the base index
     is never read or rewritten), so upsert cost ∝ batch size, not
     index size. Quantizer drift is the documented trade (faiss's too):
-    cells only split/retrain on ``compact_ivf_index`` or a rebuild.
+    cells only split/retrain on a rebuild or on a ``compact_ivf_index``
+    whose measured drift exceeds sampling noise.
 
     ``delta_root`` redirects the delta directory — e.g. a scratch
     overlay over a shared read-only index. ``out_partitions``
@@ -692,17 +708,21 @@ def remove_vectors(ids: DataFrame, index_path: str,
     Returns the deleted-id count. Caveat shared with remove_docs:
     re-adding a previously-deleted id is undefined until a compaction
     separates the generations (readers exclude by id, so a re-added
-    row would be hidden too)."""
+    row would be hidden too). The count is observed on the tombstone
+    write (``Dataset.observe``), so it costs no job of its own."""
+    from pyspark.sql import Observation
+
     spark = ids.sparkSession
     root = delta_root or index_path
     dead = (ids.select(F.col(ids.columns[0]).cast("long").alias(id_col))
             .distinct())
     seqs = ivf_tombstone_seqs(spark, root)
     nxt = (seqs[-1] + 1) if seqs else 0
-    dead.coalesce(1).write.mode("overwrite").parquet(
-        f"{root}/tombstones/seq={nxt}")
+    obs = Observation()
+    (dead.coalesce(1).observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").parquet(f"{root}/tombstones/seq={nxt}"))
     publish_gen_manifest(spark, root)
-    return spark.read.parquet(f"{root}/tombstones/seq={nxt}").count()
+    return int(obs.get["n"])
 
 
 def ivf_index_data(spark: SparkSession, index_path: str,
@@ -765,55 +785,87 @@ def ivf_index_data(spark: SparkSession, index_path: str,
     return df
 
 
+def _cell_row_counts(spark: SparkSession,
+                     paths: list[str]) -> dict[int, int]:
+    """Rows per ``cell`` over cell-partitioned parquet directories.
+    Local directories are summed from the Parquet footers by the
+    driver through pyarrow (as ``streaming/control.ControlTable``
+    reads): no Spark job, no data page read; files Spark's commit
+    protocol hides (``_SUCCESS``, ``.crc``) are skipped by pyarrow's
+    default ignore prefixes. Any other path (an s3a://, hdfs:// or
+    file: URI; pyarrow cannot open the Hadoop schemes) takes one Spark
+    scan and a cell count."""
+    import pyarrow.dataset as ds
+
+    counts: dict[int, int] = {}
+    if paths and not all(_os.path.isdir(p) for p in paths):
+        for r in spark.read.parquet(*paths).groupBy("cell").count().collect():
+            counts[int(r["cell"])] = counts.get(int(r["cell"]), 0) + r["count"]
+        return counts
+    for path in paths:
+        for frag in ds.dataset(path, format="parquet",
+                               partitioning="hive").get_fragments():
+            cell = int(ds.get_partition_keys(frag.partition_expression)["cell"])
+            counts[cell] = counts.get(cell, 0) + frag.metadata.num_rows
+    return counts
+
+
 def quantizer_drift(spark: SparkSession, index_path: str,
                     delta_root: str | None = None) -> dict:
-    """Cell-balance drift of an upsert-grown index — the signal a
-    maintenance policy thresholds on to decide WHEN
-    ``compact_ivf_index``'s retrain is due (the faiss operational
-    lesson: a quantizer trained on last year's distribution funnels
-    this year's vectors into a few hot cells, and hot cells are
-    exactly what the probed-cell scan pays for).
+    """Cell-balance drift of an upsert-grown index — the signal that
+    decides whether a compaction may keep the quantizer
+    (``compact_ivf_index``): a quantizer trained on last year's
+    distribution funnels this year's vectors into a few hot cells,
+    and hot cells are exactly what the probed-cell scan pays for (the
+    faiss operational lesson).
 
     Compares the BASE generation's per-cell distribution against the
-    committed DELTAS' (both one narrow column scan + a cell count —
-    bounded by nlist rows collected). Returns::
+    committed DELTAS'. The per-cell row counts come from the Parquet
+    footers and ``nlist`` from ``load_ivf_centroids``, both read on
+    the driver, so on a local index the measurement launches no Spark
+    job (a non-local one takes one Spark scan each for base and
+    deltas). Returns::
 
         {"base_rows", "delta_rows",
          "l1_drift",          # Σ|p_delta(c) - p_base(c)| ∈ [0, 2]
+         "noise_l1",          # l1_drift's sampling-noise bound
          "max_delta_cell_share",  # hottest delta cell's fraction
          "expected_cell_share"}   # 1/nlist, the balanced reference
 
-    No deltas -> zero drift (nothing to compare). Deterministic: pure
+    ``noise_l1`` is the L1 distance two histograms of ``base_rows``
+    and ``delta_rows`` vectors drawn from ONE distribution show by
+    sampling alone. Per cell, p_delta(c) - p_base(c) has standard
+    deviation sqrt(p(1-p)) * sqrt(1/n_base + 1/n_delta), and a normal
+    variable's mean absolute value is sqrt(2/π) times its standard
+    deviation; Σ_c sqrt(p_c(1-p_c)) is largest, sqrt(nlist-1), for
+    balanced cells. So::
+
+        noise_l1 = sqrt(2/π) * sqrt(nlist-1) * sqrt(1/n_base + 1/n_delta)
+
+    An ``l1_drift`` within it is not evidence that the distribution
+    moved. Base rows are counted as stored (tombstoned rows
+    included). No deltas -> zero drift. Deterministic: pure
     counting."""
-    base = (spark.read.parquet(index_path + "/data")
-            .groupBy("cell").count().collect())
+    import math
+
     root = delta_root or index_path
-    epochs = ivf_delta_epochs(spark, root)
-    deltas = []
-    if epochs:
-        # one multi-path read + one aggregation over every committed
-        # generation (the ivf_index_data read shape)
-        deltas = (spark.read.option("basePath", root + "/deltas")
-                  .parquet(*[f"{root}/deltas/epoch={e}" for e in epochs])
-                  .groupBy("cell").count().collect())
-    nlist = spark.read.parquet(index_path + "/centroids").count()
-    nb = sum(r["count"] for r in base)
-    nd = sum(r["count"] for r in deltas)
+    pb = _cell_row_counts(spark, [index_path + "/data"])
+    pd_ = _cell_row_counts(spark, [f"{root}/deltas/epoch={e}"
+                                   for e in ivf_delta_epochs(spark, root)])
+    nlist = len(load_ivf_centroids(spark, index_path))
+    nb, nd = sum(pb.values()), sum(pd_.values())
+    noise = math.sqrt(2 / math.pi * (nlist - 1)
+                      * (1 / max(nb, 1) + 1 / max(nd, 1)))
     if nd == 0:
         return {"base_rows": nb, "delta_rows": 0, "l1_drift": 0.0,
+                "noise_l1": round(noise, 6),
                 "max_delta_cell_share": 0.0,
                 "expected_cell_share": 1.0 / nlist}
-    pb: dict = {}
-    for r in base:
-        pb[int(r["cell"])] = pb.get(int(r["cell"]), 0) + r["count"]
-    pd_: dict = {}
-    for r in deltas:
-        pd_[int(r["cell"])] = pd_.get(int(r["cell"]), 0) + r["count"]
-    cells = set(pb) | set(pd_)
     l1 = sum(abs(pd_.get(c, 0) / nd - pb.get(c, 0) / max(nb, 1))
-             for c in cells)
+             for c in set(pb) | set(pd_))
     return {"base_rows": nb, "delta_rows": nd,
             "l1_drift": round(l1, 6),
+            "noise_l1": round(noise, 6),
             "max_delta_cell_share": round(max(pd_.values()) / nd, 6),
             "expected_cell_share": 1.0 / nlist}
 
@@ -822,26 +874,41 @@ def compact_ivf_index(spark: SparkSession, src: str, dest: str,
                       delta_root: str | None = None,
                       nlist: int | None = None, seed: int = 42,
                       sample_cap: int = 8192,
-                      vec_col: str = "embedding") -> None:
+                      vec_col: str = "embedding") -> dict:
     """Fold an upsert-grown IVF index (base + epoch deltas — per-epoch
     small files after months of ingest) into a fresh single-generation
-    index at ``dest``, RETRAINING the quantizer over the merged corpus
-    (bounded sample) so cell balance recovers from quantizer drift —
-    the faiss retrain-and-add maintenance cycle. Writes a NEW
-    directory; the caller swaps pointers once complete (compact_store
-    posture). Pass ``nlist`` to resize the cell count (e.g. cells ∝ N
-    as the corpus grows — the SCALE.md recall discipline); default
-    keeps the base index's."""
+    index at ``dest``, minus tombstoned rows. Writes a NEW directory;
+    the caller swaps pointers once complete (compact_store posture).
+
+    The quantizer is RETRAINED only when it has drifted: when ``nlist``
+    asks for another cell count (e.g. cells ∝ N as the corpus grows —
+    the SCALE.md recall discipline; default keeps the base index's),
+    or when ``quantizer_drift``'s ``l1_drift`` exceeds its
+    ``noise_l1`` bound (see there). A retrain trains k-means over the
+    merged corpus's bounded sample and re-places every row — the faiss
+    retrain-and-add cycle. Otherwise the centroids are KEPT and base ∪
+    deltas, already placed by them, are written through
+    ``repartition("cell")``: no sample, no k-means, no re-placement,
+    and the result equals a build of the merged rows with the
+    centroids injected (the Incremental Top-K lesson, EDBT 2020:
+    reuse prior state, recompute only what changed).
+
+    Returns ``{"retrained": bool, "l1_drift": float}``."""
+    cents = load_ivf_centroids(spark, src)
+    drift = quantizer_drift(spark, src, delta_root=delta_root)
+    nlist = len(cents) if nlist is None else int(nlist)
+    retrain = nlist != len(cents) or drift["l1_drift"] > drift["noise_l1"]
     merged = ivf_index_data(spark, src, delta_root=delta_root)
-    if nlist is None:
-        # centroid count via the cached driver read (kilobytes), not a
-        # parquet count() job — the maintenance path calls this right
-        # after a search/upsert already primed the cache (r11, guide
-        # §1.2: don't spend a job on metadata)
-        nlist = len(load_ivf_centroids(spark, src))
-    build_ivf_index(merged.select(merged.columns[0], vec_col), dest,
-                    nlist=int(nlist), id_col=merged.columns[0],
-                    vec_col=vec_col, seed=seed, sample_cap=sample_cap)
+    if retrain:
+        build_ivf_index(merged.select(merged.columns[0], vec_col), dest,
+                        nlist=nlist, id_col=merged.columns[0],
+                        vec_col=vec_col, seed=seed, sample_cap=sample_cap)
+    else:
+        # the build_ivf_index layout: one file per cell directory
+        (merged.repartition(F.col("cell"))
+         .write.partitionBy("cell").mode("overwrite").parquet(dest + "/data"))
+        _write_centroids(spark, cents, dest)
+    return {"retrained": retrain, "l1_drift": drift["l1_drift"]}
 
 
 def _probe_topk(m, cents, k_eff: int):
@@ -1603,7 +1670,7 @@ def upsert_ivfpq_index(batch: DataFrame, index_path: str, epoch_id: int,
     ``{delta_root or index_path}/deltas/epoch=<n>/cell=<c>/``.
     Replayed epochs overwrite themselves; per-batch cost ∝ batch
     (trained state is kilobytes, the base index is never touched).
-    Codebook drift matches quantizer drift: retrain on compaction."""
+    Codebook drift matches quantizer drift; a rebuild retrains both."""
     if epoch_id < 0:
         raise ValueError(f"epoch_id must be >= 0, got {epoch_id}")
     spark = batch.sparkSession

@@ -43,8 +43,9 @@ s3a://) behave the same as local paths.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.dedup_store import (
     commit_batch,
@@ -60,10 +61,12 @@ def _epoch_dir(root: str, epoch_id: int) -> str:
     return f"{root}/epoch={epoch_id}"
 
 
-def _read_clean(spark: SparkSession, root: str, cols: list[str]) -> DataFrame:
-    """Read an epoch-partitioned store table, projecting away the
-    partition column so consumers see the flat schema."""
-    return spark.read.parquet(root).select(*cols)
+def _read_clean(spark: SparkSession, root: str,
+                schema: T.StructType) -> DataFrame:
+    """Read the ``schema`` columns of an epoch-partitioned store table
+    with that schema declared (no schema-inference job), projecting
+    away the partition column so consumers see the flat schema."""
+    return spark.read.schema(schema).parquet(root).select(*schema.names)
 
 
 def run_neardup_ingest(spark: SparkSession, docs_path: str, out_root: str,
@@ -111,7 +114,8 @@ def run_neardup_ingest(spark: SparkSession, docs_path: str, out_root: str,
             # with store size (the old form shipped the entire stored
             # id set per micro-batch: OOM at 10^9+ stored ids)
             stored_ids = _read_clean(
-                spark, store_dest + "/signatures", [id_col])
+                spark, store_dest + "/signatures",
+                batch.select(id_col).schema)
             batch_new = bounded_anti_join(
                 batch, stored_ids, id_col).persist()
             n_new = batch_new.count()
@@ -198,8 +202,10 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
     having lost any replica.
 
     Per micro-batch: wipe own epoch partials (replay convergence) ->
+    corpus epoch commit (its row count observed on the write; an
+    empty batch removes its empty epoch directory and stops here) ->
     near-dup pairs of the batch vs (store ∪ batch) — or in-batch LSH
-    pairs on the bootstrap batch — -> corpus + store epoch commits ->
+    pairs on the bootstrap batch — -> store epoch commit ->
     ``update_clusters``. At-least-once replay converges: epoch-keyed
     corpus/store/pair writes overwrite themselves, and a replayed
     ``update_clusters`` recomputes the same touched subgraph against
@@ -210,10 +216,11 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
     value-harmless (batch x own-stored-copy pairs normalize to the
     in-batch pair set, and same-id self-pairs are cut by the join).
 
-    Returns ``{"ingested": n, "clustered": n}`` (clustered = rows in
-    the resolved cluster table after the drain)."""
+    Returns ``{"ingested": n}``: the non-empty, id-distinct docs the
+    drain committed to the corpus. Resolved clusters are read with
+    ``load_clusters`` / ``resolve_from_store``; counting them here
+    would cost jobs no caller needs."""
     from ..operators.dedup import minhash_lsh_pairs
-    from ..operators.dedup_store import load_clusters
     from ..schemas import TPCH_SCHEMAS
 
     doc_schema = TPCH_SCHEMAS["documents"]
@@ -226,8 +233,15 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
 
         batch = (batch.filter(F.length(F.trim(text_col)) > 0)
                  .dropDuplicates([id_col]).persist())
-        n_in = batch.count()
+        # the corpus commit goes first (the pair build never reads the
+        # corpus) and counts the batch as it writes
+        corpus_epoch = _epoch_dir(out_root + "/corpus", epoch_id)
+        obs = Observation()
+        (batch.observe(obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(corpus_epoch))
+        n_in = int(obs.get["n"])
         if n_in == 0:
+            fs_delete(spark, corpus_epoch)
             batch.unpersist()
             return
 
@@ -246,8 +260,6 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
         # argument above; first attempts shouldn't lean on it)
         pairs = pairs.localCheckpoint(eager=True)
 
-        batch.write.mode("overwrite").parquet(
-            _epoch_dir(out_root + "/corpus", epoch_id))
         commit_batch(batch, store_dest, epoch_id, id_col, text_col,
                      num_hashes, shingle_n)
         update_clusters(pairs, store_dest, epoch_id)
@@ -256,10 +268,7 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
 
     drain(spark.readStream.schema(doc_schema).parquet(docs_path),
           checkpoint, handle_batch)
-    clustered = (load_clusters(spark, store_dest).count()
-                 if fs_exists(spark, store_dest + "/cluster_deltas")
-                 or fs_exists(spark, store_dest + "/clusters") else 0)
-    return {"ingested": counts["ingested"], "clustered": clustered}
+    return counts
 
 
 def run_span_ingest(spark: SparkSession, docs_path: str, out_root: str,
@@ -328,7 +337,8 @@ def run_span_ingest(spark: SparkSession, docs_path: str, out_root: str,
             return
 
         if fs_exists(spark, store_dest + "/docs"):
-            stored_ids = _read_clean(spark, store_dest + "/docs", [id_col])
+            stored_ids = _read_clean(spark, store_dest + "/docs",
+                                     batch.select(id_col).schema)
             fresh = bounded_anti_join(batch, stored_ids, id_col).persist()
             n_fresh = fresh.count()
             # surface tombstoned-id skips distinctly (the deleted-id

@@ -14,8 +14,10 @@ from hackmd_data_pipeline_spark.operators.dedup import (
 )
 from hackmd_data_pipeline_spark.operators.dedup_store import (
     build_dedup_store,
+    incremental_pairs,
     load_clusters,
     load_pairs,
+    load_tombstones,
     resolve_from_store,
 )
 from hackmd_data_pipeline_spark.tables import load_table
@@ -672,3 +674,57 @@ def test_compact_store_repairs_orphaned_tombstone(spark, tmp_path):
     assert got == {(10, 10), (11, 10), (20, 20), (21, 20), (22, 20)}
     assert got == _scratch(load_pairs(spark, folded).select("id_a", "id_b"))
     assert load_tombstones(spark, folded) is None
+
+
+@pytest.fixture(scope="module")
+def grown_store(spark, tmp_path_factory):
+    """Two stores built from one corpus with planted clones: ``flat``
+    holds only the built pairs and clusters; ``grown`` adds a pair
+    delta and a cluster overlay (``update_clusters``), then a
+    tombstone and a second overlay (``remove_docs``). ``new`` is a
+    batch of clones of stored docs for ``incremental_pairs``."""
+    from hackmd_data_pipeline_spark.operators.dedup_store import (
+        remove_docs, update_clusters)
+
+    root = tmp_path_factory.mktemp("readers")
+    flat, grown = str(root / "flat"), str(root / "grown")
+    d = (load_table(spark, SF_CORRECT, "documents")
+         .filter(F.col("doc_id") < 80).select("doc_id", "text"))
+    clones = d.filter(F.col("doc_id") < 3).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    for dest in (flat, grown):
+        build_dedup_store(d.unionByName(clones), dest, jaccard_threshold=0.9)
+    member = load_clusters(spark, grown).first().id
+    update_clusters(local_df(spark, [(member, 5_000_000, 1.0)],
+                             "id_a long, id_b long, jaccard double"),
+                    grown, epoch_id=0)
+    remove_docs(local_df(spark, [(5_000_000,)], "id long"), grown)
+    new = d.filter(F.col("doc_id") < 2).select(
+        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text")
+    return {"flat": flat, "grown": grown, "new": new}
+
+
+_STORE_READERS = {
+    "load_clusters_base": lambda spark, st: load_clusters(spark, st["flat"]),
+    "load_clusters_overlays":
+        lambda spark, st: load_clusters(spark, st["grown"]),
+    "load_pairs": lambda spark, st: load_pairs(spark, st["grown"]),
+    "load_tombstones": lambda spark, st: load_tombstones(spark, st["grown"]),
+    "incremental_pairs": lambda spark, st: incremental_pairs(
+        st["new"], st["grown"], jaccard_threshold=0.9),
+}
+
+
+@pytest.mark.parametrize("reader", sorted(_STORE_READERS))
+def test_store_readers_launch_no_job(spark, grown_store, reader):
+    """The store tables have fixed schemas, so their readers declare
+    them: building the DataFrame launches no Spark job (a parquet read
+    that infers its schema launches one per call). The frames still
+    read the stored rows."""
+    from .conftest import jobs_launched
+
+    out = []
+    assert jobs_launched(
+        spark, lambda: out.append(_STORE_READERS[reader](spark, grown_store))
+    ) == 0
+    assert out[0].count() > 0

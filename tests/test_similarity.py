@@ -606,8 +606,8 @@ def test_ivf_upsert_replay_and_crashed_delta_invisible(spark, tmp_path):
 
 def test_ivf_compact_folds_deltas_and_stays_searchable(spark, tmp_path):
     """compact_ivf_index folds base + deltas into a fresh
-    single-generation index carrying every row exactly once, with a
-    RETRAINED quantizer; an upserted vector queried by its own
+    single-generation index carrying every row exactly once; an
+    upserted vector queried by its own
     embedding must come back at rank 1 with cosine ~1 both before and
     after compaction (the searchable-set-staleness probe)."""
     from pyspark.sql import functions as F
@@ -762,6 +762,40 @@ def test_ivf_remove_vectors_excludes_and_compacts(spark, tmp_path):
            spark.read.parquet(folded + "/data").select("vec_id").collect()}
     assert base_victim not in ids and delta_victim not in ids
     assert len(ids) == n_all - 2
+
+
+def test_remove_vectors_count_observed_on_write(spark, tmp_path):
+    """remove_vectors learns its deleted-id count from the tombstone
+    write (Dataset.observe): the count is the committed tombstone row
+    count (a repeated id counts once), and the call launches exactly
+    the jobs of the bare tombstone write — at least 2 fewer than the
+    write plus a read-back count (its schema-inference job, and the
+    count, which adaptive execution runs as 2 jobs)."""
+    from pyspark.sql import functions as F
+
+    from hackmd_data_pipeline_spark.operators.similarity import (
+        build_ivf_index, remove_vectors)
+    from hackmd_data_pipeline_spark.tables import load_table
+
+    from .conftest import jobs_launched, local_df
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    idx = str(tmp_path / "idx")
+    build_ivf_index(emb.filter(F.col("vec_id") % 4 == 1), idx, nlist=4)
+    ids = local_df(spark, [(1,), (5,), (5,)], "id long")
+
+    got = []
+    jobs = jobs_launched(spark, lambda: got.append(remove_vectors(ids, idx)))
+    assert got[0] == 2
+    assert spark.read.parquet(idx + "/tombstones/seq=0").count() == 2
+
+    dead = ids.select(F.col("id").alias("vec_id")).distinct().coalesce(1)
+    bare = jobs_launched(spark, lambda: dead.write.parquet(
+        str(tmp_path / "bare")))
+    read_back = jobs_launched(spark, lambda: (
+        dead.write.parquet(str(tmp_path / "read_back")),
+        spark.read.parquet(str(tmp_path / "read_back")).count()))
+    assert jobs == bare <= read_back - 2
 
 
 def test_quantizer_drift_flags_skewed_upserts(spark, tmp_path):

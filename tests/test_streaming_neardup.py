@@ -202,6 +202,28 @@ def test_cluster_maintained_ingest_resolve_never_stale(spark, tmp_path):
     assert resolve() == before
 
 
+def test_cluster_maintained_ingest_empty_batch_leaves_no_epoch(spark,
+                                                              tmp_path):
+    """The corpus commit counts the batch as it writes; a batch with no
+    non-blank doc ingests nothing and removes its empty corpus epoch
+    directory, so the corpus and the store stay as they were."""
+    import os
+
+    from hackmd_data_pipeline_spark.streaming.neardup import (
+        run_cluster_maintained_ingest)
+
+    docs_in, out_root = str(tmp_path / "in"), str(tmp_path / "out")
+    blank = (load_table(spark, SF_CORRECT, "documents")
+             .filter(F.col("doc_id") < 3).withColumn("text", F.lit("  ")))
+    _write_drop(blank, docs_in)
+    got = run_cluster_maintained_ingest(spark, docs_in, out_root,
+                                        str(tmp_path / "ckpt"),
+                                        str(tmp_path / "store"))
+    assert got == {"ingested": 0}
+    assert not os.path.exists(out_root + "/corpus/epoch=0")
+    assert not os.path.exists(str(tmp_path / "store"))
+
+
 def _tok(tag, n):
     return " ".join(f"{tag}{j}" for j in range(n))
 
