@@ -98,7 +98,7 @@ _ROWS_ONLY_PRIORITY = [
     "dedup_minhash_lsh",       # LLM-dedup family, graded first-class
     "dedup_simhash",
     # (text_topics_lda retired from the registry in r07 — replaced by
-    # the fully-oracled text_topics_score; training stays pytest-gated)
+    # the fully-oracled text_topics_score)
     "text_lang_id",
     "multimodal_features",
 ]

@@ -112,8 +112,7 @@ class Engine:
     def retention_sweep(self, path: str, partition_col: str,
                         keep_from: str) -> dict:
         """Drop value-partitions below the cutoff (partition-scoped
-        DELETE; the lifecycle complement of refresh_rollup's
-        partition-scoped rewrite)."""
+        DELETE)."""
         from .operators.maintenance import retention_sweep
         return retention_sweep(self.spark, path, partition_col, keep_from)
 

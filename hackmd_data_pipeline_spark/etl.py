@@ -28,7 +28,7 @@ whole chain idempotent under a kill anywhere:
     composes to exactly-once output.
   * audit_spans / index_embeddings (r09) — the two persisted
     FRONTIER stores as ledger stages: the exact-substring span store
-    (verbatim-leak audit + drop + commit, run_span_ingest semantics)
+    (verbatim-leak audit + drop + commit of the survivors' spans)
     and the pointer-versioned ANN index (hashing-trick embeddings,
     bootstrap/upsert behind pointer_current, maintenance-due check) —
     so the composed pipeline exercises every persisted store the
@@ -289,8 +289,7 @@ class CorpusPipeline:
 
     def _stage_audit_spans(self) -> dict:
         """Exact-substring (verbatim-leak) audit THROUGH the persisted
-        span store (r09 VERDICT item 3 — run_span_ingest's batch
-        semantics as a ledger stage), running AFTER fuzzy whole-doc
+        span store (r09 VERDICT item 3), running AFTER fuzzy whole-doc
         resolution: MinHash/CC removes whole near-duplicates cheaply,
         this stage catches what doc-level Jaccard is blind to — the
         QUOTE MOSAIC assembled from verbatim chunks of several
@@ -443,8 +442,8 @@ class CorpusPipeline:
         map-side-combinable shuffle) land as a corpus artifact; then
         the index lifecycle runs exactly as a deployment would —
         BOOTSTRAP (build_ivf_index + pointer_publish) when the pointer
-        was never published, otherwise the run_ann_index_ingest
-        posture: wipe this stage's own epoch (replay safety), bounded
+        was never published, otherwise the incremental form: wipe
+        this stage's own epoch (replay safety), bounded
         id-skip against the searchable set, upsert the fresh
         remainder, and the maintenance-due check folds/republishes/
         prunes through maintain_ivf_index when outstanding deltas

@@ -10,10 +10,10 @@ Reusable, scale-designed implementations:
     textstats.py    language ID, quality heuristics, NFC normalization
     multimodal.py   opaque-binary columns + Pandas-UDF decode plumbing
     joins.py        as-of join;  rangejoin.py  bounded-interval join
-    skew.py         salted agg/join;  bucketing.py  bucketed layouts
-    zorder.py       Morton-curve clustering;  rollup.py  incremental +
-                    sketch rollup maintenance
+    skew.py         salted two-phase aggregation
+    zorder.py       Morton-curve clustering;  rollup.py  epoch-keyed
+                    delta rollups (plain + HLL sketch)
     sampling.py     splits/rebalancing;  packing.py  sequence packing
-    maintenance.py  small-file compaction, partition retention
+    maintenance.py  table file stats, partition retention
     prefix.py       distributed prefix sum (frozen range partitioning)
 """

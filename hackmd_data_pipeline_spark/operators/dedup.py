@@ -6,8 +6,9 @@ training-data pipeline that is not enough; these operators add
 content-based near-dup detection with sub-quadratic candidate
 generation:
 
-  * minhash_signatures / minhash_lsh_pairs — shingle -> k minhashes ->
-    banded LSH buckets -> candidate pairs -> exact-Jaccard verify.
+  * minhash_signatures_from / minhash_lsh_pairs — shingle -> k
+    minhashes -> banded LSH buckets -> candidate pairs ->
+    exact-Jaccard verify.
     Never materializes the O(n^2) pair space: the only joins are
     equi-joins on (band, band_hash), so Spark shuffles by bucket.
   * simhash_signatures / simhash_pairs — 64-bit SimHash with
@@ -22,15 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import iter_checkpoint
 from pyspark.sql.window import Window as W
 
-
-_TOKEN_SPLIT_RE = "[ \\t\\n\\x0B\\f\\r]+"
+from ..functions.scalars import WS_CLASS
+from .checkpointing import iter_checkpoint
 
 
 def _tokens(text_col):
-    return F.split(F.trim(F.lower(text_col)), _TOKEN_SPLIT_RE)
+    return F.split(F.trim(F.lower(text_col)), WS_CLASS)
 
 
 def _shingles_from(toks, n: int):
@@ -160,16 +160,6 @@ def minhash_signatures_from(sh_df: DataFrame, id_col: str = "doc_id",
         for i in range(num_hashes)
     ]
     return ex.groupBy(id_col).agg(*aggs)
-
-
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", num_hashes: int = 16,
-                       shingle_n: int = 3) -> DataFrame:
-    """``id | sig_0..sig_{k-1}`` — k independent minhashes per doc
-    (convenience composition over ``hashed_shingle_table``)."""
-    return minhash_signatures_from(
-        hashed_shingle_table(df, id_col, text_col, shingle_n),
-        id_col, num_hashes)
 
 
 def band_buckets(sigs: DataFrame, id_col: str = "doc_id",
@@ -451,7 +441,7 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     """
     assert bits == 64, "packed vote kernel is specialized to 64 bits"
     ex = (
-        df.select(id_col, F.explode(F.split(F.trim(F.lower(F.col(text_col))), "[ \\t\\n\\x0B\\f\\r]+")).alias("tok"))
+        df.select(id_col, F.explode(F.split(F.trim(F.lower(F.col(text_col))), WS_CLASS)).alias("tok"))
         .filter(F.length("tok") > 0)
         .withColumn("h", F.xxhash64("tok"))
     )
@@ -821,7 +811,7 @@ def partial_overlap_pairs(df: DataFrame, id_col: str = "doc_id",
         shingle df distribution is so heavy that even capped postings
         are too hot. Both paths share the shingle table and verify.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = F.split(F.lower(F.trim(F.col(text_col))), WS_CLASS)
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(stride))
     chunks = (
         df.filter(F.length(F.trim(text_col)) > 0)
@@ -937,7 +927,7 @@ def span_hash_windows(df: DataFrame, id_col: str = "doc_id",
     agg side partial-aggregates before its exchange and ReuseExchange
     can't unify the two shapes. LAZY, so no job runs at plan build
     time (the r03 ADVICE lifecycle concern)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = F.split(F.lower(F.trim(F.col(text_col))), WS_CLASS)
     t = (df.filter(F.length(F.trim(text_col)) > 0)
          .select(F.col(id_col), toks.alias("toks"))
          .select(id_col, "toks", F.size("toks").alias("n_tokens")))

@@ -122,38 +122,42 @@ def build_dedup_store(df: DataFrame, dest: str, id_col: str = "doc_id",
     need_sh = force or not _stage_complete(spark, dest + "/shingles")
     need_sig = depth >= 1 and (force or not _stage_complete(
         spark, dest + "/signatures"))
+    sh = hashed_shingle_table(df, id_col, text_col, shingle_n)
+    # the read-backs declare the schemas of the frames that wrote them
+    # (no inference job) and happen only where a later stage is due
+    sh_schema = sh.schema
     if need_sh and need_sig:
         # both stages due: one overlapped commit of the pair (measured
         # 1.32 -> 0.96 s against write -> readback -> write over 3/4
         # of sf0.1, r12); values are identical either way
         _write_shingles_and_signatures(
-            hashed_shingle_table(df, id_col, text_col, shingle_n),
-            dest + "/shingles", dest + "/signatures", id_col, num_hashes)
+            sh, dest + "/shingles", dest + "/signatures", id_col,
+            num_hashes)
     elif need_sh:
-        sh = hashed_shingle_table(df, id_col, text_col, shingle_n)
         sh.write.mode("overwrite").parquet(dest + "/shingles")
     elif need_sig:
         # shingles already committed (resume path): signatures root at
         # the parquet readback, exactly the pre-r12 flow
         (minhash_signatures_from(
-            spark.read.parquet(dest + "/shingles"), id_col, num_hashes)
+            spark.read.schema(sh_schema).parquet(dest + "/shingles"),
+            id_col, num_hashes)
          .write.mode("overwrite").parquet(dest + "/signatures"))
-    if depth < 1:
-        return
-    sh = spark.read.parquet(dest + "/shingles")
     if depth < 2:
         return
 
     if force or not _stage_complete(spark, dest + "/pairs"):
-        sigs = spark.read.parquet(dest + "/signatures")
+        sh = spark.read.schema(sh_schema).parquet(dest + "/shingles")
+        sigs = spark.read.schema(
+            minhash_signatures_from(sh, id_col, num_hashes).schema
+        ).parquet(dest + "/signatures")
         cand = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
         pairs = verify_jaccard(cand, sh, id_col, jaccard_threshold, sort=True)
         pairs.write.mode("overwrite").parquet(dest + "/pairs")
     if depth < 3:
         return
-    pairs = spark.read.parquet(dest + "/pairs")
 
     if force or not _stage_complete(spark, dest + "/clusters"):
+        pairs = spark.read.schema(_PAIR_SCHEMA).parquet(dest + "/pairs")
         clusters = dedup_clusters(pairs)
         clusters.write.mode("overwrite").parquet(dest + "/clusters")
 
@@ -262,7 +266,10 @@ def incremental_spans(new_docs: DataFrame, dest: str,
     t, w = span_hash_windows(new_docs, id_col, text_col, k)
     bh = w.groupBy("h").agg(F.count_distinct(F.col(id_col)).alias("n_new"))
 
-    stored = spark.read.parquet(dest + "/spans").select(id_col, "h")
+    # the stored rows are commit_spans' (id, h) frame: declared, no
+    # inference job; the epoch partition column is projected away
+    stored = (spark.read.schema(w.select(id_col, "h").schema)
+              .parquet(dest + "/spans").select(id_col, "h"))
     dead = load_tombstones(spark, dest, delta_root=delta_root)
     if dead is not None:
         stored = stored.join(
@@ -290,9 +297,9 @@ def compact_store(spark: SparkSession, src: str, dest: str,
     signatures are each rewritten as ``epoch=0`` at
     ~``target_file_bytes`` per file (coalesce — merge only, no
     shuffle). The caller swaps directories/pointers once ``dest`` is
-    complete (the operators/maintenance.py ``compact`` posture:
-    in-place rewrites are not atomic on a plain filesystem), and new
-    ``commit_batch`` epochs land on the compacted store unchanged.
+    complete (in-place rewrites are not atomic on a plain
+    filesystem), and new ``commit_batch`` epochs land on the
+    compacted store unchanged.
 
     The folded generation is written under the RESERVED key
     ``epoch=-1`` (r07 ADVICE): live ``commit_batch`` epoch ids come
@@ -333,18 +340,18 @@ def compact_store(spark: SparkSession, src: str, dest: str,
     table."""
     import math
 
-    from ..sources.fs import fs_exists, fs_list_dirs
+    from ..sources.fs import fs_exists, fs_list_dirs, read_parquet
     from .maintenance import table_file_stats
 
     dead = load_tombstones(spark, src)
     out: dict = {}
-    # "docs" is the span-ingest stream's id ledger (run_span_ingest):
-    # a compacted span store without it would re-admit every id
+    # "docs" is the span store's id ledger (CorpusPipeline's
+    # audit_spans stage writes it beside "spans")
     tables = [t for t in ("shingles", "signatures", "spans", "docs")
               if fs_exists(spark, f"{src}/{t}")]
     for table in tables:
         before = table_file_stats(spark, f"{src}/{table}")
-        df = spark.read.parquet(f"{src}/{table}")
+        df = read_parquet(spark, f"{src}/{table}")
         cols = [c for c in df.columns if c != "epoch"]
         df = df.select(*cols)
         if dead is not None:

@@ -36,7 +36,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .textmodel import WS_PATTERN
+from ..functions.scalars import WS_CLASS
 
 DSIR_BUCKETS = 256
 
@@ -47,7 +47,7 @@ def _bigram_occurrences(df: DataFrame, id_col: str,
     distinct set: DSIR weights are over occurrence distributions,
     unlike the shingle-SET machinery in operators/dedup.py)."""
     toks = df.select(
-        id_col, F.split(F.lower(F.trim(text_col)), WS_PATTERN).alias("t"))
+        id_col, F.split(F.lower(F.trim(text_col)), WS_CLASS).alias("t"))
     return (toks.filter(F.size("t") >= 2)
             .select(id_col,
                     F.explode(F.expr(
@@ -197,7 +197,7 @@ def dsir_select(df: DataFrame, artifact: list[tuple[int, int]],
     imp = dsir_importance(df, artifact, id_col, text_col)
     meta = df.select(
         id_col, lang_col,
-        F.size(F.split(F.lower(F.trim(text_col)), WS_PATTERN)).alias("n_tok"))
+        F.size(F.split(F.lower(F.trim(text_col)), WS_CLASS)).alias("n_tok"))
     base = (imp.join(meta, id_col)
             .withColumn("_ipb",
                         F.col("importance_micros") / F.col("n_bg")))

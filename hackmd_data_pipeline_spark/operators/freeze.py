@@ -1,5 +1,5 @@
-"""localCheckpoint lifecycle helpers (shared by operators/prefix.py
-and streaming/pipeline.py).
+"""localCheckpoint lifecycle helpers for streaming/pipeline.py's
+per-batch freeze.
 
 ``df.rdd`` wraps the internal RDD in a fresh deserializing RDD, so
 ``df.rdd.unpersist()`` never frees the blocks a ``localCheckpoint()``

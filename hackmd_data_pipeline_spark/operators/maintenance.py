@@ -1,17 +1,16 @@
-"""Table-maintenance operators: small-file compaction and partition
+"""Table-maintenance operators: file statistics and partition
 retention.
 
 Small files are the silent killer of a 100 TB lake: a micro-batched
 ingest (the reference writes ~100-record gz objects, reference
 config/config.yaml:16) leaves millions of tiny files whose per-file
-open/footer cost dominates scans. Compaction rewrites a table's files
-to a target size — metadata-driven (file listing), no shuffle beyond
-the coalesce.
+open/footer cost dominates scans. ``table_file_stats`` measures a
+table's files, which is how the store compactions
+(``dedup_store.compact_store``) size their rewrites.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import SparkSession
@@ -27,37 +26,15 @@ def table_file_stats(spark: SparkSession, path: str) -> dict:
             "mean_bytes": (sum(sizes) // len(sizes)) if sizes else 0}
 
 
-def compact(spark: SparkSession, path: str, target_file_bytes: int = 128 << 20,
-            dest: str | None = None) -> dict:
-    """Rewrite ``path``'s parquet files at ~``target_file_bytes`` each.
-
-    In-place compaction is not atomic on a plain filesystem, so the
-    default writes to ``dest`` (caller swaps directories/pointers —
-    the same generation-flip the control tables use). The file count
-    is computed from actual on-disk bytes, not row estimates, and the
-    rewrite uses coalesce (no shuffle) since compaction only merges.
-
-    Returns before/after file stats.
-    """
-    before = table_file_stats(spark, path)
-    n_files = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
-    out = dest or (path.rstrip("/") + "_compacted")
-    df = spark.read.parquet(path)
-    df.coalesce(n_files).write.mode("overwrite").parquet(out)
-    return {"before": before, "after": table_file_stats(spark, out),
-            "dest": out}
-
-
 def retention_sweep(spark: SparkSession, path: str, partition_col: str,
                     keep_from: str) -> dict:
     """Retention enforcement for a value-partitioned table: drop every
     ``{partition_col}={value}`` directory whose value sorts below
     ``keep_from`` (ISO dates compare lexicographically, so a date
-    cutoff is just a string). The complement of refresh_rollup's
-    partition-scoped REWRITE — this is the partition-scoped DELETE,
-    and together they give the hypertable-style lifecycle
-    (reference's managed Postgres tables age out rows with DELETEs;
-    a lakehouse table ages out whole partitions).
+    cutoff is just a string): the partition-scoped DELETE of the
+    hypertable-style lifecycle (reference's managed Postgres tables
+    age out rows with DELETEs; a lakehouse table ages out whole
+    partitions).
 
     Scale posture: purely metadata-driven — list immediate partition
     dirs, delete whole directories via the scheme-aware Hadoop

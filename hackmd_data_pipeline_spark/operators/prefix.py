@@ -63,30 +63,13 @@ from pyspark.sql import functions as F
 # persistent-RDD registry + ContextCleaner reclaim the blocks after
 # GC. Deterministic unpersist is reserved for EXCLUSIVELY-owned
 # frames (operators/freeze.py ownership note; streaming/pipeline.py's
-# per-batch freeze is the example). flush_frozen_cache() exists for
-# session teardown, where the no-living-callers guarantee holds.
+# per-batch freeze is the example).
 _FROZEN_CACHE: OrderedDict = OrderedDict()
 _FROZEN_CACHE_MAX = 4
 
 
-def flush_frozen_cache(session=None) -> None:
-    """Unpersist every cached frozen frame (for the given session, or
-    all) and clear the cache. Callers must guarantee no returned plan
-    built on a frozen frame will run afterwards — i.e. call this only
-    at session teardown."""
-    from .freeze import unpersist_blocks
-
-    for key in list(_FROZEN_CACHE):
-        sess, _pc, ids = _FROZEN_CACHE[key]
-        if session is None or sess is session:
-            _FROZEN_CACHE.pop(key, None)
-            unpersist_blocks(sess, ids)
-
-
 def _frozen_range_partitioned(df: DataFrame,
                               order_cols: list[Column | str]) -> DataFrame:
-    from .freeze import checkpoint_with_block_ids
-
     nparts = df.sparkSession.sparkContext.defaultParallelism
     try:
         key = (id(df.sparkSession),
@@ -104,11 +87,11 @@ def _frozen_range_partitioned(df: DataFrame,
         if hit is not None:
             _FROZEN_CACHE.pop(key, None)
 
-    pc, rdd_ids = checkpoint_with_block_ids(
-        df.repartitionByRange(nparts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id()))
+    pc = (df.repartitionByRange(nparts, *order_cols)
+          .withColumn("_pid", F.spark_partition_id())
+          .localCheckpoint())
     if key is not None:
-        _FROZEN_CACHE[key] = (df.sparkSession, pc, rdd_ids)
+        _FROZEN_CACHE[key] = (df.sparkSession, pc)
         while len(_FROZEN_CACHE) > _FROZEN_CACHE_MAX:
             _FROZEN_CACHE.popitem(last=False)  # drop ref; see note above
     return pc

@@ -2,22 +2,21 @@
 
 A 100 TB events store is queried through pre-aggregated rollups
 (hourly/daily), not raw scans. The maintenance problem is INCREMENTAL
-refresh: when late data lands for a handful of dates, recompute ONLY
-those date partitions, idempotently, without touching the rest of the
-rollup table. Spark-native answer: date-partitioned parquet +
-``partitionOverwriteMode=dynamic`` — the write replaces exactly the
-partitions present in the refresh DataFrame and leaves every other
-partition byte-identical. Re-running the same refresh is a no-op
-(same input -> same partition contents), which is the idempotency
-contract the reference gets from ON CONFLICT DO NOTHING (reference
-src/core/pg_engine.py:113) transplanted to analytical storage.
+refresh: each micro-batch of events must land in the rollup at
+O(batch) cost, and a replayed batch must not count twice. The
+rollup's aggregates are MERGEABLE (count/sum/min/max, and HLL sketch
+registers for distinct users), so every batch is rolled up on its own
+and written as an epoch-keyed delta; readers merge the deltas at read
+time and compaction folds them into a generation (layout below). The
+epoch key is the idempotency contract the reference gets from ON
+CONFLICT DO NOTHING (reference src/core/pg_engine.py:113) transplanted
+to analytical storage.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,93 +53,6 @@ def time_rollup(events: DataFrame, grain: str = "hour",
     )
 
 
-def refresh_rollup(events: DataFrame, dest: str, grain: str = "hour",
-                   dates: Sequence[str] | None = None,
-                   ts_col: str = "ts",
-                   key_cols: Sequence[str] = ("event_type",),
-                   value_col: str = "value") -> None:
-    """(Re)build the rollup at ``dest`` for ``dates`` (None = all).
-
-    The date filter is applied to the RAW events before aggregation —
-    at scale the events table is itself date-partitioned, so the
-    filter prunes input partitions and the refresh reads only the
-    affected dates' data. Dynamic partition overwrite then swaps in
-    exactly those output partitions atomically per-partition."""
-    spark = events.sparkSession
-    if dates is not None:
-        events = events.filter(F.to_date(_trunc(F.col(ts_col), grain))
-                               .isin([str(d) for d in dates]))
-    rolled = time_rollup(events, grain, ts_col, key_cols, value_col)
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (rolled.repartition("event_date")
-         .write.partitionBy("event_date").mode("overwrite").parquet(dest))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-
-
-def merge_rollup_batch(batch: DataFrame, dest: str, grain: str = "hour",
-                       ts_col: str = "ts",
-                       key_cols: Sequence[str] = ("event_type",),
-                       value_col: str = "value") -> None:
-    """Merge one micro-batch of raw events into the rollup at ``dest``.
-
-    The rollup's aggregates are MERGEABLE (count/sum/min/max), so a
-    streaming refresh never re-reads the raw history: aggregate the
-    batch, union it with the EXISTING rollup rows of just the affected
-    dates, re-aggregate (sum the counts/sums, min/max the extremes),
-    and dynamic-partition-overwrite those dates. Cost per micro-batch
-    is proportional to the batch + touched partitions, independent of
-    total history size — the property that makes a 100 TB rollup
-    maintainable from a stream.
-
-    CAVEAT — at-least-once: foreachBatch retries a failed epoch, and
-    this merge reads state it may already have updated, so a replay
-    DOUBLE-COUNTS the batch. Use it only where the caller dedups
-    upstream or a rare overcount is tolerable; the replay-proof form
-    is the delta-epoch API below (``append_rollup_delta`` +
-    ``compact_rollup``), which keys every write by the epoch id.
-    """
-    spark = batch.sparkSession
-    delta = time_rollup(batch, grain, ts_col, key_cols, value_col)
-    dates = [str(r.event_date)
-             for r in delta.select("event_date").distinct().collect()]
-    if not dates:
-        return
-    merged = delta
-    try:
-        existing = (spark.read.parquet(dest)
-                    .filter(F.col("event_date").isin(dates))
-                    .select(*delta.columns))
-        merged = delta.unionByName(existing)
-    except AnalysisException as e:
-        # first batch: no rollup exists yet. ONLY the missing-path
-        # case may be swallowed — schema drift (also an
-        # AnalysisException: unresolved column) and FS errors must
-        # propagate, or the dynamic-partition overwrite below would
-        # silently replace affected dates with delta-only aggregates.
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-    merged = (
-        merged.groupBy("event_date", "bucket", *key_cols)
-        .agg(F.sum("n_events").alias("n_events"),
-             F.sum("sum_value").alias("sum_value"),
-             F.min("min_value").alias("min_value"),
-             F.max("max_value").alias("max_value"))
-        # materialize BEFORE the write: the plan reads the same path
-        # it is about to overwrite (classic self-overwrite hazard)
-        .localCheckpoint(eager=True)
-    )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.repartition("event_date")
-         .write.partitionBy("event_date").mode("overwrite").parquet(dest))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-
-
 def time_rollup_sketch(events: DataFrame, grain: str = "day",
                        ts_col: str = "ts",
                        key_cols: Sequence[str] = ("event_type",),
@@ -166,60 +78,12 @@ def time_rollup_sketch(events: DataFrame, grain: str = "day",
     )
 
 
-def merge_rollup_sketch_batch(batch: DataFrame, dest: str,
-                              grain: str = "day", ts_col: str = "ts",
-                              key_cols: Sequence[str] = ("event_type",),
-                              user_col: str = "user_id") -> None:
-    """Merge one micro-batch into the HLL distinct-user rollup at
-    ``dest`` — the sketch analogue of ``merge_rollup_batch``: sketch
-    the batch, union register-wise with the stored sketches of the
-    affected dates, dynamic-partition-overwrite those dates. HLL
-    union is exact over the register state (the merged sketch is
-    IDENTICAL to a single-pass sketch of the union — asserted in
-    tests/test_rollup.py), so incremental maintenance loses nothing
-    vs a full rebuild. Distinct counts survive replay (HLL union is
-    idempotent register-wise) but ``n_events`` carries the same
-    at-least-once double-count caveat as ``merge_rollup_batch`` — the
-    replay-proof form is ``append_rollup_delta(kind='sketch')``."""
-    spark = batch.sparkSession
-    delta = time_rollup_sketch(batch, grain, ts_col, key_cols, user_col)
-    dates = [str(r.event_date)
-             for r in delta.select("event_date").distinct().collect()]
-    if not dates:
-        return
-    merged = delta
-    try:
-        existing = (spark.read.parquet(dest)
-                    .filter(F.col("event_date").isin(dates))
-                    .select(*delta.columns))
-        merged = delta.unionByName(existing)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-    merged = (
-        merged.groupBy("event_date", "bucket", *key_cols)
-        .agg(F.hll_union_agg("users_hll").alias("users_hll"),
-             F.sum("n_events").alias("n_events"))
-        .localCheckpoint(eager=True)  # self-overwrite hazard, as above
-    )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.repartition("event_date")
-         .write.partitionBy("event_date").mode("overwrite").parquet(dest))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-
-
 # --------------------------------------------------------------------
 # Exactly-once rollup maintenance: delta-epoch layout
 #
-# ``merge_rollup_batch`` / ``merge_rollup_sketch_batch`` merge into
-# shared date partitions IN PLACE, so a foreachBatch retry (Structured
-# Streaming is at-least-once per epoch) re-merges an already-applied
-# batch and double-counts — the same replay hazard round-2 ADVICE
-# found in streaming/neardup. The delta-epoch layout below is the
-# replay-proof form:
+# Structured Streaming is at-least-once per epoch, so a merge into
+# shared date partitions IN PLACE would re-merge a retried batch and
+# double-count it. The delta-epoch layout is the replay-proof form:
 #
 #   dest/deltas/epoch=<id>/   per-epoch rolled-up batch, written with
 #                             OVERWRITE keyed by the foreachBatch

@@ -749,27 +749,30 @@ def ivf_index_data(spark: SparkSession, index_path: str,
     ``None`` (the default) means latest for both. Compaction folds
     history away; travel reaches only as far back as the oldest
     un-compacted generation."""
-    from ..sources.fs import fs_total_bytes
+    from ..sources.fs import fs_total_bytes, read_parquet
 
     root = delta_root or index_path
-    df = spark.read.parquet(index_path + "/data")
+    df = read_parquet(spark, index_path + "/data")
     epochs, tseqs = _gen_state(spark, root)   # ONE manifest read (r09)
     if as_of_epoch is not None:
         epochs = [e for e in epochs if e <= as_of_epoch]
     if epochs:
         # one multi-path read for every selected generation (not a
-        # per-epoch driver read + unionByName chain): basePath keeps
-        # cell a partition column, so the probed-cell filter still
-        # prunes every generation's directories alike
+        # per-epoch driver read + unionByName chain) with the base's
+        # schema (no inference job): basePath keeps cell a partition
+        # column, so the probed-cell filter still prunes every
+        # generation's directories alike
         df = df.unionByName(
-            spark.read.option("basePath", root + "/deltas")
+            spark.read.schema(df.schema)
+            .option("basePath", root + "/deltas")
             .parquet(*[f"{root}/deltas/epoch={e}" for e in epochs])
             .select(*df.columns))
     if as_of_seq is not None:
         tseqs = [s for s in tseqs if s <= as_of_seq]
     if tseqs:
         id_col = df.columns[0]
-        dead = (spark.read.option("basePath", root + "/tombstones")
+        dead = (spark.read.schema(df.select(id_col).schema)
+                .option("basePath", root + "/tombstones")
                 .parquet(*[f"{root}/tombstones/seq={s}" for s in tseqs])
                 .select(id_col).distinct())
         # size-gate the anti-join build side (r09 VERDICT item 5):

@@ -1,21 +1,15 @@
-"""Skew-mitigation operators (100 TB posture; SURVEY.md §7).
+"""Skew-mitigation operator (100 TB posture; SURVEY.md §7).
 
 Hot keys break hash-partitioned shuffles: one reducer gets the whale
-key while the rest idle. Two standard remedies, both pure DataFrame
-compositions:
-
-  * salted_agg — two-phase aggregation: explode the key space with a
-    random-ish salt, partial-aggregate on (key, salt), then final-
-    aggregate on key. The first shuffle spreads the whale across
-    ``buckets`` reducers; the second moves only ``buckets`` rows per
-    key. Works for any algebraic aggregate (sum/count/min/max —
-    supply the merge expressions).
-  * salted_join — replicate the small side ``buckets`` times, salt the
-    big side, equi-join on (key, salt): the whale key's rows spread
-    over ``buckets`` tasks. (AQE's skewJoin does this adaptively at
-    runtime — spark.sql.adaptive.skewJoin.enabled is on in
-    session.get_spark — so reach for the manual form only when AQE
-    can't see the skew, e.g. pre-shuffle aggregation states.)
+key while the rest idle. ``salted_agg`` is the standard two-phase
+remedy, a pure DataFrame composition: explode the key space with a
+random-ish salt, partial-aggregate on (key, salt), then final-
+aggregate on key. The first shuffle spreads the whale across
+``buckets`` reducers; the second moves only ``buckets`` rows per key.
+It works for any algebraic aggregate (sum/count/min/max — supply the
+merge expressions). Skewed joins need no operator: AQE's skewJoin
+splits them at runtime (spark.sql.adaptive.skewJoin.enabled is on in
+session.get_spark).
 
 The salt is ``pmod(hash(unique_col), buckets)`` when a unique column
 is available (deterministic, testable) else ``floor(rand(seed) *
@@ -58,21 +52,3 @@ def salted_agg(df: DataFrame, key_cols: Sequence[str],
         .agg(*partial_aggs)
     )
     return partial.groupBy(*key_cols).agg(*final_aggs)
-
-
-def salted_join(big: DataFrame, small: DataFrame, on: str,
-                buckets: int = 8, salt_source: str | None = None,
-                seed: int = 42) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side
-    per salt bucket, join on (key, salt). Output columns = big's then
-    small's (minus the duplicate key)."""
-    salt = (
-        F.pmod(F.hash(F.col(salt_source)), F.lit(buckets))
-        if salt_source is not None
-        else F.floor(F.rand(seed) * buckets).cast("int")
-    )
-    b = big.withColumn("_salt", salt)
-    s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)])))
-    joined = b.join(s, [on, "_salt"])
-    return joined.drop("_salt")

@@ -38,9 +38,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# the oracle's ASCII-whitespace splitter (operators/topics.py — NOT
-# \s, whose Unicode classes DuckDB and Java disagree on)
-WS_PATTERN = "[ \\t\\n\\x0B\\f\\r]+"
+from ..functions.scalars import WS_CLASS
 
 
 def derive_domain_weights(spark: SparkSession, sf_dir: str,
@@ -60,7 +58,7 @@ def derive_domain_weights(spark: SparkSession, sf_dir: str,
     toks = (
         load_table(spark, sf_dir, "documents")
         .select((F.col("lang") == target_lang).alias("is_t"),
-                F.explode(F.split(F.lower(F.trim("text")), WS_PATTERN))
+                F.explode(F.split(F.lower(F.trim("text")), WS_CLASS))
                 .alias("term"))
         .filter(F.length("term") > 0)
     )
@@ -134,7 +132,7 @@ def classifier_scores(df: DataFrame,
     pin = pinned_weight_frame(spark, artifact)
     toks = (
         df.select(id_col,
-                  F.explode(F.split(F.lower(F.trim(text_col)), WS_PATTERN))
+                  F.explode(F.split(F.lower(F.trim(text_col)), WS_CLASS))
                   .alias("term"))
         .filter(F.length("term") > 0)
     )
@@ -160,7 +158,7 @@ def classifier_oracle_sql(artifact: list[tuple[str, int]]) -> str:
     WITH pin(term, weight_micros) AS (VALUES {values}),
     toks AS (
         SELECT doc_id, UNNEST(regexp_split_to_array(
-                   LOWER(TRIM(text)), '{WS_PATTERN}')) AS term
+                   LOWER(TRIM(text)), '{WS_CLASS}')) AS term
         FROM documents
     )
     SELECT t.doc_id,

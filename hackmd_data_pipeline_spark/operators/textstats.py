@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import WS_CLASS
+
 # Minimal high-frequency stopword evidence per language. Word-boundary
 # regexes keep everything JVM-side; CJK detection is by script range.
 _LANG_MARKERS: dict[str, str] = {
@@ -24,7 +26,7 @@ _LANG_MARKERS: dict[str, str] = {
 
 def lang_scores(text: Column) -> Column:
     """Array of (score, lang) structs; score = marker hits / tokens."""
-    n_tok = F.greatest(F.size(F.split(F.trim(text), "[ \\t\\n\\x0B\\f\\r]+")), F.lit(1))
+    n_tok = F.greatest(F.size(F.split(F.trim(text), WS_CLASS)), F.lit(1))
     structs = [
         F.struct(
             (F.size(F.regexp_extract_all(F.lower(text), F.lit(pat), F.lit(0))).cast("double") / n_tok).alias("score"),

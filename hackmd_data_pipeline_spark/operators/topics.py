@@ -5,9 +5,11 @@ BPE-encode in r06).
 The reference declares a ``topic TEXT`` column it never populates
 (reference src/utils/initial/create_table.sql:71, hardcoded ``None``
 at src/etl/arxiv_etl.py:84) — a sanctioned extension point. LDA
-TRAINING is float-schedule-dependent and stays pytest-gated
-(plans/extensions.py::lda_topic_assignments, tests/test_topics_lda.py);
-what CAN be value-oracled cross-engine is topic APPLICATION against a
+TRAINING is float-schedule-dependent: online variational LDA's
+posterior depends on float reduction order across minibatch
+partitions, so no SQL engine can restate it. It runs once, in
+``derive_topic_term_artifact``, whose output is pinned below. What
+CAN be value-oracled cross-engine is topic APPLICATION against that
 FROZEN model, exactly how production pipelines ship topic models:
 
     topic(d) = argmax_t  sum_{token occurrences w in d ∩ vocab}
@@ -31,22 +33,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-# The oracle's (and bpe_encode_stats') ASCII-whitespace word splitter —
-# NOT \s, whose Unicode classes DuckDB and Java disagree on.
-WS_PATTERN = "[ \\t\\n\\x0B\\f\\r]+"
+from ..functions.scalars import WS_CLASS
 
 
 def derive_topic_term_artifact(
     spark: SparkSession, sf_dir: str, k: int = 5, top_per_topic: int = 20,
     scale: int = 1_000_000,
 ) -> list[tuple[str, tuple[int, ...]]]:
-    """Train the SAME pipeline as lda_topic_assignments (ASCII-ws
-    RegexTokenizer -> StopWordsRemover -> CountVectorizer(minDF=2,
-    vocabSize=2048) -> LDA(k, seed=42, maxIter=6)) on sf0.01 input
-    pinned to ONE partition — the regime tests/test_topics_lda.py
-    proves bit-identical across reruns (single-partition input fixes
-    online VB's minibatch composition) — and freeze the union of each
-    topic's top ``top_per_topic`` terms as
+    """Train the topic model (ASCII-ws RegexTokenizer ->
+    StopWordsRemover -> CountVectorizer(minDF=2, vocabSize=2048) ->
+    LDA(k, seed=42, maxIter=6)) on sf0.01 input pinned to ONE
+    partition — single-partition input fixes online VB's minibatch
+    composition, so reruns are bit-identical (the provenance test in
+    tests/test_topics_score.py re-derives the pinned artifact) — and
+    freeze the union of each topic's top ``top_per_topic`` terms as
     ``(term, (logp_micros_t0, ..., logp_micros_t{k-1}))`` sorted by
     term. Probabilities are per-topic column-normalized from
     ``topicsMatrix`` before the log/scale/round."""
@@ -63,7 +63,7 @@ def derive_topic_term_artifact(
          .filter(F.length(F.trim("text")) > 0)
          .select("doc_id", "text").coalesce(1))
     tok = RegexTokenizer(inputCol="text", outputCol="_toks",
-                         pattern=WS_PATTERN)
+                         pattern=WS_CLASS)
     stop = StopWordsRemover(inputCol="_toks", outputCol="_clean")
     cv = CountVectorizer(inputCol="_clean", outputCol="features",
                          vocabSize=2048, minDF=2.0)
@@ -169,7 +169,7 @@ def topic_scores(df: DataFrame,
     pin = pinned_topic_frame(spark, artifact)
     toks = (
         df.select(id_col,
-                  F.explode(F.split(F.lower(text_col), WS_PATTERN))
+                  F.explode(F.split(F.lower(text_col), WS_CLASS))
                   .alias("term"))
         .filter(F.length("term") > 0)
     )
@@ -204,7 +204,7 @@ def topic_score_oracle_sql(artifact: list[tuple[str, tuple[int, ...]]],
         SELECT doc_id, w AS term
         FROM (SELECT doc_id,
                      UNNEST(regexp_split_to_array(LOWER(text),
-                            '{WS_PATTERN}')) AS w
+                            '{WS_CLASS}')) AS w
               FROM documents
               WHERE LENGTH(TRIM(text)) > 0)
         WHERE LENGTH(w) > 0

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import fingerprint
+from ..functions.scalars import WS_CLASS
 from ..operators.dedup import EDITDIST_PAIRS_ORACLE_CTE, _cached_shingle_table
 from ..operators.prefix import attach_running_total
 from ..tables import load_table
@@ -404,7 +405,7 @@ def docs_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_decontamination's benchmark side."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     toks = (d.select("doc_id", "lang",
-                     F.explode(F.split(F.trim(F.lower("text")), "[ \\t\\n\\x0B\\f\\r]+")).alias("tok"))
+                     F.explode(F.split(F.trim(F.lower("text")), WS_CLASS)).alias("tok"))
             .filter(F.length("tok") > 0))
     vocab = (toks.groupBy("tok")
              .agg(F.countDistinct("doc_id").alias("df"))
@@ -531,7 +532,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed on the UNROUNDED doubles in both engines (identical IEEE
     arithmetic), the reported ratios are rounded for the hash gate."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = F.split(F.trim(F.col("text")), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = F.split(F.trim(F.col("text")), WS_CLASS)
     n_words = F.size(toks)
     mwl = (F.aggregate(F.transform(toks, lambda x: F.length(x)),
                        F.lit(0), lambda acc, x: acc + x)
@@ -599,7 +600,7 @@ def docs_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks the rewrite."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     toks = d.select("doc_id", "lang", "n_chars",
-                    F.size(F.split(F.trim(F.col("text")), "[ \\t\\n\\x0B\\f\\r]+")).alias("n_tok"))
+                    F.size(F.split(F.trim(F.col("text")), WS_CLASS)).alias("n_tok"))
     ranked = attach_running_total(
         toks, "n_tok", [F.desc("n_chars"), F.col("doc_id")],
         cum_col="cum_tok", total_col="total_tok")
@@ -710,7 +711,7 @@ def docs_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     this same one-shuffle shape."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     words = (d.select(F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")).alias("w"))
+                F.split(F.trim(F.lower(F.col("text"))), WS_CLASS)).alias("w"))
              .filter(F.length("w") >= 2))
     pairs = words.select(F.explode(
         F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
@@ -845,7 +846,7 @@ def docs_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-salt the head via operators/skew.py); the vocab size is a
     1-row broadcast scalar."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = F.split(F.lower(F.trim(F.col("text"))), WS_CLASS)
     bg = (d.filter(F.size(toks) >= 2)
           .select("doc_id", toks.alias("t"))
           .select("doc_id", F.explode(F.expr(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.scalars import WS_CLASS
 from ..operators.joins import asof_join
 from ..operators.multimodal import attach_meta, extract_features
 from ..operators.skew import salted_agg
@@ -368,7 +369,7 @@ def tfidf_keywords(d: DataFrame, k: int = 3) -> DataFrame:
     the oracled operator. Emits ``doc_id | term | tf | df | tfidf |
     rk`` for the top-``k`` terms per doc, integer-only ranking."""
     toks = (
-        d.select("doc_id", F.explode(F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+")).alias("tok"))
+        d.select("doc_id", F.explode(F.split(F.trim("text"), WS_CLASS)).alias("tok"))
         .filter(F.length("tok") > 3)
         .select("doc_id", F.lower("tok").alias("term"))
     )
@@ -389,61 +390,6 @@ def tfidf_keywords(d: DataFrame, k: int = 3) -> DataFrame:
         .filter(F.col("rk") <= k)
         .select("doc_id", "term", "tf", "df", "tfidf", "rk")
     )
-
-
-def lda_topic_assignments(d: DataFrame, k: int = 5, min_df: float = 2.0,
-                          max_iter: int = 6) -> DataFrame:
-    """text_topics_lda's engine over ANY documents-shaped frame
-    (doc_id, text) — split out so the pytest quality gates (planted
-    -topic purity, rerun determinism, tests/test_topics_lda.py) drive
-    EXACTLY the registered operator on controlled corpora."""
-    from pyspark.ml.clustering import LDA
-    from pyspark.ml.feature import CountVectorizer, RegexTokenizer, StopWordsRemover
-
-    tok = RegexTokenizer(inputCol="text", outputCol="_toks", pattern="[ \\t\\n\\x0B\\f\\r]+")
-    stop = StopWordsRemover(inputCol="_toks", outputCol="_clean")
-    cv = CountVectorizer(inputCol="_clean", outputCol="features",
-                         vocabSize=2048, minDF=min_df)
-    stage1 = stop.transform(tok.transform(d.select("doc_id", "text")))
-    cv_model = cv.fit(stage1)
-    # no explicit cache: online LDA snapshots its corpus RDD
-    # internally, so an extra DataFrame cache only adds a
-    # materialization pass (measured A/B at sf0.1)
-    vec = cv_model.transform(stage1).select("doc_id", "features")
-    # 6 online-VB iterations: assignment argmaxes stabilize well before
-    # perplexity does, and the query's contract is the argmax
-    lda = LDA(k=k, seed=42, maxIter=max_iter, featuresCol="features")
-    model = lda.fit(vec)
-    assigned = model.transform(vec)
-
-    # native argmax: position of the max in the distribution (1-based
-    # array_position on a value drawn from the same array is exact)
-    from pyspark.ml.functions import vector_to_array
-    arr = vector_to_array(F.col("topicDistribution"))
-    topic_id = (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
-    return (
-        assigned.select("doc_id", topic_id.alias("topic_id"))
-        .orderBy("doc_id")
-    )
-
-
-def text_topics_lda(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topic assignment via seeded LDA(k=5) over token counts — the
-    TRAINING path of the topic surface, deliberately UNREGISTERED
-    since r07 (the r06 sim_ann_* merge precedent): online variational
-    LDA's posterior depends on float reduction order across minibatch
-    partitions, so no ANSI-SQL engine can restate even the argmax
-    deterministically — DuckDB has no iterative-ML surface, and a
-    fixture-pinned oracle would freeze one engine's float schedule
-    rather than verify semantics. Its quantitative gates live in
-    tests/test_topics_lda.py (>= 90% planted-topic purity AND
-    bit-identical reruns on pinned single-partition input; >= 95%
-    permutation-tolerant rerun agreement on the real sf0.01 corpus).
-    The driver-gated, fully-oracled topic operator is
-    text_topics_score below — the pinned-artifact APPLICATION of a
-    model this function trains."""
-    d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    return lda_topic_assignments(d)
 
 
 from ..operators.topics import (  # noqa: E402
@@ -468,8 +414,10 @@ def text_topics_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     is then pure relational algebra — explode tokens, broadcast-join
     the 28x5-row artifact, EXACT int64 sum per (doc, topic), window
     argmax with ties -> lowest topic — bit-identical across engines
-    because no float ever enters the verdict path. TRAINING stays
-    pytest-gated with its recorded rationale (text_topics_lda above).
+    because no float ever enters the verdict path. TRAINING is not a
+    registry entry: online variational LDA's posterior depends on
+    float reduction order across minibatch partitions, so no SQL
+    engine can restate it (operators/topics.py header).
 
     Scale: one corpus scan; the pinned table is a constant-size
     broadcast; one shuffle on (doc_id, topic) with map-side partial
@@ -752,10 +700,10 @@ def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily hypertable-style rollup (operators/rollup.py::time_rollup)
     — the pre-aggregate a 100 TB events store is actually queried
-    through. Incremental partition-scoped refresh + idempotent re-run
-    semantics live in refresh_rollup (dynamic partition overwrite),
-    tested in tests/test_rollup.py; this query value-checks the
-    aggregate itself. NTZ-safe epoch arithmetic for the day bucket."""
+    through. Incremental, replay-proof maintenance lives in
+    append_rollup_delta / read_rollup / compact_rollup, tested in
+    tests/test_rollup.py; this query value-checks the aggregate
+    itself. NTZ-safe epoch arithmetic for the day bucket."""
     from ..operators.rollup import time_rollup
     ev = load_table(spark, sf_dir, "events")
     r = time_rollup(ev, "day")
@@ -847,7 +795,7 @@ def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0)
     with_counts = d.select(
-        "doc_id", F.size(F.split(F.trim("text"), "[ \\t\\n\\x0B\\f\\r]+")).alias("n_tokens"))
+        "doc_id", F.size(F.split(F.trim("text"), WS_CLASS)).alias("n_tokens"))
     packed = pack_sequences(with_counts, max_tokens=1024)
     seq = packing_stats(packed, 1024)  # seq_id | n_docs | seq_tokens | has_overflow
     nonover_tokens = F.sum(F.when(~F.col("has_overflow"),

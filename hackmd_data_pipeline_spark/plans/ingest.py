@@ -102,14 +102,3 @@ def to_history(canonical: DataFrame, etl_stage: str = "etl",
         F.lit(etl_stage).alias("etl_stage"),
         F.lit(operation_type).alias("operation_type"),
     )
-
-
-def idempotent_new_rows(incoming: DataFrame, existing: DataFrame,
-                        key: str = "entry_id") -> DataFrame:
-    """O-5'/O-22: ``ON CONFLICT DO NOTHING`` as dedup-before-append —
-    within-batch first-wins dedup, then left-anti against the target
-    (reference pg_engine.py:113; arxiv_collector.py:123-134). The
-    existing side should be pre-filtered to a bounded lookback (the
-    reference's 6-month trick) so it broadcasts at scale."""
-    deduped = incoming.dropDuplicates([key])
-    return deduped.join(existing.select(key), key, "left_anti")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.scalars import WS_CLASS
 from ..operators.membership import (
     bloom_build,
     bloom_might_contain,
@@ -178,7 +179,7 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     tc = (
         d.select(F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")
+            F.split(F.lower(F.trim(F.col("text"))), WS_CLASS)
         ).alias("term"))
         .filter(F.length("term") > 0)
         .groupBy("term").agg(F.count("*").alias("exact_cnt"))
@@ -250,7 +251,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     toks = (
         d.select("doc_id", F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")
+            F.split(F.lower(F.trim(F.col("text"))), WS_CLASS)
         ).alias("term"))
         .filter(F.length("term") > 0)
     )

@@ -401,8 +401,7 @@ def dedup_span_commit_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The span store's GROW-BY-COMMIT lifecycle, value-checked (the
     dedup_store_commit_cycle recipe applied to exact-substring dedup,
     r09): the store is grown by three epoch-keyed ``commit_spans``
-    calls (% 4 == 1, 2, 3 — the exact code ``run_span_ingest``'s
-    foreachBatch runs), then the % 4 == 0 batch's duplicated-span
+    calls (% 4 == 1, 2, 3), then the % 4 == 0 batch's duplicated-span
     report is computed against the grown store via
     ``incremental_spans``.
 

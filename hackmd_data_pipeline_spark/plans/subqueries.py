@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.scalars import WS_CLASS
 from ..operators.prefix import attach_running_total
 from ..tables import load_table
 from .registry import query
@@ -1120,7 +1121,7 @@ def docs_zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every term funneled through one task) is gone."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     freq = (
-        d.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")).alias("term"))
+        d.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), WS_CLASS)).alias("term"))
         .filter(F.length("term") > 0)
         .groupBy("term").agg(F.count("*").alias("f"))
     )
@@ -1421,7 +1422,7 @@ def agg_approx_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB restates the exact top-10 and literal TRUE."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     terms = (d.select("source",
-                      F.explode(F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+"))
+                      F.explode(F.split(F.lower(F.trim(F.col("text"))), WS_CLASS))
                       .alias("term"))
              .filter(F.length("term") > 0))
     per_source = terms.groupBy("source").agg(

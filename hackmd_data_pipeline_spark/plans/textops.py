@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import batch_id, fingerprint, sanitize_key, scrub_text, tokens
+from ..functions.scalars import WS_CLASS
 from ..operators.dedup import shingles
 from ..tables import load_table
 from .registry import query
@@ -96,7 +97,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.size(tokens("text")).alias("n_tokens"),
             F.length("text").alias("n_chars_actual"),
-            F.size(F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+"))).alias("n_unique_tokens"),
+            F.size(F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), WS_CLASS))).alias("n_unique_tokens"),
             F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_RE), 0)).alias("n_bpe_tokens"),
         )
         .orderBy("doc_id")
@@ -448,8 +449,8 @@ def fn_collection_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer sorts+hashes result columns and cannot factorize
     list-typed cells, so arrays must never escape the query."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")
-    toks_cased = F.split(F.trim(F.col("text")), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = F.split(F.lower(F.trim(F.col("text"))), WS_CLASS)
+    toks_cased = F.split(F.trim(F.col("text")), WS_CLASS)
     return (
         d.select(
             "doc_id",
@@ -509,7 +510,7 @@ def docs_vocabulary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per distinct term per partition, not per token)."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     return (
-        d.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")).alias("term"))
+        d.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), WS_CLASS)).alias("term"))
         .filter(F.length("term") > 0)
         .groupBy("term").agg(F.count("*").alias("freq"))
         .orderBy(F.desc("freq"), "term")
@@ -546,7 +547,7 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores high and gets flagged. Single projection pass (the shingle
     arrays never leave their row), no shuffle, value-checked."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = F.split(F.trim(F.col("text")), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = F.split(F.trim(F.col("text")), WS_CLASS)
     all_sh = F.filter(
         F.zip_with(
             F.zip_with(F.transform(toks, lambda x: F.lower(x)),
@@ -604,7 +605,7 @@ def docs_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition."""
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     sh = (
-        d.filter(F.size(F.split(F.trim(F.col("text")), "[ \\t\\n\\x0B\\f\\r]+")) >= 5)
+        d.filter(F.size(F.split(F.trim(F.col("text")), WS_CLASS)) >= 5)
         .select("doc_id", "source",
                 F.explode(F.array_distinct(shingles(F.col("text"), 5))).alias("shingle"))
         .filter(F.length("shingle") > 0)
@@ -741,7 +742,7 @@ def docs_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per ingest batch."""
     d = load_table(spark, sf_dir, "documents")
     nonempty = d.filter(F.length(F.trim("text")) > 0)
-    n_tok = F.size(F.split(F.trim(F.col("text")), "[ \\t\\n\\x0B\\f\\r]+"))
+    n_tok = F.size(F.split(F.trim(F.col("text")), WS_CLASS))
     n_stop = F.size(F.regexp_extract_all(
         F.col("text"), F.lit("\\b(the|a|of|and|to|in|is)\\b"), F.lit(0)))
     quality = nonempty.filter(
@@ -794,7 +795,7 @@ def docs_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs yield no chunks."""
     window, stride = 32, 24
     d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = F.split(F.lower(F.trim(F.col("text"))), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = F.split(F.lower(F.trim(F.col("text"))), WS_CLASS)
     t = d.select("doc_id", toks.alias("toks"))
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(stride))
     return (
@@ -915,7 +916,7 @@ def curation_decision_table(d: DataFrame) -> DataFrame:
     (doc_id, text) — reused by the composed corpus pipeline (etl.py)
     so the end-to-end chain runs EXACTLY the oracled operator."""
     is_empty = F.length(F.trim("text")) == 0
-    n_tok = F.size(F.split(F.trim(F.col("text")), "[ \\t\\n\\x0B\\f\\r]+"))
+    n_tok = F.size(F.split(F.trim(F.col("text")), WS_CLASS))
     n_stop = F.size(F.regexp_extract_all(
         F.col("text"), F.lit("\\b(the|a|of|and|to|in|is)\\b"), F.lit(0)))
     quality_ok = (~is_empty & (n_tok >= 20)

@@ -11,7 +11,7 @@ exactly as it does for reads/writes.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -76,6 +76,32 @@ def fs_total_bytes(spark: SparkSession, path: str) -> int:
     if not fs.exists(hpath):
         return 0
     return int(fs.getContentSummary(hpath).getLength())
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+    A local directory of Spark-written parquet declares the schema
+    Spark recorded in one data file's footer (read on the driver
+    through pyarrow); partition columns are still discovered from the
+    directory names, so the frame has the schema inference would give.
+    Any other path (an hdfs://, s3a:// or file: URI), or a file
+    without Spark's footer entry, takes the inferring read."""
+    import json
+    import os
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    if os.path.isdir(path):
+        files = ds.dataset(path, format="parquet").files
+        meta = pq.read_metadata(files[0]).metadata if files else None
+        recorded = (meta or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata")
+        if recorded is not None:
+            schema = T.StructType.fromJson(json.loads(recorded))
+            return spark.read.schema(schema).parquet(path)
+    return spark.read.parquet(path)
 
 
 def fs_create_exclusive(spark: SparkSession, path: str) -> bool:

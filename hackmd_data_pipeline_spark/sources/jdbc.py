@@ -14,9 +14,8 @@ source — these wrappers pin the options that matter at scale:
     ``truncate`` to keep overwrite from dropping indexes.
 
 Conflict-ignore (the reference's ON CONFLICT DO NOTHING) is NOT a
-JDBC-write option: the engine's idempotent path stays
-plans/ingest.idempotent_new_rows (anti-join before append), which is
-also how it works on the parquet store — see streaming/pipeline.py.
+JDBC-write option: the engine's idempotent path is the anti-join
+before append that streaming/pipeline.py runs on the parquet store.
 
 Tested live in-container against Derby embedded (the JDBC database
 Spark itself ships for the Hive metastore — org.apache.derby.jdbc.

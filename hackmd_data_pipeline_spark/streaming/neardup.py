@@ -270,134 +270,3 @@ def run_cluster_maintained_ingest(spark: SparkSession, docs_path: str,
           checkpoint, handle_batch)
     return counts
 
-
-def run_span_ingest(spark: SparkSession, docs_path: str, out_root: str,
-                    checkpoint: str, store_dest: str,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    k: int = 32,
-                    max_dup_fraction: float = 0.5) -> dict[str, int]:
-    """Streaming EXACT-SUBSTRING ingest against the persisted span
-    store (r09 — the streaming face of ``commit_spans`` /
-    ``incremental_spans``, completing the span store's lifecycle
-    symmetry with the MinHash store and the ANN index): drain document
-    parquet drops; per micro-batch, report each new doc's verbatim
-    duplicated-span coverage against store ∪ batch, DROP docs whose
-    ``dup_fraction`` exceeds ``max_dup_fraction`` (the Lee et al.
-    train-set cleaning policy — a doc that is mostly copies of
-    already-ingested text carries little new signal and concentrates
-    memorization risk), land survivors in the corpus, and commit the
-    survivors' span hashes so later batches dedup against them too.
-
-    Exactly-once discipline shared with ``run_neardup_ingest``:
-    file-source checkpoint (each drop read once), epoch-keyed
-    overwrite writes, own-epoch partial wipe before the store read, a
-    bounded exact-id skip (``bounded_anti_join`` over the store's
-    committed doc ledger — table-wide ON-CONFLICT semantics with no
-    store-sized broadcast). The store layout adds ``docs/epoch=<n>``
-    (``doc_id | n_tokens``) beside ``spans/epoch=<n>``: spans alone
-    cannot be the id ledger because a shorter-than-k doc has no span
-    rows and would be re-admitted on every replay.
-
-    Deleted-id policy (r09 ADVICE, documented + observable): a
-    ``remove_docs``-tombstoned id that is RE-SUBMITTED is still
-    skipped while its ledger row physically exists — a deleted id is
-    unreusable until ``compact_store`` separates the generations
-    (re-admitting it earlier would commit span/ledger rows that every
-    reader excludes by id and the next compaction would silently
-    drop). After compaction both the ledger row and the tombstone are
-    physically gone, so the same id is admissible as a fresh doc.
-    The pre-compaction skips are counted separately
-    (``skipped_tombstoned``) so the policy is visible to operators
-    instead of folding into the ordinary duplicate-id skip count.
-
-    Returns ``{"kept": n, "dropped_dup": n, "skipped_ids": n,
-    "skipped_tombstoned": n}``."""
-    from ..operators.dedup_store import (
-        _gate_dead,
-        commit_spans,
-        incremental_spans,
-        load_tombstones,
-    )
-    from ..schemas import TPCH_SCHEMAS
-
-    doc_schema = TPCH_SCHEMAS["documents"]
-    counts = {"kept": 0, "dropped_dup": 0, "skipped_ids": 0,
-              "skipped_tombstoned": 0}
-
-    def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        for root in (out_root + "/corpus", store_dest + "/spans",
-                     store_dest + "/docs"):
-            fs_delete(spark, _epoch_dir(root, epoch_id))
-
-        batch = (batch.filter(F.length(F.trim(text_col)) > 0)
-                 .dropDuplicates([id_col]).persist())
-        n_in = batch.count()
-        if n_in == 0:
-            batch.unpersist()
-            return
-
-        if fs_exists(spark, store_dest + "/docs"):
-            stored_ids = _read_clean(spark, store_dest + "/docs",
-                                     batch.select(id_col).schema)
-            fresh = bounded_anti_join(batch, stored_ids, id_col).persist()
-            n_fresh = fresh.count()
-            # surface tombstoned-id skips distinctly (the deleted-id
-            # policy above); the tombstone side goes through the same
-            # size-gated posture as every other tombstone anti-join
-            # (_gate_dead: broadcast under the byte ceiling, planner
-            # strategy above it — heavy-deletion regimes must not
-            # force an unbounded driver broadcast here either)
-            dead = (load_tombstones(spark, store_dest)
-                    if n_fresh != n_in else None)
-            if dead is not None:
-                counts["skipped_tombstoned"] += (
-                    batch.join(
-                        _gate_dead(spark, store_dest,
-                                   dead.select(F.col("id").alias(id_col))),
-                        id_col, "left_semi")
-                    .join(fresh.select(id_col), id_col, "left_anti")
-                    .count())
-        else:
-            fresh, n_fresh = batch, n_in
-        counts["skipped_ids"] += n_in - n_fresh
-        if n_fresh == 0:
-            batch.unpersist()
-            return
-
-        if fs_exists(spark, store_dest + "/spans"):
-            report = incremental_spans(fresh, store_dest, id_col,
-                                       text_col, k)
-        else:
-            # bootstrap batch: the full-corpus audit over the batch
-            # itself (same semantics as incremental vs an empty store)
-            from ..operators.dedup import exact_substring_spans
-            report = exact_substring_spans(fresh, id_col, text_col, k)
-        keep_ids = (report.filter(F.col("dup_fraction")
-                                  <= F.lit(max_dup_fraction))
-                    .select(id_col))
-        survivors = fresh.join(F.broadcast(keep_ids), id_col,
-                               "left_semi").persist()
-        n_kept = survivors.count()
-        survivors.write.mode("overwrite").parquet(
-            _epoch_dir(out_root + "/corpus", epoch_id))
-        if n_kept:
-            commit_spans(survivors, store_dest, epoch_id, id_col,
-                         text_col, k, out_partitions=4)
-            (survivors
-             .select(id_col,
-                     F.size(F.split(F.lower(F.trim(F.col(text_col))),
-                                    "[ \\t\\n\\x0B\\f\\r]+"))
-                     .alias("n_tokens"))
-             .coalesce(4)
-             .write.mode("overwrite")
-             .parquet(_epoch_dir(store_dest + "/docs", epoch_id)))
-        counts["kept"] += n_kept
-        counts["dropped_dup"] += n_fresh - n_kept
-        survivors.unpersist()
-        if fresh is not batch:
-            fresh.unpersist()
-        batch.unpersist()
-
-    drain(spark.readStream.schema(doc_schema).parquet(docs_path),
-          checkpoint, handle_batch)
-    return counts

@@ -15,11 +15,13 @@ from hackmd_data_pipeline_spark.operators.dedup import (
 from hackmd_data_pipeline_spark.operators.dedup_store import (
     build_dedup_store,
     incremental_pairs,
+    incremental_spans,
     load_clusters,
     load_pairs,
     load_tombstones,
     resolve_from_store,
 )
+from hackmd_data_pipeline_spark.sources.fs import read_parquet
 from hackmd_data_pipeline_spark.tables import load_table
 
 from .conftest import SF_CORRECT, local_df
@@ -643,6 +645,40 @@ def test_remove_docs_repairs_crashed_prior_deletion(spark, tmp_path):
     assert _resolved(spark, dest) == set()
 
 
+def test_compact_store_folds_span_store_with_ledger(spark, tmp_path):
+    """compact_store folds an epoch-grown span store (spans + the doc
+    id ledger CorpusPipeline's audit_spans stage writes beside them)
+    into one generation, and incremental_spans against the folded
+    store still catches a doc quoting a stored one."""
+    from hackmd_data_pipeline_spark.operators.dedup_store import (
+        commit_spans, compact_store)
+
+    def tok(tag, n):
+        return " ".join(f"{tag}{j}" for j in range(n))
+
+    store = str(tmp_path / "spanstore")
+    for epoch, did in enumerate((1, 2)):
+        commit_spans(local_df(spark, [(did, tok(f"t{did}_", 30))],
+                              "doc_id long, text string"),
+                     store, epoch_id=epoch, k=8)
+        local_df(spark, [(did, 30)], "doc_id long, n_tokens int") \
+            .write.parquet(f"{store}/docs/epoch={epoch}")
+
+    folded = str(tmp_path / "folded")
+    stats = compact_store(spark, store, folded)
+    assert "spans" in stats and "docs" in stats
+    ledger = spark.read.parquet(folded + "/docs")
+    assert {r.doc_id for r in ledger.select("doc_id").collect()} == {1, 2}
+
+    leak = " ".join(tok("t1_", 30).split()[:16]
+                    + [f"z{j}" for j in range(14)])
+    report = incremental_spans(
+        local_df(spark, [(5, leak)], "doc_id long, text string"),
+        folded, k=8).collect()
+    assert [r.doc_id for r in report] == [5]
+    assert report[0].dup_fraction > 0.5
+
+
 def test_compact_store_repairs_orphaned_tombstone(spark, tmp_path):
     """r09 ADVICE (medium): compacting a store whose remove_docs
     crashed between the tombstone commit and the overlay commit must
@@ -684,7 +720,7 @@ def grown_store(spark, tmp_path_factory):
     tombstone and a second overlay (``remove_docs``). ``new`` is a
     batch of clones of stored docs for ``incremental_pairs``."""
     from hackmd_data_pipeline_spark.operators.dedup_store import (
-        remove_docs, update_clusters)
+        commit_spans, remove_docs, update_clusters)
 
     root = tmp_path_factory.mktemp("readers")
     flat, grown = str(root / "flat"), str(root / "grown")
@@ -699,9 +735,17 @@ def grown_store(spark, tmp_path_factory):
                              "id_a long, id_b long, jaccard double"),
                     grown, epoch_id=0)
     remove_docs(local_df(spark, [(5_000_000,)], "id long"), grown)
+    commit_spans(d, grown, epoch_id=0, k=8)
     new = d.filter(F.col("doc_id") < 2).select(
         (F.col("doc_id") + 3_000_000).alias("doc_id"), "text")
     return {"flat": flat, "grown": grown, "new": new}
+
+
+def _rebuild_complete_store(spark, st):
+    """``build_dedup_store`` over a store whose every stage is
+    committed: all stages are skipped, and the store's clusters."""
+    build_dedup_store(st["new"], st["flat"], jaccard_threshold=0.9)
+    return load_clusters(spark, st["flat"])
 
 
 _STORE_READERS = {
@@ -712,6 +756,12 @@ _STORE_READERS = {
     "load_tombstones": lambda spark, st: load_tombstones(spark, st["grown"]),
     "incremental_pairs": lambda spark, st: incremental_pairs(
         st["new"], st["grown"], jaccard_threshold=0.9),
+    "incremental_spans": lambda spark, st: incremental_spans(
+        st["new"], st["grown"], k=8),
+    "build_dedup_store_complete": _rebuild_complete_store,
+    # compact_store's table reads (the call itself writes)
+    "read_parquet_epoch_table":
+        lambda spark, st: read_parquet(spark, st["grown"] + "/spans"),
 }
 
 

@@ -13,16 +13,15 @@ from pyspark.sql import functions as F
 
 from hackmd_data_pipeline_spark.operators.dedup_store import commit_batch
 from hackmd_data_pipeline_spark.plans.ingest import (
-    completeness_filter, idempotent_new_rows, to_canonical, to_history)
+    completeness_filter, to_canonical, to_history)
 from hackmd_data_pipeline_spark.schemas import (
     HISTORY_SCHEMA, PAPER_SCHEMA, RAW_BATCHES_SCHEMA)
 from hackmd_data_pipeline_spark.sources.jsonl_gz import (
     read_raw_jsonl, split_quarantine)
 from hackmd_data_pipeline_spark.streaming.control import (
     ControlTable, claim_pending, mark_status)
-from hackmd_data_pipeline_spark.streaming.annindex import run_ann_index_ingest
 from hackmd_data_pipeline_spark.streaming.neardup import (
-    run_cluster_maintained_ingest, run_neardup_ingest, run_span_ingest)
+    run_cluster_maintained_ingest, run_neardup_ingest)
 from hackmd_data_pipeline_spark.streaming.pipeline import run_ingest_stream
 from hackmd_data_pipeline_spark.tables import load_table
 
@@ -96,18 +95,6 @@ def test_history_transform(spark, raw_dir):
     assert len({r.history_id for r in rows}) == len(rows)   # uuid unique
     assert all("\n" not in r.summary for r in rows)         # scrub (O-12)
     assert all(r.operation_type == "insert" and r.etl_stage == "test" for r in rows)
-
-
-def test_idempotent_new_rows(spark, raw_dir):
-    good, _ = split_quarantine(read_raw_jsonl(spark, raw_dir))
-    canonical = to_canonical(completeness_filter(good))
-    existing = canonical.limit(4)
-    new = idempotent_new_rows(canonical, existing)
-    # 11 complete - 1 within-batch dup - 4 already present = 6
-    assert new.count() == 6
-    # re-applying against the union is a no-op (ON CONFLICT DO NOTHING)
-    assert idempotent_new_rows(canonical, existing.select("entry_id")
-                               .union(new.select("entry_id"))).count() == 0
 
 
 # ---------------------------------------------------------------- control
@@ -237,26 +224,19 @@ def _ingest_raw(spark, tmp_path, raw_dir):
                                      str(tmp_path / "ckpt"))
 
 
-def _docs_drop(spark, tmp_path, table="documents", key="doc_id"):
+def _docs_drop(spark, tmp_path):
     path = str(tmp_path / "in")
-    (load_table(spark, SF_CORRECT, table).filter(F.col(key) < 60)
+    (load_table(spark, SF_CORRECT, "documents").filter(F.col("doc_id") < 60)
      .coalesce(1).write.parquet(path))
     return path
 
 
-def _ingest_docs(run, **kw):
+def _ingest_docs(run):
     def prepare(spark, tmp_path, raw_dir):
         docs = _docs_drop(spark, tmp_path)
         return lambda: run(spark, docs, str(tmp_path / "out"),
-                           str(tmp_path / "ckpt"), str(tmp_path / "store"),
-                           **kw)
+                           str(tmp_path / "ckpt"), str(tmp_path / "store"))
     return prepare
-
-
-def _ingest_vectors(spark, tmp_path, raw_dir):
-    vecs = _docs_drop(spark, tmp_path, "embeddings", "vec_id")
-    return lambda: run_ann_index_ingest(spark, vecs, str(tmp_path / "idx"),
-                                        str(tmp_path / "ckpt"), nlist=4)
 
 
 def _commit_batch(spark, tmp_path, raw_dir):
@@ -269,8 +249,6 @@ _OFF_THREAD_WORK = {
     "run_neardup_ingest": _ingest_docs(run_neardup_ingest),
     "run_cluster_maintained_ingest":
         _ingest_docs(run_cluster_maintained_ingest),
-    "run_span_ingest": _ingest_docs(run_span_ingest, k=8),
-    "run_ann_index_ingest": _ingest_vectors,
     "commit_batch": _commit_batch,
 }
 

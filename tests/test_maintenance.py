@@ -1,30 +1,7 @@
-"""Maintenance operators: compaction file-count math and partition
-retention.
+"""Maintenance operators: partition retention.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from hackmd_data_pipeline_spark.operators.maintenance import (
-    compact, table_file_stats)
-from hackmd_data_pipeline_spark.tables import load_table
-
-from .conftest import SF_CORRECT
-
-
-def test_compact_reduces_file_count(spark, tmp_path):
-    src = str(tmp_path / "fragmented")
-    li = load_table(spark, SF_CORRECT, "lineitem")
-    li.repartition(40).write.parquet(src)   # simulate small-file ingest
-    assert table_file_stats(spark, src)["n_files"] == 40
-
-    total = table_file_stats(spark, src)["total_bytes"]
-    result = compact(spark, src, target_file_bytes=total // 4 + 1,
-                     dest=str(tmp_path / "compacted"))
-    assert result["after"]["n_files"] <= 4
-    # lossless: same rows after compaction
-    assert (spark.read.parquet(result["dest"]).count() == li.count())
 
 
 def test_retention_sweep_drops_old_partitions(spark, tmp_path):

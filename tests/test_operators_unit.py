@@ -408,34 +408,6 @@ def test_frozen_frame_survives_cache_eviction(spark):
     P._FROZEN_CACHE.clear()
 
 
-def test_flush_frozen_cache_releases_checkpoint_blocks(spark):
-    """Deterministic block release lives in flush_frozen_cache()
-    (session-teardown scope, where no caller can still hold a frozen
-    frame): after the flush the recorded RDD ids have left the JVM
-    persistent-RDD registry. (Round-4 ADVICE follow-up: the snapshot
-    helper records the ids localCheckpoint ACTUALLY persisted —
-    `df._jdf.rdd()` wraps the internal RDD in a fresh deserializing
-    RDD, so unpersisting the wrapper never freed anything.)"""
-    from hackmd_data_pipeline_spark.operators import prefix as P
-
-    P._FROZEN_CACHE.clear()
-    frozen_ids = []
-    for i in range(3):
-        df = spark.range(50 + i).withColumnRenamed("id", "v")
-        P._frozen_range_partitioned(df, [F.col("v")]).count()
-        _, _, rdd_ids = next(reversed(P._FROZEN_CACHE.values()))
-        assert rdd_ids, "freeze did not record any persisted RDD id"
-        frozen_ids.append(rdd_ids)
-
-    P.flush_frozen_cache(spark)
-    assert not P._FROZEN_CACHE
-    live = set(spark.sparkContext._jsc.getPersistentRDDs()
-               .keySet().toArray())
-    for ids in frozen_ids:
-        assert not (set(ids) & live), (
-            f"flushed checkpoint blocks still persisted: {ids}")
-
-
 def test_attach_running_total_empty_and_single_row(spark):
     """Degenerate inputs: an EMPTY frame yields an empty result (the
     broadcast totals row vanishes with it, no null poisoning), and a

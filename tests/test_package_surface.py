@@ -6,11 +6,12 @@ Roots are the non-test entry points (``bench.py``,
 entries (``@query`` builders), ``__all__`` lists, every package line
 outside a top-level definition (module docstrings, imports, module-
 level statements) and the names in ``KEEP``. A definition is reached
-when its name occurs as a word in a root or inside a reached
-definition; the walk is transitive, so a helper whose only caller is
-itself unreached counts as unreached. Matching is by word, comments
-and docstrings included, and not by module, which errs on the side of
-"reached".
+when a root or a reached definition refers to it in code: as a name,
+an attribute, an imported name, or a string constant that is a whole
+identifier (a registry or ``getattr`` lookup). Docstrings and comments
+reach nothing. The walk is transitive, so a helper whose only caller
+is itself unreached counts as unreached. Matching is by name, not by
+module, which errs on the side of "reached".
 
 A definition that only tests reach is a second implementation, a
 wrapper or a capability no workload runs: delete it with its tests, or
@@ -20,7 +21,7 @@ give it a reason in ``KEEP``. No Spark session; pure ``ast``.
 from __future__ import annotations
 
 import ast
-import re
+import textwrap
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -44,6 +45,24 @@ KEEP = {
         "the reference data model: the per-paper state table",
     "track_sessions":
         "the custom per-key state operator (applyInPandasWithState)",
+    "compact_store":
+        "the only bound on a dedup store's epoch growth; "
+        "table_file_stats is reached through it",
+    "compact_clusters":
+        "the only bound on a dedup store's cluster-overlay growth",
+    "train_bpe_merges":
+        "the provenance of PINNED_BPE_MERGES (test_bpe re-derives it); "
+        "train_merges_from_word_freq is reached through it",
+    "PAPER_SCHEMA":
+        "the reference data model: the canonical paper table",
+    "HISTORY_SCHEMA":
+        "the reference data model: the paper history table",
+    "run_neardup_ingest":
+        "the README-documented near-dup streaming ingest; _read_clean "
+        "is reached through it",
+    "validate_battery":
+        "the cross-engine check that verifies the shipped "
+        "REDACTION_PATTERNS",
 }
 
 
@@ -54,8 +73,21 @@ def _py_files(path: Path):
             and not f.name.startswith("test_")]
 
 
-def _words(text: str) -> set[str]:
-    return set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", text))
+def _refs(node: ast.AST) -> set[str]:
+    """The names ``node`` refers to in code: names, attributes,
+    imported names and identifier strings; prose is not code."""
+    found = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            found.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            found.add(n.attr)
+        elif isinstance(n, ast.alias):
+            found.update(n.name.split("."))
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            found.add(n.value)
+    return found
 
 
 def _defined_names(stmt: ast.stmt) -> list[str]:
@@ -80,22 +112,16 @@ def unreached_definitions(keep=()) -> dict[str, str]:
     roots: set[str] = set()
     for f in _py_files(PACKAGE):
         module = str(f.relative_to(REPO))
-        lines = f.read_text().splitlines()
-        outside = list(lines)
-        for stmt in ast.parse("\n".join(lines)).body:
+        for stmt in ast.parse(f.read_text()).body:
             names = _defined_names(stmt)
             if not names or "__all__" in names or _is_query(stmt):
+                roots |= _refs(stmt)
                 continue
-            first = min([stmt.lineno]
-                        + [d.lineno for d in getattr(stmt, "decorator_list", ())])
-            text = "\n".join(lines[first - 1:stmt.end_lineno])
-            outside[first - 1:stmt.end_lineno] = [""] * (stmt.end_lineno - first + 1)
             for name in names:
-                defs.setdefault(name, []).append((module, _words(text) - {name}))
-        roots |= _words("\n".join(outside))
+                defs.setdefault(name, []).append((module, _refs(stmt) - {name}))
     for entry in ENTRY_POINTS:
         for f in _py_files(REPO / entry):
-            roots |= _words(f.read_text())
+            roots |= _refs(ast.parse(f.read_text()))
 
     reached: set[str] = set()
     frontier = (roots | set(keep)) & defs.keys()
@@ -119,3 +145,35 @@ def test_keep_list_names_only_unreached_definitions():
     that no longer exists is stale: both leave ``KEEP``."""
     stale = set(KEEP) - set(unreached_definitions())
     assert not stale, f"KEEP entries that are reached or gone: {sorted(stale)}"
+
+
+def test_prose_reaches_nothing(tmp_path, monkeypatch):
+    """A name in a docstring or a comment is not a use: only code
+    (a name, an attribute, an import or an identifier string) reaches
+    a definition."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(textwrap.dedent('''\
+        """Module docs that mention only_in_prose()."""
+
+        # only_in_prose is named in this comment too
+
+
+        def only_in_prose():
+            return 1
+
+
+        def by_string():
+            return 2
+
+
+        def caller():
+            """Unlike only_in_prose, by_string is looked up."""
+            return globals()["by_string"]()
+
+
+        __all__ = ["caller"]
+        '''))
+    monkeypatch.setitem(globals(), "REPO", tmp_path)
+    monkeypatch.setitem(globals(), "PACKAGE", pkg)
+    assert unreached_definitions() == {"only_in_prose": "pkg/mod.py"}

@@ -1,28 +1,17 @@
 """Incremental rollup maintenance: correctness of the tumbling
-aggregate, partition-scoped refresh (untouched partitions stay
-byte-identical), and idempotent re-runs.
+aggregate, and the epoch-keyed delta lifecycle (replay-proof appends,
+compaction, crash windows, the sketch kind, a real stream).
 """
 
 from __future__ import annotations
 
-import pathlib
-
 import pytest
 from pyspark.sql import functions as F
 
-from hackmd_data_pipeline_spark.operators.rollup import (
-    refresh_rollup, time_rollup)
+from hackmd_data_pipeline_spark.operators.rollup import time_rollup
 from hackmd_data_pipeline_spark.tables import load_table
 
 from .conftest import SF_SMOKE
-
-
-def _files_by_partition(dest: str) -> dict[str, set[tuple[str, float]]]:
-    """partition dir -> set of (filename, mtime) for its parquet files."""
-    out: dict[str, set[tuple[str, float]]] = {}
-    for p in pathlib.Path(dest).glob("event_date=*/*.parquet"):
-        out.setdefault(p.parent.name, set()).add((p.name, p.stat().st_mtime))
-    return out
 
 
 def test_rollup_matches_direct_agg(spark, tmp_path):
@@ -40,129 +29,6 @@ def test_rollup_matches_direct_agg(spark, tmp_path):
     assert got == want
     # event_date is derived from the bucket, never drifts
     assert all(r.event_date == r.bucket.date() for r in rolled.collect())
-
-
-def test_incremental_refresh_touches_only_target_partitions(spark, tmp_path):
-    ev = load_table(spark, SF_SMOKE, "events")
-    dest = str(tmp_path / "rollup")
-    refresh_rollup(ev, dest, "hour")
-    before = _files_by_partition(dest)
-    assert len(before) > 1, "need multiple date partitions for this test"
-
-    # refresh ONE date; all other partitions must remain byte-identical
-    target = sorted(before)[0].split("=", 1)[1]
-    refresh_rollup(ev, dest, "hour", dates=[target])
-    after = _files_by_partition(dest)
-    assert set(after) == set(before)
-    for part in before:
-        if part == f"event_date={target}":
-            continue
-        assert after[part] == before[part], f"{part} was rewritten"
-
-    # and the refreshed table still equals a full rebuild, row-for-row
-    full = time_rollup(ev, "hour")
-    stored = spark.read.parquet(dest)
-    assert sorted(map(tuple, stored.select(*full.columns).collect())) == \
-        sorted(map(tuple, full.collect()))
-
-
-def test_refresh_is_idempotent(spark, tmp_path):
-    ev = load_table(spark, SF_SMOKE, "events")
-    dest = str(tmp_path / "rollup")
-    refresh_rollup(ev, dest, "hour")
-    first = sorted(map(tuple, spark.read.parquet(dest).collect()))
-    refresh_rollup(ev, dest, "hour")
-    second = sorted(map(tuple, spark.read.parquet(dest).collect()))
-    assert first == second
-
-
-def test_streaming_merge_rollup_equals_batch_rollup(spark, tmp_path):
-    """Feed events through a file stream in two micro-batches; the
-    merged rollup must equal the one-shot batch rollup of all events.
-    """
-    from hackmd_data_pipeline_spark.operators.rollup import (
-        merge_rollup_batch)
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    # split source into two file drops (by event_id parity)
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        str(src / "drop1"))
-    dest = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
-    schema = ev.schema
-
-    def run_available():
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        q = (stream.writeStream
-             .foreachBatch(lambda b, _e: merge_rollup_batch(b, dest, "hour"))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_available()
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        str(src / "drop2"))
-    run_available()
-
-    want = sorted(
-        (r.bucket, r.event_type, r.n_events, round(r.sum_value, 6),
-         round(r.min_value, 6), round(r.max_value, 6))
-        for r in time_rollup(ev, "hour").collect())
-    got = sorted(
-        (r.bucket, r.event_type, r.n_events, round(r.sum_value, 6),
-         round(r.min_value, 6), round(r.max_value, 6))
-        for r in spark.read.parquet(dest).collect())
-    assert got == want
-
-
-def test_sketch_rollup_incremental_equals_single_pass(spark, tmp_path):
-    """HLL union is exact over register state: merging per-batch
-    sketches must yield the SAME estimates as sketching all events in
-    one pass — and the estimates must equal exact distincts at these
-    cardinalities."""
-    from pyspark.sql import functions as F
-
-    from hackmd_data_pipeline_spark.operators.rollup import (
-        merge_rollup_sketch_batch,
-        time_rollup_sketch,
-    )
-    from hackmd_data_pipeline_spark.tables import load_table
-
-    from .conftest import SF_CORRECT
-
-    ev = load_table(spark, SF_CORRECT, "events").filter(
-        F.col("event_id") < 20_000)
-    dest = str(tmp_path / "sketch_rollup")
-
-    # two micro-batches split by event id (users overlap across both)
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-    merge_rollup_sketch_batch(b1, dest)
-    merge_rollup_sketch_batch(b2, dest)
-
-    merged = spark.read.parquet(dest).select(
-        "event_date", "event_type",
-        F.hll_sketch_estimate("users_hll").alias("est"))
-    got = {(str(r.event_date), r.event_type): r.est
-           for r in merged.collect()}
-
-    single = (time_rollup_sketch(ev)
-              .select("event_date", "event_type",
-                      F.hll_sketch_estimate("users_hll").alias("est")))
-    want = {(str(r.event_date), r.event_type): r.est
-            for r in single.collect()}
-    assert got == want, "incremental merge must equal single-pass sketch"
-
-    exact = (ev.groupBy(
-                F.to_date(F.col("ts")).alias("d"), "event_type")
-             .agg(F.countDistinct("user_id").alias("n")))
-    # HLL default lgK: relative error ~1.6%; these groups are small
-    for r in exact.collect():
-        est = got[(str(r.d), r.event_type)]
-        assert abs(est - r.n) <= max(2, 0.05 * r.n), (r.d, r.event_type)
 
 
 def _delta_rollup_env(spark, tmp_path):

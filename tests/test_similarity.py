@@ -5,6 +5,7 @@ recall vs exact pairwise Jaccard on a small slice.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hackmd_data_pipeline_spark.operators.dedup import minhash_lsh_pairs, shingles
@@ -796,6 +797,35 @@ def test_remove_vectors_count_observed_on_write(spark, tmp_path):
         dead.write.parquet(str(tmp_path / "read_back")),
         spark.read.parquet(str(tmp_path / "read_back")).count()))
     assert jobs == bare <= read_back - 2
+
+
+@pytest.mark.parametrize("generations", ["base", "deltas", "tombstones"])
+def test_ivf_index_data_launches_no_job(spark, tmp_path, generations):
+    """A local index's data frame is built without a Spark job: the
+    base schema comes from one Parquet footer, and the deltas and
+    tombstones are read with the base frame's schema. The frame has
+    the schema inference would give and reads every live row."""
+    from hackmd_data_pipeline_spark.operators.similarity import (
+        build_ivf_index, ivf_index_data, remove_vectors, upsert_ivf_index)
+
+    emb = load_table(spark, SF_CORRECT, "embeddings").filter(
+        F.col("vec_id") < 240)
+    idx = str(tmp_path / "idx")
+    build_ivf_index(emb.filter(F.col("vec_id") < 200), idx, nlist=4)
+    n = 200
+    if generations != "base":
+        upsert_ivf_index(emb.filter(F.col("vec_id") >= 200), idx,
+                         epoch_id=0)
+        n = 240
+    if generations == "tombstones":
+        remove_vectors(local_df(spark, [(3,), (210,)], "id long"), idx)
+        n = 238
+
+    got = []
+    assert jobs_launched(
+        spark, lambda: got.append(ivf_index_data(spark, idx))) == 0
+    assert got[0].schema == spark.read.parquet(idx + "/data").schema
+    assert got[0].count() == n
 
 
 def test_quantizer_drift_flags_skewed_upserts(spark, tmp_path):

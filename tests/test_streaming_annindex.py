@@ -1,7 +1,5 @@
-"""Streaming ANN-index ingest: the persisted IVF index stays
-searchable and duplicate-free across micro-batch boundaries,
-exactly-once per input file via the checkpoint (r08 — the
-streaming/neardup.py discipline applied to the vector index).
+"""ANN-index maintenance: the versioned-pointer compaction cycle,
+the pointer's publish races, and the drift-gated quantizer reuse.
 """
 
 from __future__ import annotations
@@ -15,89 +13,14 @@ from hackmd_data_pipeline_spark.operators.similarity import (
     ivf_index_data,
     ivf_search_index,
 )
-from hackmd_data_pipeline_spark.streaming.annindex import run_ann_index_ingest
 from hackmd_data_pipeline_spark.tables import load_table
 
 from .conftest import SF_CORRECT
 
 
-def _write_drop(df, path):
-    df.coalesce(1).write.mode("append").parquet(path)
-
-
 def _probe_for(emb, vid):
     return (emb.filter(F.col("vec_id") == vid)
             .select(F.lit(-1).alias("query_id"), "embedding"))
-
-
-def test_ann_index_stream_bootstrap_upsert_search(spark, tmp_path):
-    vecs_in = str(tmp_path / "in")
-    idx = str(tmp_path / "idx")
-    ckpt = str(tmp_path / "ckpt")
-
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    first = emb.filter(F.col("vec_id") < 200)
-    _write_drop(first, vecs_in)
-    c1 = run_ann_index_ingest(spark, vecs_in, idx, ckpt, nlist=8)
-    assert c1 == {"indexed": 200, "skipped": 0}
-    assert ivf_delta_epochs(spark, idx) == []  # bootstrap = base
-
-    # drop 2: fresh vectors + a repeat of an indexed id (skipped)
-    second = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 300))
-    repeat = emb.filter(F.col("vec_id") == 5)
-    _write_drop(second.unionByName(repeat), vecs_in)
-    c2 = run_ann_index_ingest(spark, vecs_in, idx, ckpt, nlist=8)
-    assert c2 == {"indexed": 100, "skipped": 1}
-
-    ids = [r.vec_id for r in
-           ivf_index_data(spark, idx).select("vec_id").collect()]
-    assert len(ids) == len(set(ids)) == 300
-
-    # a vector from the delta generation is searchable at rank 1
-    hit = ivf_search_index(spark, idx, _probe_for(emb, 250), k=3,
-                           nprobe=2).collect()
-    assert hit[0].vec_id == 250 and hit[0].cosine > 0.999999
-
-    # exactly-once: a re-run with the same checkpoint ingests nothing
-    c3 = run_ann_index_ingest(spark, vecs_in, idx, ckpt, nlist=8)
-    assert c3 == {"indexed": 0, "skipped": 0}
-    assert ivf_index_data(spark, idx).count() == 300
-
-
-def test_ann_index_stream_compaction_cycle(spark, tmp_path):
-    """Drain several drops, fold the delta generations into a fresh
-    base (the rebootstrap prerequisite), and continue ingesting into
-    the folded index with a FRESH checkpoint — epoch 0 of the new
-    stream must land beside the folded base, never clobber it."""
-    vecs_in = str(tmp_path / "in")
-    idx = str(tmp_path / "idx")
-    ckpt = str(tmp_path / "ckpt")
-
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    for lo, hi in ((0, 150), (150, 250), (250, 350)):
-        _write_drop(emb.filter((F.col("vec_id") >= lo)
-                               & (F.col("vec_id") < hi)), vecs_in)
-        run_ann_index_ingest(spark, vecs_in, idx, ckpt, nlist=8)
-    assert len(ivf_delta_epochs(spark, idx)) == 2
-
-    folded = str(tmp_path / "folded")
-    compact_ivf_index(spark, idx, folded)
-    assert ivf_delta_epochs(spark, folded) == []
-    assert ivf_index_data(spark, folded).count() == 350
-
-    # rebootstrapped stream (fresh checkpoint) over the folded index
-    _write_drop(emb.filter((F.col("vec_id") >= 350)
-                           & (F.col("vec_id") < 400)), vecs_in)
-    c = run_ann_index_ingest(spark, vecs_in, folded,
-                             str(tmp_path / "ckpt2"), nlist=8)
-    # the fresh checkpoint replays ALL drops; already-indexed ids skip
-    assert c == {"indexed": 50, "skipped": 350}
-    ids = [r.vec_id for r in
-           ivf_index_data(spark, folded).select("vec_id").collect()]
-    assert len(ids) == len(set(ids)) == 400
-    hit = ivf_search_index(spark, folded, _probe_for(emb, 399), k=3,
-                           nprobe=2).collect()
-    assert hit[0].vec_id == 399 and hit[0].cosine > 0.999999
 
 
 def test_pointer_maintained_index_cycle(spark, tmp_path):

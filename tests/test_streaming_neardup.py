@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from hackmd_data_pipeline_spark.streaming.neardup import run_neardup_ingest
 from hackmd_data_pipeline_spark.tables import load_table
 
-from .conftest import SF_CORRECT, local_df
+from .conftest import SF_CORRECT
 
 
 def _write_drop(df, path):
@@ -222,162 +222,3 @@ def test_cluster_maintained_ingest_empty_batch_leaves_no_epoch(spark,
     assert got == {"ingested": 0}
     assert not os.path.exists(out_root + "/corpus/epoch=0")
     assert not os.path.exists(str(tmp_path / "store"))
-
-
-def _tok(tag, n):
-    return " ".join(f"{tag}{j}" for j in range(n))
-
-
-def _doc(template, did, text):
-    return (template.withColumn("doc_id", F.lit(did).cast("long"))
-            .withColumn("text", F.lit(text)))
-
-
-def test_span_ingest_stream_drops_verbatim_leaks(spark, tmp_path):
-    """Streaming exact-substring ingest (r09): a doc that mostly
-    verbatim-quotes already-ingested text is dropped at the door
-    (dup_fraction > threshold), cross-epoch quotes are caught against
-    the persisted span store, DROPPED docs never poison the store,
-    short docs pass, repeated ids skip via the bounded id ledger, and
-    the checkpoint makes re-drains no-ops."""
-    from hackmd_data_pipeline_spark.streaming.neardup import run_span_ingest
-
-    docs_in = str(tmp_path / "in")
-    out_root = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    store = str(tmp_path / "spanstore")
-    tpl = (load_table(spark, SF_CORRECT, "documents")
-           .filter(F.col("doc_id") == 0).limit(1))
-
-    A = _tok("a", 30)
-    B = _tok("b", 30)
-    drop1 = _doc(tpl, 1, A).unionByName(_doc(tpl, 2, B))
-    _write_drop(drop1, docs_in)
-    c1 = run_span_ingest(spark, docs_in, out_root, ckpt, store, k=8,
-                         max_dup_fraction=0.5)
-    assert c1 == {"kept": 2, "dropped_dup": 0, "skipped_ids": 0, "skipped_tombstoned": 0}
-
-    a_toks, b_toks = A.split(), B.split()
-    C = " ".join(a_toks[:16] + [f"c{j}" for j in range(14)])   # 16/30 > 0.5
-    D = " ".join(b_toks[:8] + [f"d{j}" for j in range(22)])    # 8/30 <= 0.5
-    E_repeat_id = _doc(tpl, 1, _tok("e", 30))                  # id 1 again
-    S = "one two three"                                        # < k tokens
-    drop2 = (_doc(tpl, 3, C).unionByName(_doc(tpl, 4, D))
-             .unionByName(E_repeat_id)
-             .unionByName(_doc(tpl, 6, _tok("f", 30)))
-             .unionByName(_doc(tpl, 9, S)))
-    _write_drop(drop2, docs_in)
-    c2 = run_span_ingest(spark, docs_in, out_root, ckpt, store, k=8,
-                         max_dup_fraction=0.5)
-    assert c2 == {"kept": 3, "dropped_dup": 1, "skipped_ids": 1, "skipped_tombstoned": 0}
-    corpus_ids = {r.doc_id for r in
-                  spark.read.parquet(out_root + "/corpus")
-                  .select("doc_id").collect()}
-    assert corpus_ids == {1, 2, 4, 6, 9}
-
-    # epoch 3: G quotes F (committed LAST epoch -> caught cross-epoch);
-    # H quotes only the unique tail of the DROPPED doc C -> C's spans
-    # never entered the store, so H is kept
-    G = " ".join(_tok("f", 30).split()[:16] + [f"g{j}" for j in range(14)])
-    H = " ".join([f"c{j}" for j in range(14)] + [f"h{j}" for j in range(16)])
-    _write_drop(_doc(tpl, 7, G).unionByName(_doc(tpl, 8, H)), docs_in)
-    c3 = run_span_ingest(spark, docs_in, out_root, ckpt, store, k=8,
-                         max_dup_fraction=0.5)
-    assert c3 == {"kept": 1, "dropped_dup": 1, "skipped_ids": 0, "skipped_tombstoned": 0}
-    corpus_ids = {r.doc_id for r in
-                  spark.read.parquet(out_root + "/corpus")
-                  .select("doc_id").collect()}
-    assert 8 in corpus_ids and 7 not in corpus_ids
-
-    # checkpointed re-drain: nothing to do
-    c4 = run_span_ingest(spark, docs_in, out_root, ckpt, store, k=8,
-                         max_dup_fraction=0.5)
-    assert c4 == {"kept": 0, "dropped_dup": 0, "skipped_ids": 0, "skipped_tombstoned": 0}
-
-
-def test_span_ingest_store_compacts_with_ledger(spark, tmp_path):
-    """compact_store folds a span-ingest store (spans + docs ledger)
-    into one generation, and the stream continues against the folded
-    store WITHOUT re-admitting already-ingested ids (the ledger
-    survives compaction)."""
-    from hackmd_data_pipeline_spark.operators.dedup_store import (
-        compact_store)
-    from hackmd_data_pipeline_spark.streaming.neardup import run_span_ingest
-
-    docs_in = str(tmp_path / "in")
-    out_root = str(tmp_path / "out")
-    store = str(tmp_path / "spanstore")
-    tpl = (load_table(spark, SF_CORRECT, "documents")
-           .filter(F.col("doc_id") == 0).limit(1))
-    for i, did in enumerate((1, 2)):
-        _write_drop(_doc(tpl, did, _tok(f"t{did}_", 30)), docs_in)
-        run_span_ingest(spark, docs_in, out_root,
-                        str(tmp_path / "ckpt"), store, k=8)
-
-    folded = str(tmp_path / "folded")
-    stats = compact_store(spark, store, folded)
-    assert "spans" in stats and "docs" in stats
-    ledger = spark.read.parquet(folded + "/docs")
-    assert {r.doc_id for r in ledger.select("doc_id").collect()} == {1, 2}
-
-    # fresh checkpoint over the folded store: replayed drops skip via
-    # the compacted ledger; a quoting doc is still caught
-    leak = " ".join(_tok("t1_", 30).split()[:16] + ["z%d" % j
-                                                    for j in range(14)])
-    _write_drop(_doc(tpl, 5, leak), docs_in)
-    c = run_span_ingest(spark, docs_in, out_root + "2",
-                        str(tmp_path / "ckpt2"), folded, k=8,
-                        max_dup_fraction=0.5)
-    assert c == {"kept": 0, "dropped_dup": 1, "skipped_ids": 2, "skipped_tombstoned": 0}
-
-
-def test_span_ingest_deleted_id_policy_across_compaction(spark, tmp_path):
-    """r09 ADVICE: the deleted-id lifecycle is documented and
-    OBSERVABLE — a remove_docs-tombstoned id re-submitted before
-    compaction is skipped (counted as skipped_tombstoned, not folded
-    into the ordinary duplicate-skip count) and its spans stay out of
-    witness duty; after compact_store physically separates the
-    generations, the same id is admissible as a fresh doc."""
-    from hackmd_data_pipeline_spark.operators.dedup_store import (
-        compact_store, remove_docs)
-    from hackmd_data_pipeline_spark.streaming.neardup import run_span_ingest
-
-    docs_in = str(tmp_path / "in")
-    out_root = str(tmp_path / "out")
-    store = str(tmp_path / "spanstore")
-    tpl = (load_table(spark, SF_CORRECT, "documents")
-           .filter(F.col("doc_id") == 0).limit(1))
-
-    _write_drop(_doc(tpl, 1, _tok("a", 30)).unionByName(
-        _doc(tpl, 2, _tok("b", 30))), docs_in)
-    c1 = run_span_ingest(spark, docs_in, out_root,
-                         str(tmp_path / "ckpt"), store, k=8)
-    assert c1["kept"] == 2
-
-    # right-to-be-forgotten on doc 1 (pairless store: tombstone-only)
-    remove_docs(local_df(spark, [(1,)], "id long"), store)
-
-    # re-submission BEFORE compaction: skipped, and visibly so
-    _write_drop(_doc(tpl, 1, _tok("n", 30)), docs_in)
-    c2 = run_span_ingest(spark, docs_in, out_root,
-                         str(tmp_path / "ckpt"), store, k=8)
-    assert c2 == {"kept": 0, "dropped_dup": 0, "skipped_ids": 1,
-                  "skipped_tombstoned": 1}
-
-    # after compaction the ledger row and tombstone are physically
-    # gone: the same id is fresh again
-    folded = str(tmp_path / "folded")
-    compact_store(spark, store, folded)
-    assert {r.doc_id for r in spark.read.parquet(folded + "/docs")
-            .select("doc_id").collect()} == {2}
-    _write_drop(_doc(tpl, 1, _tok("p", 30)), docs_in)
-    c3 = run_span_ingest(spark, docs_in, out_root + "2",
-                         str(tmp_path / "ckpt2"), folded, k=8)
-    # the fresh checkpoint replays all drops: doc 2 skips via the
-    # compacted ledger, the re-used id 1 is ADMITTED as a fresh doc
-    assert c3["skipped_tombstoned"] == 0
-    assert c3["kept"] >= 1
-    kept_ids = {r.doc_id for r in
-                spark.read.parquet(out_root + "2/corpus")
-                .select("doc_id").collect()}
-    assert 1 in kept_ids
